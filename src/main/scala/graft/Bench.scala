@@ -197,12 +197,16 @@ object BenchFormat {
 }
 
 object Bench {
+  /** Core count when SPARK_GRAFT_CPUS is unset (the target environment's
+    * local[32]); a run at this count writes the unsuffixed record. */
+  private val DefaultCpus = "32"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the target environment (local[32]) — benching on a
     // 4-thread session when the env var is absent understates the
     // shuffle-heavy queries ~2.5x (observed in round 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
     // Shuffle scratch on the fastest local storage available
     // (guide §2.1: shuffle file I/O can bind before the network; the
     // r14 ShufProbe measured ~30–80 ms of shuffle-write time PER MAP
@@ -544,7 +548,7 @@ object Bench {
       // overwrote the 32-core per-query record and emptied PERF's
       // scaling block; per-cpus files make the two runs coexist.
       val fullName =
-        if (cpus == "32") "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
+        if (cpus == DefaultCpus) "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
       if (args.isEmpty) {
         val fullPath = java.nio.file.Paths.get(repoRoot, fullName)
         try java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))

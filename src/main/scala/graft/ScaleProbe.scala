@@ -465,16 +465,16 @@ object ScaleProbe {
         time(s"10x ivfTopKBatch ($tag)")(run())
       }
       serve("0% tombstoned")
-      graft.ext.Similarity.ivfIndexDelete(idir.toString,
+      graft.ext.Similarity.IvfFamily.delete(idir.toString,
         corpus.where(graft.ext.Dedup.pmd5(col("vec_id")) % 10 === 0)
           .select(col("vec_id")), "vec_id")
       serve("10% tombstoned")
-      graft.ext.Similarity.ivfIndexDelete(idir.toString,
+      graft.ext.Similarity.IvfFamily.delete(idir.toString,
         corpus.where(graft.ext.Dedup.pmd5(col("vec_id")) % 2 === 0)
           .select(col("vec_id")), "vec_id")
       serve("50% tombstoned")
-      time("10x ivfIndexCompact (50% tombstoned)") {
-        graft.ext.Similarity.ivfIndexCompact(spark, idir.toString); 1L
+      time("10x IvfFamily.compact (50% tombstoned)") {
+        graft.ext.Similarity.IvfFamily.compact(spark, idir.toString); 1L
       }
       serve("post-compaction")
       // minhash probe under tombstone debt (10x docs)
@@ -495,16 +495,16 @@ object ScaleProbe {
         time(s"10x minhashProbeIndex ($tag)")(run())
       }
       mhProbe("0% tombstoned")
-      graft.ext.Dedup.minhashIndexDelete(mdir.toString,
+      graft.ext.Dedup.MinhashFamily.delete(mdir.toString,
         corpusD.where(graft.ext.Dedup.pmd5(col("doc_id")) % 10 === 0)
           .select(col("doc_id")), "doc_id")
       mhProbe("10% tombstoned")
-      graft.ext.Dedup.minhashIndexDelete(mdir.toString,
+      graft.ext.Dedup.MinhashFamily.delete(mdir.toString,
         corpusD.where(graft.ext.Dedup.pmd5(col("doc_id")) % 2 === 0)
           .select(col("doc_id")), "doc_id")
       mhProbe("50% tombstoned")
-      time("10x minhashIndexCompact (50% tombstoned)") {
-        graft.ext.Dedup.minhashIndexCompact(spark, mdir.toString); 1L
+      time("10x MinhashFamily.compact (50% tombstoned)") {
+        graft.ext.Dedup.MinhashFamily.compact(spark, mdir.toString); 1L
       }
       mhProbe("post-compaction")
     } finally dirs.foreach(graft.util.Fs.deleteRecursively)
@@ -597,8 +597,8 @@ object ScaleProbe {
         val idir = java.nio.file.Files.createTempDirectory(s"maint-idx-$r")
         dirs += idir
         graft.ext.Similarity.ivfIndexWrite(idx, idir.toString)
-        time(s"${r}x ivfIndexAppend(batch) [maintenance]") {
-          graft.ext.Similarity.ivfIndexAppend(
+        time(s"${r}x ivfIndexAppendIdempotent(batch) [maintenance]") {
+          graft.ext.Similarity.ivfIndexAppendIdempotent(
             spark, idir.toString, batch, "vec_id", "embedding")
           spark.read.parquet(s"$idir/assigned").count()
         }
@@ -660,8 +660,8 @@ object ScaleProbe {
         graft.ext.Dedup.minhashProbeIndex(
           batchD, "doc_id", "text", mdir.toString).count()
       }
-      time("10x minhashIndexDelete (1/16 of corpus)") {
-        graft.ext.Dedup.minhashIndexDelete(
+      time("10x MinhashFamily.delete (1/16 of corpus)") {
+        graft.ext.Dedup.MinhashFamily.delete(
           mdir.toString,
           corpusD.where(graft.ext.Dedup.pmd5(col("doc_id")) % 16 === 0)
             .select(col("doc_id")),
@@ -672,8 +672,8 @@ object ScaleProbe {
         graft.ext.Dedup.minhashProbeIndex(
           batchD, "doc_id", "text", mdir.toString).count()
       }
-      time("10x minhashIndexCompact") {
-        graft.ext.Dedup.minhashIndexCompact(spark, mdir.toString)
+      time("10x MinhashFamily.compact") {
+        graft.ext.Dedup.MinhashFamily.compact(spark, mdir.toString)
         spark.read.parquet(
           graft.util.Manifest.tablePath(mdir.toString, "buckets")).count()
       }

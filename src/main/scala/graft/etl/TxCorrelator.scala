@@ -487,26 +487,27 @@ object TxCorrelator {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckRoot))
     val ckDir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(ckRoot), "graft-tws-ck")
-    val q =
-      try correlateStreamTws(stream.toDS(), strict = strict)
-        .writeStream.outputMode("append").format("memory")
-        .option("checkpointLocation", ckDir.toString)
-        .queryName(name).start()
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    // the dir goes in its own finally: a start() that throws, or a
+    // stop() that throws, must not leak it
     try {
-      stream.addData(blocks)
-      q.processAllAvailable()
-      // observation hook while the query is still live (the spec reads
-      // lastProgress.stateOperators to pin that the conf reached the
-      // wire — 8 state partitions, not the session's 32)
-      inspect(q)
-    } finally {
-      q.stop()
-      graft.util.Fs.deleteRecursively(ckDir)
-    }
+      val q =
+        try correlateStreamTws(stream.toDS(), strict = strict)
+          .writeStream.outputMode("append").format("memory")
+          .option("checkpointLocation", ckDir.toString)
+          .queryName(name).start()
+        finally saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      try {
+        stream.addData(blocks)
+        q.processAllAvailable()
+        // observation hook while the query is still live (the spec
+        // reads lastProgress.stateOperators to pin that the conf
+        // reached the wire — 8 state partitions, not the session's 32)
+        inspect(q)
+      } finally q.stop()
+    } finally graft.util.Fs.deleteRecursively(ckDir)
     spark.table(name).as[CompletedTx]
   }
 }

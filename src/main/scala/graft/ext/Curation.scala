@@ -349,21 +349,9 @@ object Curation {
     // a missing index artifact fails at stream construction too — a
     // monitor that silently skipped its health stage would read as
     // "index healthy" on the dashboard that watches the report table
-    minhashIndexDir.foreach { d =>
-      require(graft.util.Manifest.tableExists(d, "postings"),
-        s"driftMonitor: no minhash index at $d (expected postings/" +
-          "sizes/buckets from Dedup.minhashIndexWrite)")
-    }
-    ivfIndexDir.foreach { d =>
-      require(graft.util.Manifest.tableExists(d, "centroids"),
-        s"driftMonitor: no IVF index at $d (expected centroids/" +
-          "assigned from Similarity.ivfIndexWrite)")
-    }
-    bandIndexDir.foreach { d =>
-      require(graft.util.Manifest.tableExists(d, "params"),
-        s"driftMonitor: no band index at $d (expected params/" +
-          "buckets from Similarity.signBandIndexWrite)")
-    }
+    minhashIndexDir.foreach(Dedup.MinhashFamily.requireAt(_, "driftMonitor"))
+    ivfIndexDir.foreach(Similarity.IvfFamily.requireAt(_, "driftMonitor"))
+    bandIndexDir.foreach(Similarity.SignBandFamily.requireAt(_, "driftMonitor"))
     // schema-upgrade guard: index_health rows gained family +
     // tombstone columns (and n_lsh became n_approx). Appending the
     // new schema into a reportDir whose old b=<id> partitions carry

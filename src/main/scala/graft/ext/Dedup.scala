@@ -1302,30 +1302,34 @@ object Dedup {
     val sig = minhashBandsAgg(inverted, k, bands)
       .persistRegistered()
     sig.count() // eager: sizes AND buckets read it
-    // routed through Manifest.writeIndex: a REBUILD into a dir that
-    // maintenance already made manifest-managed must publish (a plain
-    // in-place rewrite would be invisible to readers and GC'd), and
-    // the flip retires the old trio + any live sidecar wholesale
-    graft.util.Manifest.writeIndex(
-      corpus.sparkSession, java.nio.file.Paths.get(dir),
-      Seq(
-        "postings" -> { p: java.nio.file.Path =>
-          inverted.write.mode("overwrite").parquet(p.toString)
-        },
-        "sizes" -> { p: java.nio.file.Path =>
-          sig.select(col("id"), col("n")).write.mode("overwrite")
-            .parquet(p.toString)
-        },
-        "buckets" -> { p: java.nio.file.Path =>
-          val buck = explodeBandBuckets(sig, bands)
-          val counts = buck.groupBy("band", "bh")
-            .agg(count(lit(1)).as("bucket_n"))
-          buck.join(counts, Seq("band", "bh"))
-            .write.mode("overwrite").parquet(p.toString)
-        }))
+    MinhashFamily.write(corpus.sparkSession, dir,
+      Map("postings" -> inverted, "sizes" -> sig.select(col("id"), col("n")),
+        "buckets" -> countBuckets(explodeBandBuckets(sig, bands))),
+      Map.empty)
     sig.unpersist(false)
     inverted.unpersist(false)
   }
+
+  /** (band, bh, id) bucket rows with `bucket_n` (re)counted from the
+    * rows themselves — the build's counts, and compaction's recount
+    * over live membership. */
+  private def countBuckets(buckets: DataFrame): DataFrame = {
+    val rows = buckets.drop("bucket_n")
+    rows.join(rows.groupBy("band", "bh").agg(count(lit(1)).as("bucket_n")),
+      Seq("band", "bh"))
+  }
+
+  /** The persisted minhash index family ([[PersistedIndex]]): three
+    * skinny UNPARTITIONED tables — the probe broadcasts the batch onto
+    * whole-table scans, so maintenance is table-scoped — with `sizes`
+    * one row per doc, and compaction recounting `bucket_n` from live
+    * membership (un-staling the skew cap) — so a compacted index is
+    * bit-identical to one freshly built on the surviving corpus
+    * (spec-pinned; the d39 oracle relies on it). */
+  val MinhashFamily: PersistedIndex.Family = PersistedIndex.Family("minhash",
+    Seq(PersistedIndex.Table("postings"), PersistedIndex.Table("sizes"),
+      PersistedIndex.Table("buckets", onCompact = countBuckets)),
+    model = Nil, member = "sizes")
 
   /** Probe a persisted minhash index with an arriving batch — the
     * amortized form of [[minhashPairsAgainstCorpus]] (bit-identical
@@ -1355,10 +1359,10 @@ object Dedup {
     // logical delete: tombstoned docs stop being CANDIDATES, which is
     // all that matters — the postings/sizes scans only ever see
     // candidate ids, so one anti-join covers the whole probe. The
-    // stored bucket_n stays stale until [[minhashIndexCompact]], which
+    // stored bucket_n stays stale until compaction, which
     // is CONSERVATIVE: a bucket that crossed the cap while its
     // tombstones were live stays excluded until compaction.
-    val buckC = Sidecar.applyTo(spark, snap, buckC0)
+    val buckC = PersistedIndex.applyTombstones(spark, snap, buckC0)
     val invB = invertedIndex(batch, idCol, textCol, w)
     val sigB = minhashBandsAgg(invB, k, bands)
       .persistRegistered()
@@ -1412,154 +1416,61 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** LOGICAL delete from a persisted minhash index — tombstone
-    * sidecar, the way dedup-survivor replacement, takedowns and
-    * right-to-be-forgotten land on an immutable-file index at 100 TB:
-    * the id set APPENDS to `dir/tombstones` (no index file is
-    * touched), and [[minhashProbeIndex]] anti-joins the bucket table
-    * against it so a tombstoned doc stops surfacing immediately.
-    * O(|tombstones|) write, O(index) nothing. The physical rewrite is
-    * deferred to [[minhashIndexCompact]] at maintenance cadence. */
-  def minhashIndexDelete(
-      dir: String, tombstones: DataFrame, idCol: String): Unit =
-    Sidecar.append(dir, tombstones, idCol)
-
-  /** PHYSICAL compaction of a tombstoned minhash index: rewrite
-    * postings/sizes/buckets minus the sidecar, recompute `bucket_n`
-    * from live membership (un-staling the skew cap). The THREE table
-    * rewrites and the sidecar retirement publish through ONE
-    * [[graft.util.Manifest]] flip — a concurrent reader resolves
-    * either the complete pre-compact trio (plus the tombstone
-    * anti-join) or the complete post-compact trio, never postings
-    * from the new build with buckets from the old; an interrupted
-    * compact re-runs in full (the old manifest still lists the
-    * sidecar). After compaction the index is bit-identical to one
-    * freshly built on the surviving corpus (spec-pinned — postings,
-    * sizes, bucket membership and counts are all per-document or
-    * derived from live membership). */
-  def minhashIndexCompact(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    Sidecar.read(spark, dir).foreach { t =>
-      val tomb = broadcast(t)
-      def anti(table: String): graft.util.Manifest.TableRewrite =
-        graft.util.Manifest.TableRewrite(table, None,
-          _.join(tomb, Seq("id"), "left_anti"))
-      graft.util.Manifest.publishRewrite(spark,
-        java.nio.file.Paths.get(dir),
-        Seq(anti("postings"), anti("sizes"),
-          graft.util.Manifest.TableRewrite("buckets", None, { b =>
-            val live =
-              b.drop("bucket_n").join(tomb, Seq("id"), "left_anti")
-            live.join(
-              live.groupBy("band", "bh")
-                .agg(count(lit(1)).as("bucket_n")),
-              Seq("band", "bh"))
-          })),
-        drop = Seq("tombstones"))
-    }
-
   /** Append a batch of NEW documents to a persisted minhash index
-    * WITHOUT rebuild — the write-once index becomes maintainable,
-    * completing ingestion parity with the IVF/band families. The
-    * signature pipeline is a pure per-document function (shingles →
-    * minhash bands), so append ≡ fresh-build rows for the appended
-    * docs exactly; `bucket_n` on the appended rows is refreshed to
-    * (existing-in-bucket + batch-in-bucket) via one batch-bucket-
-    * restricted scan, and [[minhashProbeIndex]]'s per-bucket-max cap
-    * reads that newest value (older rows' stored counts stay stale
-    * until [[minhashIndexCompact]] recounts — the documented
-    * staleness contract). IDEMPOTENT and resurrecting like
-    * [[graft.ext.Similarity.ivfIndexAppendIdempotent]]: in-batch
-    * duplicate ids collapse, each table anti-joins the batch against
-    * its own existing ids (a retry heals a partially-appended crash
-    * instead of stranding it), and a re-ingested TOMBSTONED id is
-    * scrubbed + dropped from the sidecar first. Same equal-TEXT retry
-    * precondition as the vector twins: a re-delivered id must carry
-    * identical text — updates go delete → compact/scrub → append. */
+    * WITHOUT rebuild. The signature pipeline is a pure per-document
+    * function (shingles → minhash bands), so append ≡ fresh-build rows
+    * for the appended docs exactly; `bucket_n` on the appended rows is
+    * refreshed to (existing-in-bucket + batch-in-bucket) via one
+    * batch-bucket-restricted scan, and [[minhashProbeIndex]]'s
+    * per-bucket-max cap reads that newest value (older rows' stored
+    * counts stay stale until compaction recounts — the documented
+    * staleness contract). Idempotent and resurrecting through the
+    * shared [[PersistedIndex.Family.append]] step: in-batch duplicate
+    * ids collapse, each table gates the batch against its own existing
+    * ids (a retry heals a partially-appended crash), and a re-ingested
+    * TOMBSTONED id is scrubbed + dropped from the sidecar first. Same
+    * equal-TEXT retry precondition as the vector families. */
   def minhashIndexAppend(
       batch: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int = 64, bands: Int = 16, w: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.dropDuplicates(idCol)
-    val invB = invertedIndex(b, idCol, textCol, w)
+    val invB = invertedIndex(batch.dropDuplicates(idCol), idCol, textCol, w)
     val sigB = minhashBandsAgg(invB, k, bands).persist()
     try {
       sigB.count()
-      val batchIds = sigB.select(col("id")).distinct()
-      Sidecar.read(spark, dir).foreach { t =>
-        val resurrect = t.join(broadcast(batchIds), Seq("id"))
-          .collect().map(_.getLong(0))
-        if (resurrect.nonEmpty) minhashScrub(spark, dir, resurrect)
-      }
-      val snap = graft.util.Manifest.snapshot(dir)
-      def fresh(table: String, rows: DataFrame): DataFrame =
-        rows.join(
-          broadcast(spark.read.parquet(snap.path(table))
-            .join(broadcast(batchIds), Seq("id"))
-            .select(col("id")).distinct()),
-          Seq("id"), "left_anti")
-      fresh("postings", invB)
-        .write.mode("append").parquet(snap.path("postings"))
-      fresh("sizes", sigB.select(col("id"), col("n")))
-        .write.mode("append").parquet(snap.path("sizes"))
       val buck = explodeBandBuckets(sigB, bands)
-      // refreshed totals for the appended rows: one scan of the index
-      // buckets restricted (broadcast) to the batch's own (band, bh)
-      // set — bounded by the batch's bucket spread, never a shuffle
-      // of the index
-      val existingN = spark.read.parquet(snap.path("buckets"))
-        .join(broadcast(buck.select(col("band"), col("bh")).distinct()),
-          Seq("band", "bh"))
-        .groupBy("band", "bh").agg(count(lit(1)).as("_en"))
-      val batchN = buck.groupBy("band", "bh")
-        .agg(count(lit(1)).as("_bn"))
-      fresh("buckets", buck
-        .join(broadcast(batchN), Seq("band", "bh"))
-        .join(broadcast(existingN), Seq("band", "bh"), "left")
-        .withColumn("bucket_n",
-          coalesce(col("_en"), lit(0L)) + col("_bn"))
-        .drop("_en", "_bn"))
-        .write.mode("append").parquet(snap.path("buckets"))
+      MinhashFamily.append(batch.sparkSession, dir,
+        sigB.select(col("id")).distinct(), Map(
+          "postings" -> (_ => invB),
+          "sizes" -> (_ => sigB.select(col("id"), col("n"))),
+          "buckets" -> { existing =>
+            // refreshed totals for the appended rows: one scan of the
+            // index buckets restricted (broadcast) to the batch's own
+            // (band, bh) set — bounded by the batch's bucket spread,
+            // never a shuffle of the index
+            val existingN = existing
+              .join(broadcast(buck.select(col("band"), col("bh")).distinct()),
+                Seq("band", "bh"))
+              .groupBy("band", "bh").agg(count(lit(1)).as("_en"))
+            val batchN = buck.groupBy("band", "bh")
+              .agg(count(lit(1)).as("_bn"))
+            buck
+              .join(broadcast(batchN), Seq("band", "bh"))
+              .join(broadcast(existingN), Seq("band", "bh"), "left")
+              .withColumn("bucket_n",
+                coalesce(col("_en"), lit(0L)) + col("_bn"))
+              .drop("_en", "_bn")
+          }))
     } finally sigB.unpersist()
   }
 
-  /** Resurrection scrub, minhash form: stale rows of `ids` leave all
-    * three tables and the sidecar shrinks, in ONE manifest publish
-    * (the tables are skinny and unpartitioned by design — the probe
-    * broadcasts against whole-table scans — so the scrub is
-    * table-scoped, not partition-scoped). Remaining rows of the
-    * victims' buckets keep their stored counts (overcounts after a
-    * scrub — conservative for the cap, recounted at compaction). */
-  private def minhashScrub(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: Array[Long]): Unit = {
-    import spark.implicits._
-    val idDf = broadcast(ids.toSeq.toDF("id"))
-    def anti(table: String): graft.util.Manifest.TableRewrite =
-      graft.util.Manifest.TableRewrite(table, None,
-        _.join(idDf, Seq("id"), "left_anti"))
-    graft.util.Manifest.publishRewrite(spark,
-      java.nio.file.Paths.get(dir),
-      Seq(anti("postings"), anti("sizes"), anti("buckets"),
-        Sidecar.removeRewrite(idDf)))
-  }
-
-  /** Streaming minhash-index ingestion —
-    * [[graft.ext.Similarity.ivfIndexIngestStream]]'s document twin:
-    * each arriving micro-batch of docs appends through the idempotent
-    * [[minhashIndexAppend]], so sink retries are safe. A missing
-    * index fails at stream construction. */
+  /** Streaming minhash-index ingestion: each arriving micro-batch of
+    * docs appends through the idempotent [[minhashIndexAppend]]. */
   def minhashIndexIngestStream(
       docs: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int = 64, bands: Int = 16, w: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(graft.util.Manifest.tableExists(dir, "postings"),
-      s"minhashIndexIngestStream: no minhash index at $dir (expected " +
-        "postings/sizes/buckets from minhashIndexWrite)")
-    docs.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      minhashIndexAppend(b, idCol, textCol, dir, k, bands, w)
-    }
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    MinhashFamily.ingestStream(docs, dir)(b =>
+      minhashIndexAppend(b, idCol, textCol, dir, k, bands, w))
 
   // ---- SimHash ----------------------------------------------------------
 
@@ -1942,7 +1853,7 @@ object Dedup {
     // suffices: the sizes lookup only ever sees id_b values that
     // produced a shared-postings row.
     val snap = graft.util.Manifest.snapshot(dir)
-    val invC = Sidecar.applyTo(spark, snap,
+    val invC = PersistedIndex.applyTombstones(spark, snap,
       spark.read.parquet(snap.path("postings")))
     val sizesC = spark.read.parquet(snap.path("sizes"))
     // exact cross-side pairs: shared-posting counts per (batch doc,

@@ -551,12 +551,12 @@ object DedupQueries {
       // through ONE shared hook (scratchDir), not a hook per call
       val tmp = scratchDir("graft-mhidx-tomb")
       Dedup.minhashIndexWrite(corpus, "doc_id", "text", tmp.toString)
-      Dedup.minhashIndexDelete(
+      Dedup.MinhashFamily.delete(
         tmp.toString,
         corpus.where(Dedup.pmd5(col("doc_id")) % 8 === 0)
           .select(col("doc_id")),
         "doc_id")
-      Dedup.minhashIndexCompact(s, tmp.toString)
+      Dedup.MinhashFamily.compact(s, tmp.toString)
       Dedup.minhashProbeIndex(
         docs.where(col("doc_id") >= 250), "doc_id", "text", tmp.toString,
         threshold = 0.5)
@@ -1660,7 +1660,7 @@ object DedupQueries {
   private lazy val d19OracleSql: String = minhashProbeSql("id < 250")
 
   /** d39 replay: d19's probe with the corpus side cut to the LIVE
-    * docs — after [[Dedup.minhashIndexCompact]] the index is
+    * docs — after compaction ([[Dedup.MinhashFamily]]) the index is
     * bit-identical to one built on the surviving corpus, so the
     * replay is exactly the d19 text with the tombstone predicate on
     * `bc` (the bucket-cap HAVING recounts live membership, which is

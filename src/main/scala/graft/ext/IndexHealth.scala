@@ -11,10 +11,11 @@ import graft.util.Manifest
   * in the maintenance layer previously measured how much logical-
   * delete debt an index carried or said "compact now". One cheap
   * aggregate per index closes that: row count of the family's
-  * one-row-per-member table (a parquet metadata count — no column
-  * data read), sidecar cardinality, their ratio, and a threshold
-  * recommendation. The default threshold is 10% — at that fraction a
-  * probe's candidate rows are ~10% dead weight scanned-then-dropped,
+  * one-row-per-member rows ([[PersistedIndex.Family.member]] — a
+  * parquet metadata count, no column data read), sidecar
+  * cardinality, their ratio, and a threshold recommendation. The
+  * default threshold is 10% — at that fraction a probe's candidate
+  * rows are ~10% dead weight scanned-then-dropped,
   * and the sidecar broadcast has grown 10% of membership; the
   * tradeoff is priced empirically by `ScaleProbe tomb` (0/10/50%
   * fractions) and recorded in BASELINE.md. Emitted per micro-batch by
@@ -25,11 +26,8 @@ object IndexHealth {
   /** Recommend compaction at ≥10% tombstoned (e6 fraction). */
   val DefaultCompactThresholdE6 = 100000L
 
-  private val primaryTable = Map(
-    "minhash" -> "sizes", // one row per doc
-    "ivf" -> "assigned", // one row per vector
-    "ivfpq" -> "encoded", // one row per vector
-    "band" -> "buckets") // chunks rows per vector
+  private def families = Seq(Dedup.MinhashFamily, Similarity.IvfFamily,
+    Similarity.IvfPqFamily, Similarity.SignBandFamily)
 
   /** One row for one index:
     * (family, live_rows, tombstoned_rows, tombstone_frac_e6,
@@ -40,28 +38,24 @@ object IndexHealth {
       spark: SparkSession, dir: String, family: String,
       thresholdE6: Long = DefaultCompactThresholdE6): DataFrame = {
     import spark.implicits._
-    val table = primaryTable.getOrElse(family,
+    val fam = families.find(_.name == family).getOrElse(
       throw new IllegalArgumentException(
         s"unknown index family '$family' " +
-          s"(expected one of ${primaryTable.keys.toSeq.sorted})"))
+          s"(expected one of ${families.map(_.name).sorted})"))
     // one snapshot: the member count and the sidecar must describe
     // the same index state
     val snap = Manifest.snapshot(dir)
-    val member = spark.read.parquet(snap.path(table))
-    val rows = member.count()
-    val perMember: Long =
-      if (family != "band") 1L
-      else spark.read.parquet(snap.path("params")).head().getInt(1).toLong
-    val total = rows / perMember
+    val member = spark.read.parquet(snap.path(fam.member))
+      .where(fam.memberRows)
+    val total = member.count()
     // tombstoned = sidecar ∩ MEMBERS (one broadcast semi-join on the
     // member scan): raw sidecar cardinality can exceed membership —
     // a takedown pipeline re-sending a delete for an id a compaction
     // already removed appends a non-member id — and would drive
     // live_rows negative / fire the policy on an index with no real
     // debt
-    val tombstoned = Sidecar.read(spark, snap)
-      .map(t => member.join(broadcast(t), Seq("id"), "left_semi")
-        .count() / perMember)
+    val tombstoned = PersistedIndex.tombstonesOf(spark, snap)
+      .map(t => member.join(broadcast(t), Seq("id"), "left_semi").count())
       .getOrElse(0L)
     val fracE6 =
       if (total == 0L) 0L else tombstoned * 1000000L / total

@@ -558,46 +558,29 @@ object Similarity {
           col("id"), col("sig"), col("v")))
   }
 
+  /** The persisted sign-band family ([[PersistedIndex]]): `buckets`
+    * partitioned by (band, bucket), `chunks` rows per member — band 0
+    * holds exactly one, which is what the member count and the append
+    * dup gate scan (an id already present produced the SAME signature,
+    * a pure projection, so its band-0 row sits in one of the batch's
+    * own band-0 buckets) — and the one-row `params` model table. */
+  val SignBandFamily: PersistedIndex.Family = PersistedIndex.Family("band",
+    Seq(PersistedIndex.Table("buckets", Seq("band", "bucket"))),
+    model = Seq("params"), member = "buckets",
+    memberRows = col("band") === 0)
+
   /** Persist / reload the index partitioned by (band, bucket) — the
     * layout that turns a probe's chunk-equality predicate into parquet
     * PARTITION PRUNING (params ride a one-row side table, the
-    * ivfIndexWrite idiom). */
-  /** Align a frame to its write layout's partition columns before a
-    * `partitionBy` write: hash-repartitioning on the partition columns
-    * lands every partition VALUE in exactly one task, so the write
-    * emits one file per partition dir per operation instead of
-    * (input tasks × dirs) tiny files. Guide §6 (small files hurt
-    * twice) applied to the index family — the r14 ProfileQuery probe
-    * measured s34's two appends at 32 input partitions × 16 cells =
-    * up to 512 parquet writer inits + commits EACH (10–23 s of the
-    * query's 25 s; file count, not compute, was the cost). The
-    * shuffle moves only the rows being written (batch- or
-    * rebuild-scale, never the index), and one file per touched cell
-    * per operation is exactly the layout the partition-scoped
-    * compactors expect. */
-  private def partitionAligned(df: DataFrame, cols: String*): DataFrame =
-    df.repartition(cols.map(col): _*)
-
+    * ivfIndexWrite idiom). Ids cast to long: one physical id type for
+    * the persisted layout, shared by the appends. */
   def signBandIndexWrite(index: SignBandIndex, dir: String): Unit = {
     val spark = index.buckets.sparkSession
     import spark.implicits._
-    graft.util.Manifest.writeIndex(spark, java.nio.file.Paths.get(dir),
-      Seq(
-        // id cast to long: one physical id type for the persisted
-        // layout (appends write the same cast — the ivfIndexWrite
-        // contract)
-        "buckets" -> { p: java.nio.file.Path =>
-          partitionAligned(
-            index.buckets.withColumn("id", col("id").cast("long")),
-            "band", "bucket")
-            .write.mode("overwrite")
-            .partitionBy("band", "bucket").parquet(p.toString)
-        },
-        "params" -> { p: java.nio.file.Path =>
-          Seq((index.nPlanes, index.chunks, index.dim))
-            .toDF("n_planes", "chunks", "dim")
-            .coalesce(1).write.mode("overwrite").parquet(p.toString)
-        }))
+    SignBandFamily.write(spark, dir,
+      Map("buckets" -> index.buckets.withColumn("id", col("id").cast("long"))),
+      Map("params" -> Seq((index.nPlanes, index.chunks, index.dim))
+        .toDF("n_planes", "chunks", "dim")))
   }
 
   def signBandIndexRead(
@@ -605,33 +588,20 @@ object Similarity {
     // one snapshot: params + buckets + sidecar from a single state
     val snap = graft.util.Manifest.snapshot(dir)
     val p = spark.read.parquet(snap.path("params")).head()
-    // tombstone sidecar (signBandIndexDelete): logical delete visible
-    // immediately, physical rewrite deferred to compaction
     SignBandIndex(p.getInt(0), p.getInt(1), p.getInt(2),
-      Sidecar.applyTo(spark, snap,
-        spark.read.parquet(snap.path("buckets"))))
+      SignBandFamily.live(spark, snap, "buckets"))
   }
 
-  /** Append to a PERSISTED band index WITHOUT rebuild — the third
-    * index family's maintenance path (minhash and IVF have the same
-    * trio). The signature is a pure per-row projection over the
-    * deterministic hyperplanes (parameterized by the persisted
-    * nPlanes/dim), so append ≡ rebuild EXACTLY — no frozen-model
-    * approximation at all. New files land only under the touched
-    * (band, bucket) partition dirs.
-    *
-    * IDEMPOTENT and resurrecting, like the IVF twin
-    * ([[ivfIndexAppendIdempotent]]): in-batch duplicate ids collapse,
-    * ids already in the index are skipped (a caller/sink retry
-    * appends nothing — checked against ONE pruned scan of band 0,
-    * where every existing id has exactly one row and an equal vector
-    * hashes to the same bucket), and a re-ingested TOMBSTONED id is
-    * scrubbed from its stale rows + the sidecar first, so the
-    * re-ingest actually serves. Same PRECONDITION as the IVF twin: a
-    * re-delivered id must carry a byte-identical vector — a changed
-    * vector hashes to a different band-0 bucket, escapes the pruned
-    * dup gate, and duplicates the id permanently. Updates are not
-    * appends: route them delete → compact/scrub → append. */
+  /** Append to a PERSISTED band index WITHOUT rebuild. The signature
+    * is a pure per-row projection over the deterministic hyperplanes
+    * (parameterized by the persisted nPlanes/dim), so append ≡ rebuild
+    * EXACTLY — no frozen-model approximation at all. New files land
+    * only under the touched (band, bucket) partition dirs. Idempotent
+    * and resurrecting through the shared
+    * [[PersistedIndex.Family.append]] step, whose equal-content
+    * precondition applies: a changed vector hashes to a different
+    * band-0 bucket, escapes the pruned dup gate, and duplicates the id
+    * permanently. */
   def signBandIndexAppend(
       spark: SparkSession, dir: String,
       arriving: DataFrame, idCol: String, vecCol: String): Unit = {
@@ -639,117 +609,23 @@ object Similarity {
     // (band, bucket) file listing per append for three ints
     val p = spark.read
       .parquet(graft.util.Manifest.tablePath(dir, "params")).head()
-    val (nPlanes, chunks, dimV) = (p.getInt(0), p.getInt(1), p.getInt(2))
-    val rows = signBandIndexBuild(
-      arriving.dropDuplicates(idCol), idCol, vecCol, dimV,
-      nPlanes, chunks)
+    val rows = signBandIndexBuild(arriving.dropDuplicates(idCol), idCol,
+      vecCol, p.getInt(2), p.getInt(0), p.getInt(1))
       .buckets.withColumn("id", col("id").cast("long")).persist()
-    try {
-      val batchIds = rows.select(col("id")).distinct()
-      Sidecar.read(spark, dir).foreach { t =>
-        val resurrect = t.join(broadcast(batchIds), Seq("id"))
-          .collect().map(_.getLong(0))
-        if (resurrect.nonEmpty) signBandScrub(spark, dir, resurrect)
-      }
-      // dup gate on band 0 only: an id already present produced the
-      // SAME signature (pure projection), so its band-0 row sits in
-      // one of exactly the batch's own band-0 buckets — one pruned
-      // scan bounded by the batch's bucket spread
-      val b0 = rows.where(col("band") === 0)
-        .select(col("bucket").cast("long")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      val buckPath = graft.util.Manifest.tablePath(dir, "buckets")
-      val dup = spark.read.parquet(buckPath)
-        .where(col("band") === 0 &&
-          col("bucket").isin(b0.map(b => b: Any): _*))
-        .join(broadcast(batchIds), Seq("id"))
-        .select(col("id")).distinct()
-      partitionAligned(rows.join(broadcast(dup), Seq("id"), "left_anti"),
-        "band", "bucket")
-        .write.mode("append").partitionBy("band", "bucket")
-        .parquet(buckPath)
-    } finally rows.unpersist()
+    try SignBandFamily.append(spark, dir, rows.select(col("id")).distinct(),
+      Map("buckets" -> (_ => rows)))
+    finally rows.unpersist()
   }
 
-  /** Streaming band-index ingestion — [[ivfIndexIngestStream]]'s
-    * sign-LSH twin: each arriving micro-batch appends through the
-    * idempotent [[signBandIndexAppend]] (retry-safe; and because the
-    * signature is a pure projection, streamed ingestion ≡ one-shot
-    * append ≡ fresh build exactly). A missing index fails at stream
-    * construction. */
+  /** Streaming band-index ingestion through the idempotent
+    * [[signBandIndexAppend]]; because the signature is a pure
+    * projection, streamed ingestion ≡ one-shot append ≡ fresh build
+    * exactly. */
   def signBandIndexIngestStream(
       vectors: DataFrame, idCol: String, vecCol: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(graft.util.Manifest.tableExists(dir, "params"),
-      s"signBandIndexIngestStream: no band index at $dir (expected " +
-        "params/buckets from signBandIndexWrite)")
-    vectors.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      signBandIndexAppend(b.sparkSession, dir, b, idCol, vecCol)
-    }
-  }
-
-  /** LOGICAL delete from a persisted band index: the shared
-    * [[Sidecar]] discipline — each id occupies `chunks`
-    * (band, bucket) rows, all excluded by the read-time anti-join. */
-  def signBandIndexDelete(
-      dir: String, tombstones: DataFrame, idCol: String): Unit =
-    Sidecar.append(dir, tombstones, idCol)
-
-  /** PHYSICAL compaction, PARTITION-SCOPED like [[ivfIndexCompact]]:
-    * each tombstoned id touches exactly `chunks` (band, bucket)
-    * directories; only those are rewritten into the new index version
-    * (the rest hardlink — untouched bytes), and one
-    * [[graft.util.Manifest]] flip publishes the compacted buckets and
-    * retires the sidecar atomically. */
-  def signBandIndexCompact(
-      spark: SparkSession, dir: String): Unit =
-    Sidecar.read(spark, dir).foreach { t =>
-      val tomb = broadcast(t)
-      // partition-column types are inference-dependent on read (small
-      // bucket values come back int) — cast before collecting
-      val affected = spark.read
-        .parquet(graft.util.Manifest.tablePath(dir, "buckets"))
-        .join(tomb, Seq("id"))
-        .select(col("band").cast("int"), col("bucket").cast("long"))
-        .distinct()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-      val rewrites =
-        if (affected.isEmpty) Nil
-        else Seq(graft.util.Manifest.TableRewrite("buckets",
-          Some(affected.map { case (band, bucket) =>
-            s"band=$band/bucket=$bucket"
-          }.toSeq),
-          _.join(tomb, Seq("id"), "left_anti")))
-      graft.util.Manifest.publishRewrite(spark,
-        java.nio.file.Paths.get(dir), rewrites,
-        drop = Seq("tombstones"))
-    }
-
-  /** The resurrection scrub, band form: remove stale rows of `ids`
-    * from their `chunks` partition dirs and drop them from the
-    * sidecar ([[ivfScrub]]'s twin — one manifest publish covers
-    * both). */
-  private def signBandScrub(
-      spark: SparkSession, dir: String, ids: Array[Long]): Unit = {
-    import spark.implicits._
-    val idDf = broadcast(ids.toSeq.toDF("id"))
-    val affected = spark.read
-      .parquet(graft.util.Manifest.tablePath(dir, "buckets"))
-      .join(idDf, Seq("id"))
-      .select(col("band").cast("int"), col("bucket").cast("long"))
-      .distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    val bucketRewrites =
-      if (affected.isEmpty) Nil
-      else Seq(graft.util.Manifest.TableRewrite("buckets",
-        Some(affected.map { case (band, bucket) =>
-          s"band=$band/bucket=$bucket"
-        }.toSeq),
-        _.join(idDf, Seq("id"), "left_anti")))
-    graft.util.Manifest.publishRewrite(spark,
-      java.nio.file.Paths.get(dir),
-      bucketRewrites :+ Sidecar.removeRewrite(idDf))
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SignBandFamily.ingestStream(vectors, dir)(b =>
+      signBandIndexAppend(b.sparkSession, dir, b, idCol, vecCol))
 
   /** [[annTopK]] through a [[SignBandIndex]]: chunk-equality bucket
     * probe → exact Hamming gate → exact cosine rank. IDENTICAL results
@@ -1215,121 +1091,69 @@ object Similarity {
     IvfIndex(cents, assignFn(base, cents))
   }
 
-  /** ANN top-k through an IVF index: rank only vectors in the `nProbe`
-    * centroid lists nearest the query. */
+  /** The persisted IVF family ([[PersistedIndex]]): `assigned`
+    * partitioned by cell id, one row per member, beside the tiny
+    * `centroids` model table. */
+  val IvfFamily: PersistedIndex.Family = PersistedIndex.Family("ivf",
+    Seq(PersistedIndex.Table("assigned", Seq("c"))),
+    model = Seq("centroids"), member = "assigned")
+
+  private def centroidFrame(
+      spark: SparkSession, cents: Seq[Seq[Double]]): DataFrame = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (v, c) => (c, v) }.toDF("c", "vec")
+  }
+
+  private def centroidsAt(
+      spark: SparkSession, snap: graft.util.Manifest.Snapshot)
+      : Seq[Seq[Double]] =
+    spark.read.parquet(snap.path("centroids")).orderBy("c").collect()
+      .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
+
   /** Persist an IVF index under `dir`: a tiny `centroids` table plus
     * `assigned` PARTITIONED BY cell id — the layout that makes the
     * 100 TB claim literal: [[ivfTopK]]'s cell filter becomes parquet
     * PARTITION PRUNING on the persisted form (PlanSpec-gated), so one
     * query reads ~nProbe/k of the index and the index is never
-    * shuffled or rebuilt per query. */
+    * shuffled or rebuilt per query. Ids cast to long: ONE physical id
+    * type for the persisted layout, whatever the caller's id column
+    * was — the appends write the same cast, so a mixed INT32/INT64
+    * dataset can never arise. */
   def ivfIndexWrite(index: IvfIndex, dir: String): Unit = {
     val spark = index.assigned.sparkSession
-    import spark.implicits._
-    // routed through Manifest.writeIndex: on a dir that maintenance
-    // has already made manifest-managed, a plain in-place rewrite
-    // would be invisible to readers and GC'd — a REBUILD must publish
-    graft.util.Manifest.writeIndex(spark, java.nio.file.Paths.get(dir),
-      Seq(
-        "centroids" -> { p: java.nio.file.Path =>
-          index.centroids.zipWithIndex.map { case (v, c) => (c, v) }
-            .toDF("c", "vec").coalesce(1)
-            .write.mode("overwrite").parquet(p.toString)
-        },
-        // id cast to long: ONE physical id type for the persisted
-        // layout, whatever the caller's id column was — appends
-        // (ivfIndexAppend / the streaming idempotent form) write the
-        // same cast, so a mixed INT32/INT64 dataset can never arise
-        "assigned" -> { p: java.nio.file.Path =>
-          partitionAligned(
-            index.assigned.withColumn("id", col("id").cast("long")), "c")
-            .write.mode("overwrite").partitionBy("c")
-            .parquet(p.toString)
-        }))
+    IvfFamily.write(spark, dir,
+      Map("assigned" ->
+        index.assigned.withColumn("id", col("id").cast("long"))),
+      Map("centroids" -> centroidFrame(spark, index.centroids)))
   }
 
   /** Load a persisted IVF index. Centroid doubles round-trip parquet
     * exactly, so probes/assignments equal the in-memory index's. If a
-    * tombstone sidecar exists ([[ivfIndexDelete]]), the assignment is
-    * served MINUS the tombstones (broadcast anti-join — the logical
-    * delete is visible immediately, before any compaction). */
+    * tombstone sidecar exists, the assignment is served MINUS the
+    * tombstones (broadcast anti-join — the logical delete is visible
+    * immediately, before any compaction). */
   def ivfIndexRead(
       spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex = {
     // ONE manifest snapshot for centroids + assigned + sidecar: the
     // whole read is a single consistent index state even if a
     // maintenance flip lands mid-call
     val snap = graft.util.Manifest.snapshot(dir)
-    val cents = spark.read.parquet(snap.path("centroids"))
-      .orderBy("c").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("vec")))
-      .toSeq
-    IvfIndex(cents,
-      Sidecar.applyTo(spark, snap,
-        spark.read.parquet(snap.path("assigned"))))
+    IvfIndex(centroidsAt(spark, snap), IvfFamily.live(spark, snap, "assigned"))
   }
 
-  /** LOGICAL delete from a PERSISTED IVF index dir — the sidecar
-    * discipline ([[graft.ext.Dedup.minhashIndexDelete]]'s vector
-    * twin): ids append to `dir/tombstones`; no index file is touched;
-    * [[ivfIndexRead]] anti-joins the sidecar so tombstoned vectors
-    * stop surfacing immediately. Physical rewrite deferred to
-    * [[ivfIndexCompact]]. */
-  def ivfIndexDelete(
-      dir: String, tombstones: DataFrame, idCol: String): Unit =
-    Sidecar.append(dir, tombstones, idCol)
-
-  /** PHYSICAL compaction of a tombstoned persisted IVF index —
-    * PARTITION-SCOPED: only the cell directories that actually hold
-    * tombstoned vectors are rewritten into the NEW index version
-    * (every other cell hardlinks — untouched bytes), and ONE
-    * [[graft.util.Manifest]] flip publishes the compacted `assigned`
-    * and retires the sidecar atomically, so a concurrent reader sees
-    * either the full pre-compact state (old assignment + tombstone
-    * anti-join) or the full post-compact state — never a missing
-    * table or a cleared sidecar over uncompacted data. That scoping
-    * is the 100 TB claim made literal: a takedown of a handful of
-    * vectors rewrites a handful of cells, not the index. The
-    * affected-cell set is found with one broadcast-join scan and is
-    * bounded by k (collected — driver-scale by construction). */
-  def ivfIndexCompact(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    Sidecar.read(spark, dir).foreach { t =>
-      val tomb = broadcast(t)
-      val root = java.nio.file.Paths.get(dir)
-      val affected = spark.read
-        .parquet(graft.util.Manifest.tablePath(dir, "assigned"))
-        .join(tomb, Seq("id")).select(col("c")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      val rewrites =
-        if (affected.isEmpty) Nil
-        else Seq(graft.util.Manifest.TableRewrite("assigned",
-          Some(affected.map(c => s"c=$c").toSeq),
-          _.join(tomb, Seq("id"), "left_anti")))
-      graft.util.Manifest.publishRewrite(spark, root, rewrites,
-        drop = Seq("tombstones"))
-    }
-
-  /** [[ivfIndexAppend]] made IDEMPOTENT — the foreachBatch unit: a
-    * retried micro-batch must not double-append its vectors into the
-    * cell lists (plain `mode("append")` would). Discipline: assign
-    * the batch with the frozen centroids, find which of its ids are
-    * ALREADY in the index with one PARTITION-PRUNED scan of the
-    * touched cells (the batch's id set broadcasts onto the scan;
-    * output is bounded by the batch), anti-join them out, append the
-    * remainder. The index is only ever scanned (pruned), never
-    * shuffled; all join sides that move are batch-scale.
-    *
-    * PRECONDITION (shared with [[signBandIndexAppend]]): a
-    * re-delivered id must carry a byte-identical vector. The dup gate
-    * scans only the BATCH's own cells — an id re-ingested with a
-    * CHANGED vector can hash to a different cell, escape the gate,
-    * and become a permanent duplicate id with conflicting rows.
-    * Updates are not appends: route them delete → compact/scrub →
-    * append ([[ivfIndexDelete]] then re-ingest resurrects cleanly). */
+  /** Append to a PERSISTED IVF index without retraining: arriving
+    * vectors are assigned with the FROZEN on-disk centroids (the regime
+    * the build used — append-then-read ≡ in-memory [[ivfAppend]],
+    * spec-pinned) and appended into the cell-partitioned `assigned`,
+    * new files only under the touched cells. IDEMPOTENT and
+    * resurrecting through the shared [[PersistedIndex.Family.append]]
+    * step — the foreachBatch unit — with its equal-vector retry
+    * precondition (a changed vector can land in another cell and
+    * escape the pruned dup gate; updates go delete → compact →
+    * append). */
   def ivfIndexAppendIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       arriving: DataFrame, idCol: String, vecCol: String): Unit = {
-    val idx = ivfIndexRead(spark, dir)
     // in-batch id dedup too: an at-least-once upstream can deliver the
     // same id twice WITHIN one micro-batch — without this both copies
     // survive the against-index anti-join and the duplication becomes
@@ -1342,81 +1166,24 @@ object Similarity {
     // ingestion stream calls this once per micro-batch — registering
     // every batch's plan would leak one frame per batch for the
     // stream's lifetime
-    val assigned = assignWithBuildRegime(base, idx.centroids).persist()
-    try {
-      val cells = assigned.select(col("c")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (cells.nonEmpty) {
-        // resurrection: a batch id that sits in the tombstone sidecar
-        // is being re-ingested after a delete — physically scrub its
-        // stale rows (partition-scoped) and drop it from the sidecar,
-        // then append the fresh row. Without this the dup check (or a
-        // later compaction) silently swallows the re-ingest and the
-        // id stays unservable even though ingestion "succeeded".
-        Sidecar.read(spark, dir).foreach { t =>
-          val resurrect = t
-            .join(broadcast(assigned.select(col("id"))), Seq("id"))
-            .collect().map(_.getLong(0))
-          if (resurrect.nonEmpty) ivfScrub(spark, dir, resurrect)
-        }
-        val asgPath = graft.util.Manifest.tablePath(dir, "assigned")
-        val existing = spark.read.parquet(asgPath)
-          .where(col("c").isin(cells.map(c => c: Any): _*))
-        val dup = existing
-          .join(broadcast(assigned.select(col("id"))), Seq("id"))
-          .select(col("id")).distinct()
-        partitionAligned(
-          assigned.join(broadcast(dup), Seq("id"), "left_anti"), "c")
-          .write.mode("append").partitionBy("c").parquet(asgPath)
-      }
-    } finally assigned.unpersist()
+    val assigned = assignWithBuildRegime(base,
+      centroidsAt(spark, graft.util.Manifest.snapshot(dir))).persist()
+    try IvfFamily.append(spark, dir, assigned.select(col("id")),
+      Map("assigned" -> (_ => assigned)))
+    finally assigned.unpersist()
   }
 
-  /** Physically remove `ids` from the persisted assignment (partition-
-    * scoped rewrite of only the cells that hold them) and drop them
-    * from the tombstone sidecar — the resurrection path of
-    * [[ivfIndexAppendIdempotent]]. ONE manifest publish covers both:
-    * the scrubbed cells and the shrunk sidecar flip together, so a
-    * reader can never pair a scrubbed assignment with the stale
-    * sidecar (which would hide the about-to-be-appended id) or vice
-    * versa. */
-  private def ivfScrub(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: Array[Long]): Unit = {
-    import spark.implicits._
-    val idDf = broadcast(ids.toSeq.toDF("id"))
-    val affected = spark.read
-      .parquet(graft.util.Manifest.tablePath(dir, "assigned"))
-      .join(idDf, Seq("id")).select(col("c")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val cellRewrites =
-      if (affected.isEmpty) Nil
-      else Seq(graft.util.Manifest.TableRewrite("assigned",
-        Some(affected.map(c => s"c=$c").toSeq),
-        _.join(idDf, Seq("id"), "left_anti")))
-    graft.util.Manifest.publishRewrite(spark,
-      java.nio.file.Paths.get(dir),
-      cellRewrites :+ Sidecar.removeRewrite(idDf))
-  }
-
-  /** Streaming index ingestion — the stream side of the maintenance
-    * path: every arriving micro-batch of vectors is appended to the
-    * persisted index under the FROZEN on-disk centroids
+  /** Streaming index ingestion: every arriving micro-batch of vectors
+    * is appended under the FROZEN on-disk centroids
     * ([[ivfIndexAppendIdempotent]] per batch, so sink retries are
     * safe). Recall drift from the frozen codebook is watched by the
-    * s26/s31 audits (and online by the d38-style monitors); retrain
-    * at release cadence replaces the index artifact wholesale. A
-    * missing index fails at stream CONSTRUCTION, not per batch. */
+    * s26/s31 audits (and online by the d38-style monitors); retrain at
+    * release cadence replaces the index artifact wholesale. */
   def ivfIndexIngestStream(
       vectors: DataFrame, idCol: String, vecCol: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(graft.util.Manifest.tableExists(dir, "centroids"),
-      s"ivfIndexIngestStream: no IVF index at $dir (expected " +
-        "centroids/assigned from ivfIndexWrite)")
-    vectors.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      ivfIndexAppendIdempotent(b.sparkSession, dir, b, idCol, vecCol)
-    }
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    IvfFamily.ingestStream(vectors, dir)(b =>
+      ivfIndexAppendIdempotent(b.sparkSession, dir, b, idCol, vecCol))
 
   /** Sampled SELF-recall of an IVF index — the s31 release-audit
     * discipline mounted on the index artifact itself (no external
@@ -1553,16 +1320,8 @@ object Similarity {
       val report = audit("old", oldIdx) ++ audit("new", newIdx)
       graft.util.Manifest.publishTables(spark,
         java.nio.file.Paths.get(dir),
-        Seq(
-          "centroids" -> { dst: java.nio.file.Path =>
-            newIdx.centroids.zipWithIndex.map { case (v, c) => (c, v) }
-              .toDF("c", "vec").coalesce(1)
-              .write.parquet(dst.toString)
-          },
-          "assigned" -> { dst: java.nio.file.Path =>
-            partitionAligned(newAsg, "c")
-              .write.partitionBy("c").parquet(dst.toString)
-          }),
+        IvfFamily.writers(Map("assigned" -> newAsg),
+          Map("centroids" -> centroidFrame(spark, newIdx.centroids))),
         drop = Seq("tombstones"))
       report.toSeq.toDF(
         "side", "n_queries", "n_exact", "n_approx", "n_hits", "recall_e4")
@@ -1631,41 +1390,8 @@ object Similarity {
         broadcast(tombstones.select(col(idCol).as("id")).distinct()),
         Seq("id"), "left_anti"))
 
-  /** [[ivfAppend]] against a PERSISTED index dir ([[ivfIndexWrite]]
-    * layout): arriving vectors are assigned with the frozen on-disk
-    * centroids and APPENDED into the same cell-partitioned parquet —
-    * new files land only under the touched cells' partition
-    * directories, existing files are never rewritten, and a reader's
-    * partition pruning ([[ivfTopKBatch]]'s static cell filter) keeps
-    * working across appends. Append-then-read ≡ in-memory
-    * [[ivfAppend]] (spec-pinned) — INCLUDING for currently-tombstoned
-    * ids: a batch id sitting in the sidecar is resurrected first
-    * (stale rows scrubbed, sidecar entry dropped — [[ivfScrub]]), or
-    * the read-side anti-join would silently swallow the append and a
-    * later compaction would destroy it. NOT idempotent: a retried
-    * batch double-appends — sinks use [[ivfIndexAppendIdempotent]];
-    * the same equal-vector precondition applies (updates go delete →
-    * scrub → append, never straight re-append). */
-  def ivfIndexAppend(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      arriving: DataFrame, idCol: String, vecCol: String): Unit = {
-    val idx = ivfIndexRead(spark, dir)
-    // id cast to long: the PERSISTED layout's id type contract
-    // ([[ivfIndexWrite]] writes the same cast) — appending an INT32
-    // id file into an INT64 dataset would poison later reads
-    val base = arriving.select(
-      col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    Sidecar.read(spark, dir).foreach { t =>
-      val resurrect = t
-        .join(broadcast(base.select(col("id")).distinct()), Seq("id"))
-        .collect().map(_.getLong(0))
-      if (resurrect.nonEmpty) ivfScrub(spark, dir, resurrect)
-    }
-    partitionAligned(assignWithBuildRegime(base, idx.centroids), "c")
-      .write.mode("append").partitionBy("c")
-      .parquet(graft.util.Manifest.tablePath(dir, "assigned"))
-  }
-
+  /** ANN top-k through an IVF index: rank only vectors in the `nProbe`
+    * centroid lists nearest the query. */
   def ivfTopK(
       index: IvfIndex, query: Seq[Float], k: Int,
       nProbe: Int = 4): DataFrame = {
@@ -2103,55 +1829,46 @@ object Similarity {
       vectors.select(col(idCol).as("id"), col(vecCol).as("v")))
   }
 
-  /** ANN top-k through an IVF-PQ index: probe the `nProbe` cells
-    * nearest the query; approximate
-    * `q·v ≈ q·centroid_c + q·r̂ = base_c + Σ_j LUT[j][code_j]`.
-    * The LUT holds the RAW query subvectors' partial dots against the
-    * residual codebooks (m·pqK doubles, built driver-side, shared by
-    * every cell — in the inner-product formulation only the `base_c`
-    * constant is cell-specific; residualizing the query inside the LUT
-    * is the L2-ADC idiom and would score (q−c)·r̂ instead, collapsing a
-    * cell's ordering to a constant when q ≈ c). Shortlist by the
-    * additive score, re-rank the shortlist exactly. */
+  /** The persisted IVF-PQ family ([[PersistedIndex]]): `encoded`
+    * (id, codes, c) — one row per member — and `base` (id, v, c), both
+    * partitioned by cell id so maintenance stays partition-scoped on
+    * both, beside the `centroids`/`codebooks` model tables. */
+  val IvfPqFamily: PersistedIndex.Family = PersistedIndex.Family("ivfpq",
+    Seq(PersistedIndex.Table("encoded", Seq("c")),
+      PersistedIndex.Table("base", Seq("c"))),
+    model = Seq("centroids", "codebooks"), member = "encoded")
+
   /** Persist an IVF-PQ index under `dir` — [[ivfIndexWrite]]'s layout
     * extended with the PQ artifacts: tiny `centroids`/`codebooks`
     * tables, `encoded` PARTITIONED BY cell id (the probe's cell filter
     * prunes partitions; codes are m ints/vector, the 100 TB scan
     * footprint), and `base` (exact re-rank source — in deployment this
     * is the corpus table itself, written here for self-containment),
-    * ALSO partitioned by cell so the maintenance ops (compact/scrub)
-    * stay partition-scoped on both tables. Ids cast to long — the one
-    * physical id type the appends share (the [[ivfIndexWrite]]
-    * contract). */
+    * ALSO partitioned by cell. Ids cast to long — the one physical id
+    * type the appends share (the [[ivfIndexWrite]] contract). */
   def ivfPqIndexWrite(index: IvfPqIndex, dir: String): Unit = {
     val spark = index.encoded.sparkSession
     import spark.implicits._
     val enc = index.encoded.withColumn("id", col("id").cast("long"))
-    graft.util.Manifest.writeIndex(spark, java.nio.file.Paths.get(dir),
-      Seq(
-        "centroids" -> { p: java.nio.file.Path =>
-          index.centroids.zipWithIndex.map { case (v, c) => (c, v) }
-            .toDF("c", "vec").coalesce(1)
-            .write.mode("overwrite").parquet(p.toString)
-        },
-        "codebooks" -> { p: java.nio.file.Path =>
-          (for {
-            (cb, s) <- index.codebooks.zipWithIndex
-            (v, code) <- cb.zipWithIndex
-          } yield (s, code, v)).toDF("sub", "code", "vec").coalesce(1)
-            .write.mode("overwrite").parquet(p.toString)
-        },
-        "encoded" -> { p: java.nio.file.Path =>
-          partitionAligned(enc, "c").write.mode("overwrite")
-            .partitionBy("c").parquet(p.toString)
-        },
-        "base" -> { p: java.nio.file.Path =>
-          partitionAligned(
-            index.base.withColumn("id", col("id").cast("long"))
-              .join(enc.select(col("id"), col("c")), "id"), "c")
-            .write.mode("overwrite").partitionBy("c").parquet(p.toString)
-        }))
+    IvfPqFamily.write(spark, dir,
+      Map("encoded" -> enc,
+        "base" -> index.base.withColumn("id", col("id").cast("long"))
+          .join(enc.select(col("id"), col("c")), "id")),
+      Map("centroids" -> centroidFrame(spark, index.centroids),
+        "codebooks" -> (for {
+          (cb, s) <- index.codebooks.zipWithIndex
+          (v, code) <- cb.zipWithIndex
+        } yield (s, code, v)).toDF("sub", "code", "vec")))
   }
+
+  private def codebooksAt(
+      spark: SparkSession, snap: graft.util.Manifest.Snapshot)
+      : Seq[Seq[Seq[Double]]] =
+    spark.read.parquet(snap.path("codebooks")).collect()
+      .map(r => (r.getInt(r.fieldIndex("sub")), r.getInt(r.fieldIndex("code")),
+        r.getSeq[Double](r.fieldIndex("vec"))))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toSeq }
 
   /** Load a persisted IVF-PQ index; doubles round-trip parquet exactly,
     * so probes, LUTs and re-ranks equal the in-memory index's. */
@@ -2159,22 +1876,9 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqIndex = {
     // one snapshot: the four tables + sidecar from a single state
     val snap = graft.util.Manifest.snapshot(dir)
-    val cents = spark.read.parquet(snap.path("centroids"))
-      .orderBy("c").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
-    val cbRows = spark.read.parquet(snap.path("codebooks")).collect()
-      .map(r => (r.getInt(r.fieldIndex("sub")), r.getInt(r.fieldIndex("code")),
-        r.getSeq[Double](r.fieldIndex("vec"))))
-    val codebooks = cbRows.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toSeq }
-    // base normalizes to the (id, v) case-class contract whether the
-    // dir carries the cell-partitioned layout (current write) or the
-    // legacy unpartitioned one
-    IvfPqIndex(cents, codebooks,
-      Sidecar.applyTo(spark, snap,
-        spark.read.parquet(snap.path("encoded"))),
-      Sidecar.applyTo(spark, snap,
-        spark.read.parquet(snap.path("base"))).select(col("id"), col("v")))
+    IvfPqIndex(centroidsAt(spark, snap), codebooksAt(spark, snap),
+      IvfPqFamily.live(spark, snap, "encoded"),
+      IvfPqFamily.live(spark, snap, "base").select(col("id"), col("v")))
   }
 
   /** PQ codes for a materialized residual column under FROZEN
@@ -2189,156 +1893,61 @@ object Similarity {
       nearestCode(slice(residual, j * subDim + 1, subDim), books(j))): _*)
   }
 
-  /** Append to a PERSISTED IVF-PQ index WITHOUT retraining — closes
-    * the maintenance gap on the one family that scales best (m
-    * bytes/vector scan): the batch is assigned with the FROZEN
-    * on-disk centroids ([[assignWithBuildRegime]] — the identical
-    * regime the build used), residual-encoded under the FROZEN
-    * codebooks (append ≡ rebuild-encode row-for-row under the same
-    * models; spec- and oracle-pinned), and appended into the
-    * cell-partitioned `encoded` and `base` tables — new files land
-    * only under the touched cells, nothing is rewritten. IDEMPOTENT
-    * and resurrecting like [[ivfIndexAppendIdempotent]], with the
-    * same equal-vector retry precondition (updates go delete →
-    * compact/scrub → append). The dup gate runs PER TABLE (encoded
-    * and base each anti-join the batch against their own pruned
-    * cells), so a crash between the two appends heals on retry
-    * instead of stranding a half-appended id. Requires the
-    * cell-partitioned base layout (current [[ivfPqIndexWrite]]);
-    * legacy unpartitioned-base dirs must be rewritten once. */
+  /** Append to a PERSISTED IVF-PQ index WITHOUT retraining: the
+    * batch is assigned with the FROZEN on-disk centroids
+    * ([[assignWithBuildRegime]] — the identical regime the build used),
+    * residual-encoded under the FROZEN codebooks (append ≡
+    * rebuild-encode row-for-row under the same models; spec- and
+    * oracle-pinned), and appended into the cell-partitioned `encoded`
+    * and `base` tables — new files land only under the touched cells.
+    * Idempotent and resurrecting through the shared
+    * [[PersistedIndex.Family.append]] step, whose per-table dup gate
+    * heals a crash between the two appends on retry. */
   def ivfPqIndexAppendIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       arriving: DataFrame, idCol: String, vecCol: String): Unit = {
-    val idx = ivfPqIndexRead(spark, dir)
+    val snap = graft.util.Manifest.snapshot(dir)
+    val cents = centroidsAt(spark, snap)
+    val books = codebooksAt(spark, snap)
     val batch = arriving.select(
       col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .dropDuplicates("id")
-    val assigned = assignWithBuildRegime(batch, idx.centroids).persist()
-    try {
-      val cells = assigned.select(col("c")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (cells.nonEmpty) {
-        require(spark.read
-          .parquet(graft.util.Manifest.snapshot(dir).path("base"))
-          .columns.contains("c"),
-          s"ivfPqIndexAppendIdempotent: $dir has a legacy " +
-            "unpartitioned base — rewrite via ivfPqIndexWrite first")
-        Sidecar.read(spark, dir).foreach { t =>
-          val resurrect = t
-            .join(broadcast(assigned.select(col("id"))), Seq("id"))
-            .collect().map(_.getLong(0))
-          if (resurrect.nonEmpty) ivfPqScrub(spark, dir, resurrect)
-        }
-        val snap = graft.util.Manifest.snapshot(dir)
-        // materialize residuals BEFORE the code argmins (the ivfPqBuild
-        // `resid` discipline): pqCodesExpr references its residual
-        // input m·pqK times (one per candidate-code dot), and with "r"
-        // a live projection the optimizer inlines the k-branch centroid
-        // CASE + zip_with into EVERY reference — measured ~70% of
-        // s34's executor time (the two append writes at 30–40 s task
-        // time for a 1,000-row batch; r14 ProfileQuery). The persisted
-        // frame is |batch|×dim — batch-bounded at any corpus size.
-        val withR = assigned
-          .select(col("id"), col("c"),
-            residualExpr(col("v"), col("c"), idx.centroids).as("r"))
-          .persist()
-        try {
-          val encoded = withR.select(col("id"),
-            pqCodesExpr(col("r"), idx.codebooks).as("codes"), col("c"))
-          def appendFresh(table: String, rows: DataFrame): Unit = {
-            val path = snap.path(table)
-            val dup = spark.read.parquet(path)
-              .where(col("c").isin(cells.map(c => c: Any): _*))
-              .join(broadcast(assigned.select(col("id"))), Seq("id"))
-              .select(col("id")).distinct()
-            partitionAligned(
-              rows.join(broadcast(dup), Seq("id"), "left_anti"), "c")
-              .write.mode("append").partitionBy("c").parquet(path)
-          }
-          appendFresh("encoded", encoded)
-          appendFresh("base", assigned.select(col("id"), col("v"), col("c")))
-        } finally withR.unpersist()
-      }
-    } finally assigned.unpersist()
+    val assigned = assignWithBuildRegime(batch, cents).persist()
+    // materialize residuals BEFORE the code argmins (the ivfPqBuild
+    // `resid` discipline): pqCodesExpr references its residual input
+    // m·pqK times (one per candidate-code dot), and with "r" a live
+    // projection the optimizer inlines the k-branch centroid CASE +
+    // zip_with into EVERY reference — measured ~70% of s34's executor
+    // time (the two append writes at 30–40 s task time for a 1,000-row
+    // batch). The persisted frame is |batch|×dim — batch-bounded at any
+    // corpus size.
+    val withR = assigned.select(col("id"), col("c"),
+      residualExpr(col("v"), col("c"), cents).as("r")).persist()
+    try IvfPqFamily.append(spark, dir, assigned.select(col("id")), Map(
+      "encoded" -> (_ => withR.select(col("id"),
+        pqCodesExpr(col("r"), books).as("codes"), col("c"))),
+      "base" -> (_ => assigned.select(col("id"), col("v"), col("c")))))
+    finally { withR.unpersist(); assigned.unpersist() }
   }
 
-  /** LOGICAL delete from a persisted IVF-PQ index — the shared
-    * [[Sidecar]] discipline; [[ivfPqIndexRead]] serves both `encoded`
-    * and `base` minus the tombstones immediately. */
-  def ivfPqIndexDelete(
-      dir: String, tombstones: DataFrame, idCol: String): Unit =
-    Sidecar.append(dir, tombstones, idCol)
-
-  /** PHYSICAL compaction — partition-scoped on BOTH data tables
-    * (only cells holding tombstoned vectors rewrite; the rest
-    * hardlink into the new version), one manifest flip retiring the
-    * sidecar atomically with the compacted tables. */
-  def ivfPqIndexCompact(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    Sidecar.read(spark, dir).foreach { t =>
-      val tomb = broadcast(t)
-      val snap = graft.util.Manifest.snapshot(dir)
-      val affected = spark.read.parquet(snap.path("encoded"))
-        .join(tomb, Seq("id")).select(col("c")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      // a legacy unpartitioned base (pre-maintenance layout) compacts
-      // whole-table; the current layout stays partition-scoped
-      val basePartitioned =
-        spark.read.parquet(snap.path("base")).columns.contains("c")
-      val rewrites =
-        if (affected.isEmpty) Nil
-        else {
-          val parts = Some(affected.map(c => s"c=$c").toSeq)
-          graft.util.Manifest.TableRewrite("encoded", parts,
-            _.join(tomb, Seq("id"), "left_anti")) ::
-            graft.util.Manifest.TableRewrite("base",
-              if (basePartitioned) parts else None,
-              _.join(tomb, Seq("id"), "left_anti")) :: Nil
-        }
-      graft.util.Manifest.publishRewrite(spark,
-        java.nio.file.Paths.get(dir), rewrites,
-        drop = Seq("tombstones"))
-    }
-
-  /** Resurrection scrub, IVF-PQ form ([[ivfScrub]]'s twin): stale
-    * rows of `ids` leave their cell partitions in `encoded` AND
-    * `base`, and the sidecar shrinks, all in one publish. */
-  private def ivfPqScrub(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: Array[Long]): Unit = {
-    import spark.implicits._
-    val idDf = broadcast(ids.toSeq.toDF("id"))
-    val snap = graft.util.Manifest.snapshot(dir)
-    val affected = spark.read.parquet(snap.path("encoded"))
-      .join(idDf, Seq("id")).select(col("c")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val dataRewrites =
-      if (affected.isEmpty) Nil
-      else {
-        val parts = Some(affected.map(c => s"c=$c").toSeq)
-        Seq("encoded", "base").map(tbl =>
-          graft.util.Manifest.TableRewrite(tbl, parts,
-            _.join(idDf, Seq("id"), "left_anti")))
-      }
-    graft.util.Manifest.publishRewrite(spark,
-      java.nio.file.Paths.get(dir),
-      dataRewrites :+ Sidecar.removeRewrite(idDf))
-  }
-
-  /** Streaming IVF-PQ index ingestion — [[ivfIndexIngestStream]]'s
-    * twin over [[ivfPqIndexAppendIdempotent]] (retry-safe per
-    * micro-batch); a missing index fails at stream construction. */
+  /** Streaming IVF-PQ index ingestion through the idempotent
+    * [[ivfPqIndexAppendIdempotent]] (retry-safe per micro-batch). */
   def ivfPqIndexIngestStream(
       vectors: DataFrame, idCol: String, vecCol: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(graft.util.Manifest.tableExists(dir, "codebooks"),
-      s"ivfPqIndexIngestStream: no IVF-PQ index at $dir (expected " +
-        "centroids/codebooks/encoded/base from ivfPqIndexWrite)")
-    vectors.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      ivfPqIndexAppendIdempotent(b.sparkSession, dir, b, idCol, vecCol)
-    }
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    IvfPqFamily.ingestStream(vectors, dir)(b =>
+      ivfPqIndexAppendIdempotent(b.sparkSession, dir, b, idCol, vecCol))
 
+  /** ANN top-k through an IVF-PQ index: probe the `nProbe` cells
+    * nearest the query; approximate
+    * `q·v ≈ q·centroid_c + q·r̂ = base_c + Σ_j LUT[j][code_j]`.
+    * The LUT holds the RAW query subvectors' partial dots against the
+    * residual codebooks (m·pqK doubles, built driver-side, shared by
+    * every cell — in the inner-product formulation only the `base_c`
+    * constant is cell-specific; residualizing the query inside the LUT
+    * is the L2-ADC idiom and would score (q−c)·r̂ instead, collapsing a
+    * cell's ordering to a constant when q ≈ c). Shortlist by the
+    * additive score, re-rank the shortlist exactly. */
   def ivfPqTopK(
       index: IvfPqIndex, query: Seq[Float], k: Int,
       nProbe: Int = 4, shortlist: Int = 50): DataFrame = {

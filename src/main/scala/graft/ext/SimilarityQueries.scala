@@ -831,10 +831,10 @@ object SimilarityQueries {
     // continuously — the arriving half here is assigned with the
     // FROZEN centroids ([[Similarity.ivfAppend]]; |batch|·k scores,
     // no corpus rescan, and on the persisted layout
-    // ([[Similarity.ivfIndexAppend]]) new files land only under the
-    // touched cells' partition dirs). Serving then runs on the grown
-    // index; `from_appended` pins that post-append vectors ARE
-    // retrieved without any retrain. Oracled end to end: Lloyd
+    // ([[Similarity.ivfIndexAppendIdempotent]]) new files land only
+    // under the touched cells' partition dirs). Serving then runs on
+    // the grown index; `from_appended` pins that post-append vectors
+    // ARE retrieved without any retrain. Oracled end to end: Lloyd
     // replayed on the RESTRICTED training base (the pre-append half),
     // and because frozen-centroid assignment is one expression over
     // both halves, the grown cell lists equal the full-corpus `asg`
@@ -844,11 +844,11 @@ object SimilarityQueries {
       val half = Dedup.pmd5(col("vec_id")) % 2
       val idx = Similarity.ivfBuild(emb.where(half === 0),
         "vec_id", "embedding", dim = Some(64))
-      // maintenance emits a MATERIALIZED index (ivfIndexAppend in
-      // production; the cached twin here): serving from a live
-      // assignment expression would re-evaluate the k-centroid
-      // struct-max inside the serving stage — measured 3.6× slower
-      // (ScaleProbe s33dbg: 6.7 → 1.85 s)
+      // maintenance emits a MATERIALIZED index (the persisted
+      // ivfIndexAppendIdempotent in production; the cached twin
+      // here): serving from a live assignment expression would
+      // re-evaluate the k-centroid struct-max inside the serving
+      // stage — measured 3.6× slower (ScaleProbe s33dbg: 6.7 → 1.85 s)
       val grown0 = Similarity.ivfAppend(
         idx, emb.where(half === 1), "vec_id", "embedding")
       val grown = grown0.copy(assigned = Caches.persisted(grown0.assigned))

@@ -18,9 +18,9 @@ import graft.schema.ActionKind
   * join-derived nullability is conservative, not contractual), primary
   * key and sort key — lives in the per-table [[Layout]] metadata
   * below. DdlParitySpec diffs the generated statements against the
-  * contract in `/root/reference/README.md:115-332` (CREATE TABLE
-  * blocks plus the `alter table actions modify column action` enum
-  * extension), so drift on EITHER side — an ETL schema change, a
+  * reference contract in the test resource `reference_ddl.sql` (CREATE
+  * TABLE blocks plus the `alter table actions modify column action`
+  * enum extension), so drift on EITHER side — an ETL schema change, a
   * metadata edit, or a reference contract update — fails the suite.
   *
   * Type mapping (engine → ClickHouse): BIGINT → UInt64 (heights, gas —

@@ -77,10 +77,11 @@ object Fs {
     * `<name>._swap`/`<name>._old` spellings are collected; recovery
     * itself is [[recoverSwap]]'s crash matrix per stranded source.
     * Cost is one directory walk, memoized per root — callers mount it
-    * at index OPEN (the shared [[graft.ext.Sidecar]] read), not per
-    * probe. Single-writer assumed, like every rewrite here: sweeping
-    * while another process's rewrite is mid-flight would discard its
-    * in-progress swap. */
+    * at index OPEN (the shared tombstone read of
+    * [[graft.ext.PersistedIndex]]), not per probe. Single-writer
+    * assumed, like every rewrite here: sweeping while another
+    * process's rewrite is mid-flight would discard its in-progress
+    * swap. */
   def sweepSwapResidue(root: Path): Unit = {
     val key = root.toAbsolutePath.normalize.toString
     if (!Files.isDirectory(root) || !sweptRoots.add(key)) return

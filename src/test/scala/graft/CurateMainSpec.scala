@@ -180,13 +180,13 @@ class CurateMainSpec extends SparkSpec {
         vecs, "vec_id", "embedding", k = 4, dim = Some(8)),
       ivf)
     // 8/40 tombstoned = 20% — over the 10% policy, the verdict fires
-    graft.ext.Similarity.ivfIndexDelete(
+    graft.ext.Similarity.IvfFamily.delete(
       ivf, (0 until 8).map(_.toLong * 5).toDF("vec_id"), "vec_id")
     // plus deletes for ids that are NOT members (a takedown re-sent
     // after a physical compaction already removed them): the debt
     // metric intersects the sidecar with membership, so these must
     // not inflate the fraction or drive live_rows negative
-    graft.ext.Similarity.ivfIndexDelete(
+    graft.ext.Similarity.IvfFamily.delete(
       ivf, (900 until 904).map(_.toLong).toDF("vec_id"), "vec_id")
     CurateMain.run(spark, Array(
       in, out, "--shards", "2",

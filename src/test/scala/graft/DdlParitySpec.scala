@@ -3,30 +3,29 @@ package graft
 import graft.sink.ClickHouseDdl
 
 /** Schema-drift gate against the reference deployment contract: the
-  * eight CREATE TABLE statements in `/root/reference/README.md`
-  * (§"Create clickhouse table" + §"Clickhouse explorer tables",
-  * including the `alter table actions modify column action` enum
-  * extension) parsed into (column, type) order + PRIMARY KEY/ORDER BY,
-  * diffed column-by-column against what [[ClickHouseDdl]] generates
-  * from the LIVE engine StructTypes. A renamed/reordered/retyped
-  * column in the ETL, a metadata edit in the emitter, or a reference
-  * contract change all fail here with a per-column message.
+  * eight CREATE TABLE statements in the test resource
+  * `reference_ddl.sql` (including the `alter table actions modify
+  * column action` enum extension) parsed into (column, type) order +
+  * PRIMARY KEY/ORDER BY, diffed column-by-column against what
+  * [[ClickHouseDdl]] generates from the LIVE engine StructTypes. A
+  * renamed/reordered/retyped column in the ETL, a metadata edit in the
+  * emitter, or a reference contract change all fail here with a
+  * per-column message.
   */
 class DdlParitySpec extends SparkSpec {
 
   private case class Table(
       cols: Seq[(String, String)], pk: Seq[String], ob: Seq[String])
 
-  /** Parse every CREATE TABLE block of the reference README: column
+  /** Parse every CREATE TABLE block of the reference contract: column
     * lines are `name Type COMMENT '…'` (INDEX lines skipped), the
     * trailer carries PRIMARY KEY and ORDER BY. Applies the `alter
     * table <t> modify column <c> <Type>` lines that follow — the
     * reference evolves the action enum that way. */
   private def parseReference(): Map[String, Table] = {
-    val text = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/README.md")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val src = scala.io.Source.fromResource("reference_ddl.sql")(
+      scala.io.Codec.UTF8)
+    val text = try src.mkString finally src.close()
     val create =
       """(?s)CREATE TABLE (\w+)\s*\((.*?)\)\s*ENGINE\s*=\s*\w+\s*PRIMARY KEY \(([^)]*)\)\s*ORDER BY \(([^)]*)\)""".r
     val colLine = """^\s*(\w+)\s+(.+?)\s+COMMENT\s+'""".r

@@ -77,7 +77,7 @@ class DedupSpec extends SparkSpec {
     val expect = cells(Similarity.ivfDelete(
       idx, victims.toDF("vec_id"), "vec_id"))
     // LOGICAL: sidecar only — read-back already excludes the victims
-    Similarity.ivfIndexDelete(dir, victims.toDF("vec_id"), "vec_id")
+    Similarity.IvfFamily.delete(dir, victims.toDF("vec_id"), "vec_id")
     assert(cells(Similarity.ivfIndexRead(spark, dir)) === expect)
     // which cells hold the victims? everything else must not be touched
     val affected = cells(idx).filter(e => victims.contains(e._1)).map(_._2)
@@ -98,7 +98,7 @@ class DedupSpec extends SparkSpec {
       finally walk.close()
     }
     val before = listing()
-    Similarity.ivfIndexCompact(spark, dir)
+    Similarity.IvfFamily.compact(spark, dir)
     val after = listing()
     // the sidecar retires in the SAME manifest flip as the compacted
     // data (its plain dir may linger until GC grace — the manifest is
@@ -115,7 +115,7 @@ class DedupSpec extends SparkSpec {
     // RESURRECTION: a tombstoned id that is re-ingested (idempotent
     // append) must serve again — stale rows scrubbed, sidecar entry
     // dropped, exactly one live row
-    Similarity.ivfIndexDelete(dir, Seq(30L).toDF("vec_id"), "vec_id")
+    Similarity.IvfFamily.delete(dir, Seq(30L).toDF("vec_id"), "vec_id")
     assert(!cells(Similarity.ivfIndexRead(spark, dir)).exists(_._1 == 30L))
     Similarity.ivfIndexAppendIdempotent(
       spark, dir, df.where(col("vec_id") === 30L), "vec_id", "embedding")
@@ -148,7 +148,7 @@ class DedupSpec extends SparkSpec {
     assert(before.contains((100L, 0L)) && before.contains((206L, 6L)))
     // LOGICAL delete: sidecar only — victims stop surfacing at once
     val victims = Set(0L, 6L)
-    Dedup.minhashIndexDelete(
+    Dedup.MinhashFamily.delete(
       dir, victims.toSeq.toDF("doc_id"), "doc_id")
     val logical = probe(dir)
     assert(logical.keys.forall { case (_, b) => !victims.contains(b) })
@@ -174,7 +174,7 @@ class DedupSpec extends SparkSpec {
         sampleMod = 1).head().toSeq)
     // COMPACT: physical rewrite — sidecar cleared, tables equal the
     // fresh build's (postings/sizes/buckets incl. recounted bucket_n)
-    Dedup.minhashIndexCompact(spark, dir)
+    Dedup.MinhashFamily.compact(spark, dir)
     assert(!graft.util.Manifest.tableExists(dir, "tombstones"))
     assert(probe(dir) === logical)
     def rows(d: String, t: String, cols: Seq[String]): Set[Seq[Any]] =
@@ -228,7 +228,7 @@ class DedupSpec extends SparkSpec {
         .map(t => tableIds(dir, t).length) === counts)
       // RESURRECTION: tombstone doc 0, then re-ingest it — pairs with
       // 0 disappear, then reappear; exactly one sizes row for 0
-      Dedup.minhashIndexDelete(dir, Seq(0L).toDF("doc_id"), "doc_id")
+      Dedup.MinhashFamily.delete(dir, Seq(0L).toDF("doc_id"), "doc_id")
       assert(!probe(dir).keys.exists(_._2 == 0L))
       Dedup.minhashIndexAppend(
         corpus.where(col("doc_id") === 0L), "doc_id", "text", dir)
@@ -284,7 +284,7 @@ class DedupSpec extends SparkSpec {
     for ((id, c) <- buildCodes) assert(grownCodes(id) === c)
     // LOGICAL delete: both tables stop serving at once
     val victims = Seq(5L, 100L)
-    Similarity.ivfPqIndexDelete(dir, victims.toDF("vec_id"), "vec_id")
+    Similarity.IvfPqFamily.delete(dir, victims.toDF("vec_id"), "vec_id")
     val afterDel = Similarity.ivfPqIndexRead(spark, dir)
     assert(ids(afterDel.encoded) === (0L until 120L).toSet -- victims)
     assert(ids(afterDel.base) === (0L until 120L).toSet -- victims)
@@ -310,7 +310,7 @@ class DedupSpec extends SparkSpec {
       .where(col("id").isin(victims: _*))
       .select(col("c")).distinct().collect().map(_.getInt(0)).toSet
     val beforeE = listing("encoded"); val beforeB = listing("base")
-    Similarity.ivfPqIndexCompact(spark, dir)
+    Similarity.IvfPqFamily.compact(spark, dir)
     assert(!graft.util.Manifest.tableExists(dir, "tombstones"))
     val afterE = listing("encoded"); val afterB = listing("base")
     for ((before, after) <- Seq((beforeE, afterE), (beforeB, afterB));
@@ -326,7 +326,7 @@ class DedupSpec extends SparkSpec {
     assert(ids(compacted.base) === (0L until 120L).toSet -- victims)
     // RESURRECTION: tombstone then re-append — exactly one live row
     // in EACH table, sidecar entry gone
-    Similarity.ivfPqIndexDelete(dir, Seq(42L).toDF("vec_id"), "vec_id")
+    Similarity.IvfPqFamily.delete(dir, Seq(42L).toDF("vec_id"), "vec_id")
     Similarity.ivfPqIndexAppendIdempotent(
       spark, dir, df.where(col("vec_id") === 42L), "vec_id", "embedding")
     val res = Similarity.ivfPqIndexRead(spark, dir)
@@ -410,7 +410,7 @@ class DedupSpec extends SparkSpec {
     // and reads back as the in-memory grown index
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfapp").toString
     Similarity.ivfIndexWrite(idx, dir)
-    Similarity.ivfIndexAppend(
+    Similarity.ivfIndexAppendIdempotent(
       spark, dir, df.where(col("vec_id") >= 80), "vec_id", "embedding")
     val disk = Similarity.ivfIndexRead(spark, dir)
     assert(disk.centroids === grown.centroids)
@@ -1954,7 +1954,7 @@ class DedupSpec extends SparkSpec {
         === rows(full))
       // tombstone two ids: logical delete serves immediately
       val victims = Seq(3L, 120L)
-      Similarity.signBandIndexDelete(
+      Similarity.SignBandFamily.delete(
         dir.toString, victims.toDF("vec_id"), "vec_id")
       val logical = Similarity.signBandIndexRead(spark, dir.toString)
       assert(rows(logical) ===
@@ -1986,7 +1986,7 @@ class DedupSpec extends SparkSpec {
         .filter(r => victims.contains(r._1))
         .map(r => s"band=${r._2}/bucket=${r._3}")
       val before = listing()
-      Similarity.signBandIndexCompact(spark, dir.toString)
+      Similarity.SignBandFamily.compact(spark, dir.toString)
       assert(!graft.util.Manifest.tableExists(dir.toString, "tombstones"))
       val after = listing()
       for ((pdir, files) <- before) {
@@ -2000,7 +2000,7 @@ class DedupSpec extends SparkSpec {
       // RESURRECTION: tombstone id 5 (sidecar only), then re-append it
       // — stale rows scrubbed, sidecar entry dropped, exactly `chunks`
       // live rows serve again
-      Similarity.signBandIndexDelete(
+      Similarity.SignBandFamily.delete(
         dir.toString, Seq(5L).toDF("vec_id"), "vec_id")
       assert(!rows(Similarity.signBandIndexRead(spark, dir.toString))
         .exists(_._1 == 5L))

@@ -175,9 +175,9 @@ class ManifestSpec extends SparkSpec {
         // delete → compact (physical) → re-append the same vectors:
         // every intermediate state a reader may catch is one of the
         // two complete snapshots
-        graft.ext.Similarity.ivfIndexDelete(dir,
+        graft.ext.Similarity.IvfFamily.delete(dir,
           batch.toSeq.toDF("vec_id"), "vec_id")
-        graft.ext.Similarity.ivfIndexCompact(spark, dir)
+        graft.ext.Similarity.IvfFamily.compact(spark, dir)
         graft.ext.Similarity.ivfIndexAppendIdempotent(spark, dir,
           df.where(col("vec_id").isin(batch.toSeq: _*)),
           "vec_id", "embedding")
@@ -204,7 +204,7 @@ class ManifestSpec extends SparkSpec {
         df, "vec_id", "embedding", k = 4, dim = Some(dim)),
       dir)
     // live tombstones: the retrained index's membership replaces them
-    graft.ext.Similarity.ivfIndexDelete(
+    graft.ext.Similarity.IvfFamily.delete(
       dir, Seq(11L, 12L).toDF("vec_id"), "vec_id")
     @volatile var stop = false
     @volatile var bad: Option[String] = None
@@ -273,12 +273,12 @@ class ManifestSpec extends SparkSpec {
         vecsOf(30), "vec_id", "embedding", k = 4, dim = Some(dim)),
       dir)
     // maintenance makes the dir manifest-managed
-    graft.ext.Similarity.ivfIndexDelete(
+    graft.ext.Similarity.IvfFamily.delete(
       dir, Seq(7L).toDF("vec_id"), "vec_id")
-    graft.ext.Similarity.ivfIndexCompact(spark, dir)
+    graft.ext.Similarity.IvfFamily.compact(spark, dir)
     assert(Manifest.read(java.nio.file.Paths.get(dir)).isDefined)
     // leave a live sidecar, then REBUILD wholesale on a bigger corpus
-    graft.ext.Similarity.ivfIndexDelete(
+    graft.ext.Similarity.IvfFamily.delete(
       dir, Seq(8L).toDF("vec_id"), "vec_id")
     graft.ext.Similarity.ivfIndexWrite(
       graft.ext.Similarity.ivfBuild(

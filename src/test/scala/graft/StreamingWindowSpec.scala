@@ -250,7 +250,7 @@ class StreamingWindowSpec extends SparkSpec {
     // streamed ingestion == the one-shot batch append
     val oneDir = java.nio.file.Files.createTempDirectory("graft-ivfoneshot")
     graft.ext.Similarity.ivfIndexWrite(idx, oneDir.toString)
-    graft.ext.Similarity.ivfIndexAppend(
+    graft.ext.Similarity.ivfIndexAppendIdempotent(
       spark, oneDir.toString, arriving, "vec_id", "embedding")
     assert(cells(dir.toString) === cells(oneDir.toString))
     // a re-delivered batch appends NOTHING (the foreachBatch retry)
@@ -1033,7 +1033,7 @@ class StreamingWindowSpec extends SparkSpec {
         bandDir.toString)
       // one tombstone in the IVF index: the health row must carry the
       // logical-delete debt and the (not-yet-firing) compaction policy
-      graft.ext.Similarity.ivfIndexDelete(
+      graft.ext.Similarity.IvfFamily.delete(
         ivfDir.toString, Seq(3L).toDF("vec_id"), "vec_id")
       // two files → two micro-batches (maxFilesPerTrigger = 1)
       val lo = arriving.where(col("doc_id") < 300)

@@ -165,4 +165,36 @@ class TwsCorrelatorSpec extends SparkSpec {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
       .isEmpty, "changelog conf leaked into the caller's session")
   }
+
+  test("pack vehicle (correlateBatchTws) deletes its checkpoint dir when " +
+    "the query fails to start or fails while running") {
+    val ckRoot = java.nio.file.Paths.get(
+      spark.sparkContext.getConf.getOption("spark.local.dir")
+        .map(_.split(",")(0))
+        .getOrElse(System.getProperty("java.io.tmpdir")))
+    def ckDirs(): Set[String] =
+      if (!java.nio.file.Files.isDirectory(ckRoot)) Set.empty
+      else {
+        val s = java.nio.file.Files.list(ckRoot)
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("graft-tws-ck")).toSet
+        } finally s.close()
+      }
+    val before = ckDirs()
+    // fails inside the run, after start(): the inspect hook throws
+    intercept[IllegalStateException] {
+      TxCorrelator.correlateBatchTws(spark, BlockFixtures.blocks(2),
+        inspect = _ => throw new IllegalStateException("injected"))
+    }
+    assert(ckDirs() === before, "run failure leaked a checkpoint dir")
+    // fails inside start(): the checkpoint file manager cannot load
+    val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
+    spark.conf.set(fmKey, "graft.NoSuchCheckpointFileManager")
+    try intercept[Exception] {
+      TxCorrelator.correlateBatchTws(spark, BlockFixtures.blocks(2))
+    } finally spark.conf.unset(fmKey)
+    assert(ckDirs() === before, "start failure leaked a checkpoint dir")
+  }
 }
