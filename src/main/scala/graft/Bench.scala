@@ -209,9 +209,9 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
     // Shuffle scratch on the fastest local storage available
     // (guide §2.1: shuffle file I/O can bind before the network; the
-    // r14 ShufProbe measured ~30–80 ms of shuffle-write time PER MAP
-    // TASK on this host's ext4 /tmp regardless of bytes — pure file
-    // metadata latency — and ~half that on tmpfs). Parameterized:
+    // r14 measured ~30–80 ms of shuffle-write time PER MAP TASK on the
+    // bench host's ext4 /tmp regardless of bytes — pure file metadata
+    // latency — and ~half that on tmpfs). Parameterized:
     // SPARK_GRAFT_LOCAL_DIR overrides; default prefers /dev/shm when
     // it exists (Linux tmpfs — RAM-backed, fine for this pack's
     // MB-scale shuffles), else Spark's own default. Production sizing

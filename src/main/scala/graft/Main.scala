@@ -33,7 +33,7 @@ object Main {
   private val usage =
     """usage:
       |  graft.Main actions      <blocksJsonDir> <outDir> [--follow] [--native] [--skip-commit]
-      |  graft.Main transactions <blocksJsonDir> <outDir> [--follow] [--from HEIGHT] [--native] [--skip-commit] [--no-tws]
+      |  graft.Main transactions <blocksJsonDir> <outDir> [--follow] [--from HEIGHT] [--native] [--skip-commit]
       |  graft.Main backfill     <blocksJsonDir> <outDir>
       |
       |--native reads through the height-offset block source (expects a
@@ -43,11 +43,25 @@ object Main {
       |reference's skip-commit smoke mode): every transform executes and
       |progress logs fire, no table/quarantine file is written, and the
       |stream checkpoint goes to an ephemeral temp dir so a dry run can
-      |never advance the offsets a later real run resumes from.
-      |--no-tws runs the correlator on the legacy flatMapGroupsWithState
-      |operator instead of transformWithState (the default) — use it to
-      |resume a checkpoint written before the transformWithState wire;
-      |the two operators' checkpoints are not interchangeable.""".stripMargin
+      |never advance the offsets a later real run resumes from.""".stripMargin
+
+  private val flags = Set("--follow", "--native", "--skip-commit")
+
+  /** The flags after `<mode> <in> <out>`, and the `--from` height. Any
+    * other argument is a usage error: a typo'd flag must not silently
+    * run a different daemon (`--folow` would drain and exit). */
+  private def parseFlags(
+      rest: List[String], seen: Set[String] = Set.empty,
+      from: Option[Long] = None): (Set[String], Option[Long]) =
+    rest match {
+      case Nil => (seen, from)
+      case "--from" :: h :: tail => parseFlags(tail, seen, Some(h.toLong))
+      case "--from" :: Nil =>
+        throw new IllegalArgumentException("--from needs a height")
+      case f :: tail if flags(f) => parseFlags(tail, seen + f, from)
+      case other :: _ =>
+        throw new IllegalArgumentException(s"unknown argument: $other")
+    }
 
   def main(args: Array[String]): Unit = {
     if (args.length < 3) { System.err.println(usage); sys.exit(2) }
@@ -71,18 +85,12 @@ object Main {
     * lifecycle so the smoke spec can drive the CLI end-to-end). */
   private[graft] def run(args: Array[String], spark: SparkSession): Unit = {
     val Array(mode, inDir, outDir) = args.take(3)
-    val follow = args.contains("--follow")
-    val fromIdx = args.indexOf("--from")
-    val explicitFrom =
-      if (fromIdx >= 0 && fromIdx + 1 < args.length)
-        Some(args(fromIdx + 1).toLong)
-      else None
+    val (present, explicitFrom) = parseFlags(args.drop(3).toList)
     val trigger: Trigger =
-      if (follow) Trigger.ProcessingTime("2 seconds")
+      if (present("--follow")) Trigger.ProcessingTime("2 seconds")
       else Trigger.AvailableNow()
-    val native = args.contains("--native")
-    val tws = !args.contains("--no-tws")
-    val skipCommit = args.contains("--skip-commit")
+    val native = present("--native")
+    val skipCommit = present("--skip-commit")
     // dry runs checkpoint to a throwaway dir: reusing the real
     // checkpoint would record source offsets for blocks whose output
     // was never committed — a later live run would silently skip them.
@@ -112,7 +120,7 @@ object Main {
           BlockStream.runTransactionsPipeline(
             spark, inDir, outDir, checkpoint("transactions"),
             trigger, startHeight = start, nativeSource = native,
-            skipCommit = skipCommit, tws = tws))
+            skipCommit = skipCommit))
       case "backfill" =>
         val cut = BlockStream.runBackfill(spark, inDir, outDir)
         println(s"[graft] backfill done; replay cut = $cut")

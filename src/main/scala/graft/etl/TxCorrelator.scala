@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor}
 import graft.schema._
 
 /** "transactions" mode stateful correlator (J1–J10,
@@ -14,15 +14,15 @@ import graft.schema._
   *
   * Architecture (SURVEY.md §7.4-2 option (a)): the correlation logic is
   * a pure function `processBlock(state, block) → (state', completed)`
-  * run under ONE Structured Streaming key via flatMapGroupsWithState —
-  * the operator is Spark's, the state store persists/recovers the
-  * cache, and ordering is guaranteed by sorting each micro-batch by
-  * height. A single key serializes ingest (the reference is equally
-  * single-threaded here, src/main.rs:155-175); the heavy downstream
-  * work — JSON fan-out to 5 tables — is distributed DataFrame code
-  * (TxFanout). Scaling ingest beyond one core means an iterative-join
-  * formulation; documented as the known divergence point, not built
-  * until profiling demands it.
+  * run under ONE Structured Streaming key via transformWithState
+  * ([[correlateStreamTws]]) — the operator is Spark's, the state store
+  * persists/recovers the cache, and ordering is guaranteed by sorting
+  * each micro-batch by height. A single key serializes ingest (the
+  * reference is equally single-threaded here, src/main.rs:155-175);
+  * the heavy downstream work — JSON fan-out to 5 tables — is
+  * distributed DataFrame code (TxFanout). Scaling ingest beyond one
+  * core means an iterative-join formulation; documented as the known
+  * divergence point, not built until profiling demands it.
   */
 object TxCorrelator {
 
@@ -187,7 +187,6 @@ object TxCorrelator {
   }
 
   implicit val completedEncoder: Encoder[CompletedTx] = Encoders.product[CompletedTx]
-  private implicit val stateEncoder: Encoder[CacheState] = Encoders.product[CacheState]
 
   private def runOrdered(
       st0: CacheState, blocks: Iterator[BlockWithTxHashes], strict: Boolean)
@@ -228,34 +227,6 @@ object TxCorrelator {
       }
   }
 
-  /** Streaming correlation: keyed stateful operator; the cache lives in
-    * the state store (checkpoint-recovered — replaces the reference's
-    * 1000-block rewind S4). Micro-batches are sorted by height inside
-    * the group; cross-batch order is the source's contract (S1).
-    *
-    * MEMORY CONTRACT: the single stateful task materializes each
-    * micro-batch once to sort it (streaming forbids a plan-level sort
-    * before a stateful operator). The batch size is therefore bounded at
-    * the SOURCE — `readBlockStream(maxFilesPerTrigger = …)` caps blocks
-    * per trigger (default 100; one block document per file). A backfill
-    * of on-disk history should use [[graft.stream.BlockStream.runBackfill]]
-    * (distributed, no single-task funnel) rather than raising the cap. */
-  def correlateStream(
-      blocks: Dataset[BlockWithTxHashes], strict: Boolean = false)
-      : Dataset[CompletedTx] = {
-    import blocks.sparkSession.implicits._
-    blocks
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, iter: Iterator[BlockWithTxHashes], gs: GroupState[CacheState]) =>
-          val (st2, out) = runOrdered(
-            gs.getOption.getOrElse(emptyState), iter, strict)
-          gs.update(st2)
-          out.iterator
-      }
-  }
-
   /** Cursor half of the cache: chain position (J9/W4). Kept as its own
     * ValueState so the maps can live in MapState variables. */
   final case class CorrelatorCursor(
@@ -275,8 +246,8 @@ object TxCorrelator {
     *    TOUCHED: `handleInputRows` diff-applies the state delta
     *    (removeKey for consumed receipts, updateValue for new/changed
     *    ones), so a batch resolving 10 receipts against a
-    *    100 000-entry pending cache writes ~10 RocksDB keys where the
-    *    flatMapGroupsWithState path re-serializes the whole CacheState
+    *    100 000-entry pending cache writes ~10 RocksDB keys where a
+    *    single serialized CacheState blob would be rewritten whole
     *    every trigger.
     *  - TTL (`stateTtl`) expires INDIVIDUAL stuck entries — a receipt
     *    whose transaction never resolves ages out of `receipt_to_tx`
@@ -384,12 +355,22 @@ object TxCorrelator {
     }
   }
 
-  /** [[correlateStream]] on the `transformWithState` operator. Same
-    * contract (Append output, micro-batches sorted by height inside
-    * the group, batch size bounded at the source); adds optional
-    * per-entry state TTL (processor-implemented — see
+  /** Streaming correlation: keyed stateful operator on
+    * `transformWithState`; the cache lives in the state store
+    * (checkpoint-recovered — replaces the reference's 1000-block
+    * rewind S4). Append output; micro-batches are sorted by height
+    * inside the group; cross-batch order is the source's contract
+    * (S1). Optional per-entry state TTL is processor-implemented — see
     * [[CorrelatorProcessor]] for why not `TTLConfig`; the operator
-    * stays in `TimeMode.None` either way).
+    * stays in `TimeMode.None` either way.
+    *
+    * MEMORY CONTRACT: the single stateful task materializes each
+    * micro-batch once to sort it (streaming forbids a plan-level sort
+    * before a stateful operator). The batch size is therefore bounded at
+    * the SOURCE — `readBlockStream(maxFilesPerTrigger = …)` caps blocks
+    * per trigger (default 100; one block document per file). A backfill
+    * of on-disk history should use [[graft.stream.BlockStream.runBackfill]]
+    * (distributed, no single-task funnel) rather than raising the cap.
     *
     * Requires the RocksDB state store provider
     * (`spark.sql.streaming.stateStore.providerClass`). */
@@ -431,7 +412,7 @@ object TxCorrelator {
     * `transformWithState` prerequisite); the conf is read per streaming
     * query at start, and the HDFS-backed default can't run the v2
     * stateful operator at all, so overriding session-wide is safe —
-    * stateless queries ignore it and fmgws works on either provider. */
+    * stateless queries ignore it. */
   def ensureRocksDb(spark: SparkSession): Unit =
     if (!spark.conf.getOption(ProviderKey).contains(RocksDbProvider))
       spark.conf.set(ProviderKey, RocksDbProvider)

@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * explodes, sketch frames) that the RETURNED lazy DataFrame still
   * reads, so an in-operator unpersist would fire before the caller's
   * action and silently re-derive the frame per consumer. The harnesses
-  * (`graft.Verify` / `graft.Bench` / `graft.ScaleProbe`) run
+  * (`graft.Verify` / `graft.Bench`) run
   * `spark.catalog.clearCache()` between queries, but a long-lived
   * interactive session that also persists ITS OWN frames can't use
   * that hammer. [[persisted]] registers each internal persist here

@@ -204,9 +204,13 @@ object Classifier {
     * Returns the scored frame of [[scoreDocs]]. The feature frame is
     * built ONCE and shared by the training rounds and the scoring
     * pass (one corpus tokenize+hash+count instead of two); it stays
-    * persisted because the RETURNED frame reads it — released by the
-    * harness' per-query [[Caches.release]], the registered-cache
-    * convention. */
+    * persisted because the RETURNED frame reads it.
+    *
+    * CALLER OBLIGATION: the feature frame is registered with
+    * [[Caches]], not unpersisted here. A library caller must call
+    * [[Caches.release]] once the returned frame has been consumed, or
+    * every call leaves one persisted corpus behind (the Verify/Bench
+    * harnesses do this per query). */
   def perceptronFilter(
       docs: DataFrame, idCol: String, textCol: String, labelPred: Column,
       buckets: Int = 4096, iters: Int = 3): DataFrame = {
@@ -353,8 +357,11 @@ object Classifier {
     * the c4 composition, sharing ONE persisted feature frame between
     * the training rounds and the prediction margins (previously two
     * full featurize passes). The frame stays persisted because the
-    * returned prediction reads it (released by the harness'
-    * per-query [[Caches.release]]). */
+    * returned prediction reads it.
+    *
+    * CALLER OBLIGATION: as with [[perceptronFilter]], a library caller
+    * must call [[Caches.release]] once the returned frame has been
+    * consumed (the Verify/Bench harnesses do this per query). */
   def trainPredictOvR(
       docs: DataFrame, idCol: String, textCol: String, classCol: String,
       buckets: Int = 4096, iters: Int = 3): DataFrame = {

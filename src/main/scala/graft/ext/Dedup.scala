@@ -37,7 +37,7 @@ import org.apache.spark.storage.StorageLevel
   * release operator-internal caches between corpora with
   * [[Caches.release]] (internal persists register there), or run the
   * blunter `spark.catalog.clearCache()` exactly as the `graft.Verify` /
-  * `graft.Bench` / `graft.ScaleProbe` drivers do after every query
+  * `graft.Bench` drivers do after every query
   * (this covers minhash, winnow, and cosine-LSH frames alike).
   */
 object Dedup {

@@ -1624,7 +1624,7 @@ object Similarity {
     * element_at reads (no vector arithmetic in the scan), shortlist by
     * approximate dot, re-rank the shortlist exactly.
     *
-    * SIZING `shortlist` (the round-8 ScaleProbe ann lesson,
+    * SIZING `shortlist` (the round-8 ANN scale-probe lesson,
     * BASELINE.md): near-duplicate vectors share PQ codes and therefore
     * TIE on the ADC score, so when quantization error ranks some other
     * duplicate clique above the true one, that whole clique floods a

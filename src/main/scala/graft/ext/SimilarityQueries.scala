@@ -848,7 +848,8 @@ object SimilarityQueries {
       // ivfIndexAppendIdempotent in production; the cached twin
       // here): serving from a live assignment expression would
       // re-evaluate the k-centroid struct-max inside the serving
-      // stage — measured 3.6× slower (ScaleProbe s33dbg: 6.7 → 1.85 s)
+      // stage — measured 3.6× slower (6.7 vs 1.85 s, BASELINE.md
+      // "Round-13 session 2: serve maintained indexes MATERIALIZED")
       val grown0 = Similarity.ivfAppend(
         idx, emb.where(half === 1), "vec_id", "embedding")
       val grown = grown0.copy(assigned = Caches.persisted(grown0.assigned))

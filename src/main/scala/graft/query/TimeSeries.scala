@@ -77,7 +77,8 @@ object TimeSeries {
     // persisted + eager: FOUR consumers (small passthrough, ends,
     // interior buckets, first/last edges) would otherwise each re-sort
     // the corpus through the rank window (the d5 recompute shape —
-    // ScaleProbe measured it dominating the operator). Skinny frame
+    // plan overhead dominated the operator at 10×, BASELINE.md "Scale
+    // probe (round 5)": lttb near-flat 14.1 → 17.1 s). Skinny frame
     // (key, x, y, rn, n); caller-cleared per the Dedup convention.
     val ranked = points
       .select(col(keyCol), col(xCol), col(yCol))

@@ -233,6 +233,10 @@ object BlockStream {
       .start()
   }
 
+  /** Sink writes in flight per micro-batch (click.rs
+    * MAX_COMMIT_HANDLERS). */
+  private val MaxCommitHandlers = 3
+
   /** Fan-out writes of one completed-tx set to the 4 tx tables — shared
     * by the streaming micro-batch sink and the batch backfill. The
     * transactions table is written LAST so its cursor only advances once
@@ -261,19 +265,9 @@ object BlockStream {
     * concurrently (3 in-flight handlers — the reference's
     * MAX_COMMIT_HANDLERS exactly) and writes `transactions` last,
     * sequentially, exactly like the pre-pool code. */
-  /** Probe-only door into [[writeTxTables]] (ThroughputProbe measures
-    * the sequential-vs-pooled fan-out; the pipeline itself always
-    * calls the private method). */
-  private[graft] def writeTxTablesForProbe(
-      txs: Dataset[TxCorrelator.CompletedTx], outDir: String,
-      bucketStep: Long, maxCommitHandlers: Int): Unit =
-    writeTxTables(txs, outDir, bucketStep,
-      maxCommitHandlers = maxCommitHandlers)
-
   private def writeTxTables(
       txs: Dataset[TxCorrelator.CompletedTx], outDir: String,
-      bucketStep: Long, skipCommit: Boolean = false,
-      maxCommitHandlers: Int = 3): Unit = {
+      bucketStep: Long, skipCommit: Boolean = false): Unit = {
     val writes: Seq[(String, () => Unit)] = Seq(
       ("account_txs", () =>
         commit(skipCommit, "account_txs", TxFanout.accountTxs(txs)) { out =>
@@ -314,10 +308,10 @@ object BlockStream {
           }
         }))
     val (cursorTable, siblings) = (writes.last, writes.init)
-    if (skipCommit || maxCommitHandlers <= 1) writes.foreach(_._2())
+    if (skipCommit) writes.foreach(_._2())
     else {
       val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(maxCommitHandlers)
+        .newFixedThreadPool(MaxCommitHandlers)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try {
@@ -347,47 +341,35 @@ object BlockStream {
     * txs completed pre-cut; re-emitted completions are dropped by the
     * sink cursor).
     *
-    * `tws` (default ON) runs the correlator on `transformWithState`
-    * (SURVEY §2.4 first choice — per-entry state writes, optional
-    * per-entry TTL) and forces the RocksDB state store provider it
-    * requires; `tws = false` (`--no-tws`) falls back to the
-    * flatMapGroupsWithState operator. The two operators' checkpoints
-    * are NOT interchangeable — resume a pre-round-8 checkpoint with
-    * `tws = false`, or start a fresh checkpoint dir to migrate.
-    *
-    * `stateConf` (default [[ProductionStateConf]]) is applied to a
-    * CLONED SparkSession so the caller's session is untouched; pass
-    * `Map.empty` to run on the caller's exact conf (the pre-round-12
-    * behavior). Conf-vs-checkpoint safety: Spark persists
-    * `shuffle.partitions` in the offset log and REPINS it on resume,
-    * so an existing 32-partition checkpoint keeps 32 regardless of
-    * this map — the pinned value only shapes NEW checkpoints. */
+    * The correlator runs on `transformWithState` (SURVEY §2.4 first
+    * choice — per-entry state writes, optional per-entry TTL), which
+    * requires the RocksDB state store provider; the stream runs on a
+    * CLONED SparkSession carrying [[ProductionStateConf]] so the
+    * caller's session is untouched. Conf-vs-checkpoint safety: Spark
+    * persists `shuffle.partitions` in the offset log and REPINS it on
+    * resume, so an existing 32-partition checkpoint keeps 32
+    * regardless of the conf — the pinned value only shapes NEW
+    * checkpoints. */
   def runTransactionsPipeline(
       spark: SparkSession, inDir: String, outDir: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
       bucketStep: Long = 1000L, startHeight: Long = Long.MinValue,
       nativeSource: Boolean = false,
       skipCommit: Boolean = false,
-      tws: Boolean = true,
-      stateTtl: Option[java.time.Duration] = None,
-      stateConf: Map[String, String] = ProductionStateConf): StreamingQuery = {
-    val session =
-      if (stateConf.isEmpty) spark
-      else {
-        // newSession: shared SparkContext + catalog cache, OWN SQLConf —
-        // the stream's state knobs must not leak into the caller's
-        // batch queries (shuffle.partitions above all)
-        val s = spark.newSession()
-        stateConf.foreach { case (k, v) => s.conf.set(k, v) }
-        // StreamingQueryListener events are delivered per-session
-        // StreamingQueryManager: a listener the caller attached to the
-        // parent session (Main's ProgressListener — the A6 progress
-        // parity with the reference's transactions.rs logging) would
-        // silently stop seeing THIS query's progress. Mirror the
-        // parent's listeners onto the clone so callers stay untouched.
-        spark.streams.listListeners.foreach(s.streams.addListener)
-        s
-      }
+      stateTtl: Option[java.time.Duration] = None): StreamingQuery = {
+    // newSession: shared SparkContext + catalog cache, OWN SQLConf —
+    // the stream's state knobs must not leak into the caller's batch
+    // queries (shuffle.partitions above all)
+    val session = spark.newSession()
+    ProductionStateConf.foreach { case (k, v) => session.conf.set(k, v) }
+    // StreamingQueryListener events are delivered per-session
+    // StreamingQueryManager: a listener the caller attached to the
+    // parent session (Main's ProgressListener — the A6 progress parity
+    // with the reference's transactions.rs logging) would silently stop
+    // seeing THIS query's progress. Mirror the parent's listeners onto
+    // the clone so callers stay untouched.
+    spark.streams.listListeners.foreach(session.streams.addListener)
+    TxCorrelator.ensureRocksDb(session)
     import session.implicits._
     val src =
       if (nativeSource)
@@ -404,12 +386,8 @@ object BlockStream {
     // block height, transactions.rs:360)
     val cursor = sinkCursor(
       session, s"$outDir/transactions", cursorCol = "last_block_height")
-    val correlated =
-      if (tws) {
-        TxCorrelator.ensureRocksDb(session)
-        TxCorrelator.correlateStreamTws(blocks, stateTtl = stateTtl)
-      } else TxCorrelator.correlateStream(blocks)
-    correlated.writeStream
+    TxCorrelator.correlateStreamTws(blocks, stateTtl = stateTtl)
+      .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch {

@@ -157,19 +157,4 @@ class BlockStreamSpec extends SparkSpec {
       assert(listener.totalInputRows.get() > 0)
     } finally spark.streams.removeListener(listener)
   }
-
-  test("transactions pipeline --no-tws fallback: fmgws operator, " +
-    "same output as the default transformWithState wire") {
-    val in = tmp(); val out = tmp(); val cp = tmp()
-    import graft.schema.Blocks.encoder
-    spark.createDataset(BlockFixtures.blocks(8))(encoder)
-      .toDF().coalesce(1).write.mode("append").json(in)
-    val q = BlockStream.runTransactionsPipeline(
-      spark, in, out, cp, tws = false)
-    q.awaitTermination()
-    val txs = spark.read.parquet(s"$out/transactions")
-    assert(txs.count() === 7 + 4) // same rows the tws run above produces
-    assert(txs.where(col("transaction_hash") === "tx103").head()
-      .getAs[Long]("last_block_height") === 104L)
-  }
 }

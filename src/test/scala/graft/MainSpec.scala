@@ -108,4 +108,24 @@ class MainSpec extends SparkSpec {
       Main.run(Array("nonsense", "/tmp/a", "/tmp/b"), spark)
     }
   }
+
+  test("unknown flags raise a usage error; the specs' flag sets still parse") {
+    // a removed or typo'd flag must not silently start a different
+    // daemon: --no-tws is gone, --folow would drain and exit
+    Seq(Seq("--no-tws"), Seq("--folow"), Seq("--native", "--from")).foreach { fs =>
+      val e = intercept[IllegalArgumentException] {
+        Main.run(Array("transactions", "/tmp/a", "/tmp/b") ++ fs, spark)
+      }
+      assert(e.getMessage.contains(fs.last))
+    }
+    // every flag set the CLI specs drive gets past flag parsing: with an
+    // unknown mode it is the dispatch, not the parser, that raises
+    Seq(Seq(), Seq("--skip-commit"), Seq("--native"),
+      Seq("--follow", "--from", "7", "--native")).foreach { fs =>
+      val e = intercept[IllegalArgumentException] {
+        Main.run(Array("nonsense", "/tmp/a", "/tmp/b") ++ fs, spark)
+      }
+      assert(e.getMessage === "unknown mode: nonsense")
+    }
+  }
 }

@@ -10,7 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * host) left every later suite calling methods on a stopped context —
   * 0/235 queries certifiable from a single casualty. The accessor now
   * recreates the session when the previous one is stopped, so a killed
-  * context costs at most the suite it died in, never the run. */
+  * context costs at most the suite it died in, never the run.
+  *
+  * That bound is real: `lazy val spark` caches the session the suite
+  * first saw, so once a suite's context is stopped, every later test
+  * IN THAT SUITE still holds the stopped session and fails with
+  * stopped-context errors — the first failure in the suite is the real
+  * cause. Later suites get a fresh session. The accessor is a
+  * `lazy val` and not a `def` because `import spark.implicits._` (59
+  * imports across 34 suites) needs a stable identifier. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }

@@ -8,9 +8,9 @@ import graft.fixtures.BlockFixtures
 import graft.schema._
 
 /** `transformWithState` correlator (SURVEY §2.4/§7.4 first choice):
-  * equivalence with the flatMapGroupsWithState path and the pure fold
-  * on the fixture chain and on random receipt DAGs, cross-batch state
-  * persistence, lenient restart replay, and per-entry state TTL.
+  * equivalence with the pure fold on the fixture chain and on random
+  * receipt DAGs, cross-batch state persistence, lenient restart
+  * replay, and per-entry state TTL.
   * transformWithState requires the RocksDB state store provider —
   * scoped to each query here, reset after. */
 class TwsCorrelatorSpec extends SparkSpec {
@@ -60,28 +60,14 @@ class TwsCorrelatorSpec extends SparkSpec {
         (s, acc ++ c.map(_.transaction.hash))
     }._2
 
-  test("tws correlator == flatMapGroupsWithState correlator across " +
-    "micro-batch boundaries (fixture chain)") {
+  test("tws correlator matches the pure fold across micro-batch " +
+    "boundaries (fixture chain)") {
     val blocks = BlockFixtures.blocks(6)
     // split mid-DAG: pending receipts must survive the state store
     val batches = Seq(blocks.take(2), blocks.slice(2, 5), blocks.drop(5))
     val tws = runTws(batches, "tws_fixture")
 
-    // reference: the existing flatMapGroupsWithState operator on the
-    // same batch split
-    val stream = MemoryStream[BlockWithTxHashes](Blocks.encoder, spark)
-    val q = TxCorrelator.correlateStream(stream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("fmgws_fixture").start()
-    try batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-    finally q.stop()
-    val fmgws = spark.table("fmgws_fixture").collect()
-      .map(_.getAs[org.apache.spark.sql.Row]("transaction")
-        .getAs[String]("hash")).toSeq
-
     assert(tws.nonEmpty)
-    assert(tws.sorted === fmgws.sorted)
-    // and both match the pure fold
     assert(tws.sorted === pureFold(BlockFixtures.blocks(6)).sorted)
   }
 

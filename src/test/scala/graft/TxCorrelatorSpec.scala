@@ -102,25 +102,18 @@ class TxCorrelatorSpec extends SparkSpec {
     assert(fromSpark.length === 9)
   }
 
-  test("correlateStream handles an oversized micro-batch (memory-contract smoke)") {
-    // one ~600-block micro-batch through the single stateful task: the
-    // documented bound is maxFilesPerTrigger at the SOURCE; this pins
-    // that a batch well past the normal trigger size still sorts,
+  test("correlateStreamTws handles an oversized micro-batch (memory-contract smoke)") {
+    // one ~600-block micro-batch through the single stateful task of the
+    // production operator (correlateBatchTws feeds it as ONE trigger):
+    // the documented bound is maxFilesPerTrigger at the SOURCE; this
+    // pins that a batch well past the normal trigger size still sorts,
     // correlates and matches the batch correlator (no regression when an
     // operator accidentally lands everything in one trigger).
     import Blocks.encoder
     val n = 600
     val ds = spark.createDataset(BlockFixtures.blocks(n))(encoder)
-    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      graft.schema.BlockWithTxHashes](Blocks.encoder, spark)
-    stream.addData(BlockFixtures.blocks(n))
-    val q = TxCorrelator.correlateStream(stream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("oversized_out")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.table("oversized_out").count()
+    val streamed =
+      TxCorrelator.correlateBatchTws(spark, BlockFixtures.blocks(n)).count()
     val batch = TxCorrelator.correlateBatch(ds).count()
     assert(streamed === batch)
   }
