@@ -9,8 +9,8 @@ import graft.stream.{BlockStream, ProgressListener}
   * signal, progress logging).
   *
   * {{{
-  * graft.Main actions      <blocksJsonDir> <outDir> [--follow]
-  * graft.Main transactions <blocksJsonDir> <outDir> [--follow] [--from H]
+  * graft.Main actions      <blocksJsonDir> <outDir> [--follow] [--native] [--skip-commit]
+  * graft.Main transactions <blocksJsonDir> <outDir> [--follow] [--from H] [--native] [--skip-commit]
   * graft.Main backfill     <blocksJsonDir> <outDir>
   * }}}
   *
@@ -26,7 +26,9 @@ import graft.stream.{BlockStream, ProgressListener}
   * the reference's final-flush semantics). `--follow` tails the input
   * directory on a ProcessingTime trigger until SIGTERM/SIGINT; the
   * shutdown hook stops queries at a micro-batch boundary, and the
-  * checkpoint + idempotent sinks make restart safe (S3/S4).
+  * checkpoint + idempotent sinks make restart safe (S3/S4). `--native`
+  * reads through the height-offset block source instead of the file
+  * stream; `--skip-commit` runs every transform and writes nothing.
   */
 object Main {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.BlockFixtures
 import graft.query.Q
 import graft.schema.Blocks
-import graft.sink.Replacing
+import graft.sink.{ClickHouseDdl, Replacing}
 
 /** Query-pack surface for the ETL pipeline half: the fixture block
   * corpus (deterministic, generated in-process — the sfDir has no block
@@ -99,8 +99,7 @@ object PipelineQueries {
     Q("p9_replacing_dedup", PipelineOracles.p9) { (s, _) =>
       val a = ActionsExtract.actions(ActionsExtract.indexedReceipts(fixture(s)))
       driverSafe(Replacing.dedupView(
-        a.unionAll(a),
-        Seq("block_height", "account_id", "receipt_index", "action_index")))
+        a.unionAll(a), ClickHouseDdl.layouts("actions").orderBy))
     },
     // §3.3-5: account activity page over the extracted actions table
     // (range + point predicate + sort, the bloom/minmax shape).

@@ -194,7 +194,8 @@ object TxCorrelator {
     // height order requires materializing the batch (a sort can't be
     // lazy); in-place sort + one growable output buffer keep it to one
     // copy of the batch. The batch-size bound is the SOURCE's contract:
-    // maxFilesPerTrigger in readBlockStream caps blocks per micro-batch.
+    // maxBlocksPerTrigger (native source) or maxFilesPerTrigger (file
+    // stream) caps blocks per micro-batch.
     val arr = blocks.to(collection.mutable.ArrayBuffer)
     arr.sortInPlaceBy(_.block.header.height)
     var st = st0
@@ -367,8 +368,11 @@ object TxCorrelator {
     * MEMORY CONTRACT: the single stateful task materializes each
     * micro-batch once to sort it (streaming forbids a plan-level sort
     * before a stateful operator). The batch size is therefore bounded at
-    * the SOURCE — `readBlockStream(maxFilesPerTrigger = …)` caps blocks
-    * per trigger (default 100; one block document per file). A backfill
+    * the SOURCE: on the native height-offset source (`--native`, the
+    * daemon's production source) `readBlockSource(maxBlocksPerTrigger =
+    * …)` caps blocks per trigger (default 1000); on the file stream
+    * `readBlockStream(maxFilesPerTrigger = …)` does (default 100; one
+    * block document per file). A backfill
     * of on-disk history should use [[graft.stream.BlockStream.runBackfill]]
     * (distributed, no single-task funnel) rather than raising the cap.
     *

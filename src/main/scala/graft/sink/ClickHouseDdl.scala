@@ -17,8 +17,12 @@ import graft.schema.ActionKind
   * widths, u128-ness, enum value sets, ClickHouse NULLABILITY (Spark's
   * join-derived nullability is conservative, not contractual), primary
   * key and sort key — lives in the per-table [[Layout]] metadata
-  * below. DdlParitySpec diffs the generated statements against the
-  * reference contract in the test resource `reference_ddl.sql` (CREATE
+  * below. The same [[Layout]] carries the parquet side of each table:
+  * its height-bucket column and its bloom-filter columns (the Spark
+  * counterpart of the skip indexes), so `BlockStream` writes every
+  * table from this one catalog. DdlParitySpec diffs the generated
+  * statements against the reference contract in the test resource
+  * `reference_ddl.sql` (CREATE
   * TABLE blocks plus the `alter table actions modify column action`
   * enum extension), so drift on EITHER side — an ETL schema change, a
   * metadata edit, or a reference contract update — fails the suite.
@@ -32,10 +36,14 @@ import graft.schema.ActionKind
   */
 object ClickHouseDdl {
 
+  /** `heightCol` buckets the parquet table (`height_bucket`
+    * directories); `bloom` lists its parquet bloom-filter columns. */
   final case class Layout(
       primaryKey: Seq[String],
       orderBy: Seq[String],
       nullable: Set[String],
+      heightCol: String,
+      bloom: Seq[String],
       uint16: Set[String] = Set.empty,
       enums: Map[String, Seq[String]] = Map.empty)
 
@@ -53,6 +61,9 @@ object ClickHouseDdl {
         "args_new_account_id", "args_owner_id", "args_receiver_id",
         "args_sender_id", "args_token_id", "args_amount", "args_balance",
         "args_nft_contract_id", "args_nft_token_id", "return_value_int"),
+      heightCol = "block_height",
+      bloom = Seq("account_id", "signer_id", "receipt_id", "transaction_hash",
+        "predecessor_id"),
       uint16 = Set("action_index"),
       enums = Map("status" -> statusEnum, "action" -> ActionKind.all)),
     "events" -> Layout(
@@ -64,32 +75,46 @@ object ClickHouseDdl {
         "data_old_owner_id", "data_new_owner_id",
         "data_liquidation_account_id", "data_authorized_id",
         "data_token_id", "data_position", "data_amount"),
+      heightCol = "block_height",
+      bloom = Seq("account_id", "data_owner_id"),
       uint16 = Set("log_index"),
       enums = Map("status" -> statusEnum)),
     "data" -> Layout(
       primaryKey = Seq("block_height", "account_id"),
       orderBy = Seq("block_height", "account_id", "receipt_index"),
-      nullable = Set("data")),
+      nullable = Set("data"),
+      heightCol = "block_height",
+      bloom = Seq("account_id", "data_id")),
     "transactions" -> Layout(
       primaryKey = Seq("transaction_hash"),
       orderBy = Seq("transaction_hash"),
-      nullable = Set.empty),
+      nullable = Set.empty,
+      heightCol = "tx_block_height",
+      bloom = Seq("transaction_hash", "signer_id")),
     "account_txs" -> Layout(
       primaryKey = Seq("account_id", "tx_block_height"),
       orderBy = Seq("account_id", "tx_block_height", "transaction_hash"),
-      nullable = Set.empty),
+      nullable = Set.empty,
+      heightCol = "tx_block_height",
+      bloom = Seq("account_id")),
     "block_txs" -> Layout(
       primaryKey = Seq("block_height"),
       orderBy = Seq("block_height", "transaction_hash"),
-      nullable = Set.empty),
+      nullable = Set.empty,
+      heightCol = "block_height",
+      bloom = Seq("transaction_hash")),
     "receipt_txs" -> Layout(
       primaryKey = Seq("tx_block_height"),
       orderBy = Seq("tx_block_height", "receipt_id"),
-      nullable = Set.empty),
+      nullable = Set.empty,
+      heightCol = "tx_block_height",
+      bloom = Seq("receipt_id")),
     "blocks" -> Layout(
       primaryKey = Seq("block_height"),
       orderBy = Seq("block_height"),
-      nullable = Set("prev_block_height")))
+      nullable = Set("prev_block_height"),
+      heightCol = "block_height",
+      bloom = Seq("block_hash", "epoch_id", "author_id")))
 
   /** ClickHouse type for one engine column under a table layout. */
   def chType(table: String, f: StructField): String = {
@@ -121,9 +146,9 @@ object ClickHouseDdl {
   }
 
   /** Rendered CREATE TABLE statement (no COMMENT/INDEX clauses — the
-    * parity contract is names/order/types/keys; skip indexes, whose
-    * Spark-side counterpart is the O1 parquet layout in [[Replacing]]/
-    * [[ZOrder]]/[[Bucketed]]). */
+    * parity contract is names/order/types/keys; skip indexes have their
+    * Spark-side counterpart in [[Layout.bloom]], written by
+    * [[Replacing.appendWrite]]). */
   def createTable(table: String, schema: StructType): String = {
     val (cols, pk, ob) = model(table, schema)
     val width = cols.map(_._1.length).max

@@ -11,18 +11,19 @@ import org.apache.spark.sql.functions._
   *
   * Parquet has no storage-level analog, so the engine provides the two
   * halves explicitly:
-  *  - write path: [[idempotentWrite]] — dynamic partition overwrite of
-  *    block-height buckets. Replaying any block range rewrites exactly
-  *    the buckets it covers; at 1000-executor scale each bucket is an
-  *    independent file set, no global coordination.
+  *  - write path: [[appendWrite]] — every batch, streamed or backfilled,
+  *    appends to block-height bucket directories. A replayed block range
+  *    appends its rows again, exactly like a repeated ClickHouse insert;
+  *    at 1000-executor scale each bucket is an independent file set, no
+  *    global coordination.
   *  - read path: [[dedupView]] — `row_number() OVER (PARTITION BY key
-  *    ORDER BY version DESC) = 1`, the standard dedup-on-read view for
-  *    data that may carry duplicates anyway.
+  *    ORDER BY version DESC) = 1`, the standard dedup-on-read view that
+  *    collapses those replays ([[merge]] collapses them physically).
   *
   * Write layout doubles as the index machinery (§4.2): rows sorted by
-  * the table's ORDER BY key within buckets → parquet row-group min/max
-  * stats serve range scans (ClickHouse minmax idx); per-column bloom
-  * filters serve point lookups (bloom_filter idx).
+  * the table's ORDER BY key within each bucket file → parquet row-group
+  * min/max stats serve range scans (ClickHouse minmax idx); per-column
+  * bloom filters serve point lookups (bloom_filter idx).
   */
 object Replacing {
 
@@ -30,57 +31,34 @@ object Replacing {
   def heightBucket(heightCol: String, step: Long = 1000L) =
     (col(heightCol) - (col(heightCol) % step)).as("height_bucket")
 
-  private def layoutWriter(
-      df: DataFrame, heightCol: String, orderKey: Seq[String],
-      bloomCols: Seq[String], step: Long, mode: SaveMode) = {
-    val writer = df
-      .withColumn("height_bucket", heightBucket(heightCol, step))
-      .repartition(col("height_bucket"))
-      .sortWithinPartitions(orderKey.map(col): _*)
-      .write
-      .mode(mode)
-      .partitionBy("height_bucket")
-    bloomCols.foldLeft(writer) { (w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
-  }
+  /** One task per height bucket, rows in `orderKey` order. The sort
+    * leads with `height_bucket`: the partitioned writer needs its input
+    * ordered by the partition column, and a sort that does not start
+    * with it is replaced by the writer's own bucket-only sort, leaving
+    * every file out of key order. */
+  private def clustered(df: DataFrame, orderKey: Seq[String]): DataFrame =
+    df.repartition(col("height_bucket"))
+      .sortWithinPartitions(("height_bucket" +: orderKey).map(col): _*)
 
-  /** Batch-backfill write: partition dirs by height bucket, rows sorted
-    * by `orderKey` within files, bloom filters on `bloomCols`.
-    * `SaveMode.Overwrite` + dynamic partitionOverwriteMode replaces
-    * only the buckets present in `df` — idempotent ONLY when `df`
-    * covers every block of every bucket it touches (a backfill of
-    * complete ranges). Streaming micro-batches must use [[appendWrite]]
-    * instead: overwriting would clobber earlier batches sharing a
-    * bucket. */
-  def idempotentWrite(
-      df: DataFrame, path: String, heightCol: String,
-      orderKey: Seq[String], bloomCols: Seq[String] = Nil,
-      step: Long = 1000L): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try layoutWriter(df, heightCol, orderKey, bloomCols, step,
-      SaveMode.Overwrite).parquet(path)
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
-
-  /** Streaming micro-batch write: same layout, `SaveMode.Append`.
-    * At-least-once — crash-replays can duplicate rows, which is exactly
-    * the ReplacingMergeTree insert contract; [[dedupView]] is the
-    * collapse. The sink cursor filter upstream keeps duplication to
-    * crash windows only. */
+  /** The table write: partition dirs by height bucket, rows sorted by
+    * `orderKey` within files, bloom filters on `bloomCols`,
+    * `SaveMode.Append`. At-least-once — crash-replays can duplicate
+    * rows, which is exactly the ReplacingMergeTree insert contract;
+    * [[dedupView]] is the collapse. The sink cursor filter upstream
+    * keeps duplication to crash windows only. */
   def appendWrite(
       df: DataFrame, path: String, heightCol: String,
       orderKey: Seq[String], bloomCols: Seq[String] = Nil,
-      step: Long = 1000L): Unit =
-    layoutWriter(df, heightCol, orderKey, bloomCols, step, SaveMode.Append)
-      .parquet(path)
+      step: Long = 1000L): Unit = {
+    val writer = clustered(
+      df.withColumn("height_bucket", heightBucket(heightCol, step)), orderKey)
+      .write
+      .mode(SaveMode.Append)
+      .partitionBy("height_bucket")
+    bloomCols.foldLeft(writer) { (w, c) =>
+      w.option(s"parquet.bloom.filter.enabled#$c", "true")
+    }.parquet(path)
+  }
 
   /** Dedup-on-read view: latest row (by `versionCol` descending, or
     * arbitrary-but-deterministic when absent) per ORDER BY key. */
@@ -94,10 +72,6 @@ object Replacing {
       .where(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** Simple dedup for exact-duplicate rows (all columns equal). */
-  def dropExactDuplicates(df: DataFrame, orderKey: Seq[String]): DataFrame =
-    df.dropDuplicates(orderKey)
 
   /** The background MERGE — the half of ReplacingMergeTree that
     * [[dedupView]] defers: physically collapse duplicate ORDER-BY keys
@@ -123,9 +97,7 @@ object Replacing {
       case Some(bs) => table.where(col("height_bucket").isin(bs: _*))
       case None => table
     }
-    val collapsed = dedupView(scoped, orderKey, versionCol)
-      .repartition(col("height_bucket"))
-      .sortWithinPartitions(orderKey.map(col): _*)
+    val collapsed = clustered(dedupView(scoped, orderKey, versionCol), orderKey)
     // Spark refuses to overwrite a path it is reading, so the merge
     // writes to a sibling temp dir and swaps bucket dirs by FS rename —
     // per-bucket near-atomic, and a crash mid-merge leaves every bucket

@@ -3,9 +3,10 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StringType
 import graft.etl.{ActionsExtract, TxCorrelator, TxFanout}
 import graft.schema.{Blocks, BlockWithTxHashes}
-import graft.sink.Replacing
+import graft.sink.{ClickHouseDdl, Replacing}
 
 /** Structured Streaming wrapper (SURVEY.md §2.1–2.2, §2.9): the
   * reference's fetcher/channel/commit machinery re-expressed as a
@@ -20,8 +21,10 @@ import graft.sink.Replacing
   *    checkpoint; the sink-derived cursor is kept as the repair path:
   *    [[sinkCursor]] + the skip filter in each batch.
   *  - S4 1000-block rewind → unnecessary (state store recovers from
-  *    checkpoint); replays are harmless because writes are idempotent
-  *    per height bucket (K1/A5 → Replacing.idempotentWrite).
+  *    checkpoint); replays are harmless because every table write is
+  *    one retried append whose duplicates collapse under the dedup view
+  *    (K1/A5 → [[write]]: Replacing.retry + appendWrite, the table's
+  *    layout from `ClickHouseDdl.layouts`).
   *  - K2 commit cadence → trigger choice (AvailableNow drains a
   *    backlog; ProcessingTime for tailing).
   *  - K3 async commit pipeline (≤3 in flight) → concurrent per-table
@@ -65,18 +68,21 @@ object BlockStream {
   val ProductionStateConf: Map[String, String] =
     TxCorrelator.ProductionStateConf
 
-  /** Block stream with corrupt-record capture: malformed JSON lands in
-    * `_corrupt_record` (PERMISSIVE would otherwise admit an all-null
-    * block row silently and the extract would just drop it — an
-    * ingestion bug you'd never see). Pipelines quarantine those rows. */
+  /** Block documents parse with corrupt-record capture: malformed JSON
+    * lands in `_corrupt_record` (PERMISSIVE would otherwise admit an
+    * all-null block row silently and the extract would just drop it —
+    * an ingestion bug you'd never see). Pipelines quarantine those rows. */
+  private val parseSchema = Blocks.schema.add("_corrupt_record", StringType)
+  private val permissive = Map(
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
+
+  /** Block stream over a JSON file directory, parsed as above. */
   def readBlockStream(
       spark: SparkSession, inDir: String,
       maxFilesPerTrigger: Int = 100): DataFrame =
     spark.readStream
-      .schema(Blocks.schema.add("_corrupt_record",
-        org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .schema(parseSchema)
+      .options(permissive)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(inDir)
 
@@ -91,9 +97,7 @@ object BlockStream {
   def readBlockSource(
       spark: SparkSession, pathOrUrl: String,
       fetcher: String = "dir", startHeight: Long = 0L,
-      maxBlocksPerTrigger: Long = 1000L, numPartitions: Int = 8): DataFrame = {
-    val parseSchema = Blocks.schema.add("_corrupt_record",
-      org.apache.spark.sql.types.StringType)
+      maxBlocksPerTrigger: Long = 1000L, numPartitions: Int = 8): DataFrame =
     spark.readStream.format("graft-blocks")
       .option(if (fetcher == "http") "url" else "path", pathOrUrl)
       .option("fetcher", fetcher)
@@ -101,12 +105,28 @@ object BlockStream {
       .option("maxBlocksPerTrigger", maxBlocksPerTrigger)
       .option("numPartitions", numPartitions)
       .load()
-      .select(from_json(
-        col("value"), parseSchema,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record")).as("b"))
+      .select(from_json(col("value"), parseSchema, permissive).as("b"))
       .select(col("b.*"))
-  }
+
+  /** The pipelines' source: the native height-offset source starting at
+    * `startHeight`, or the file stream (which replays from its own
+    * checkpoint and ignores `startHeight`). */
+  private def source(
+      spark: SparkSession, inDir: String, nativeSource: Boolean,
+      startHeight: Long): DataFrame =
+    if (nativeSource) readBlockSource(spark, inDir, startHeight = startHeight)
+    else readBlockStream(spark, inDir)
+
+  /** Start `src` as a checkpointed stream that hands each micro-batch
+    * to `sink`. */
+  private def startStream[T](
+      src: Dataset[T], checkpoint: String, trigger: Trigger)(
+      sink: Dataset[T] => Unit): StreamingQuery =
+    src.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch((batch: Dataset[T], _: Long) => sink(batch))
+      .start()
 
   /** Split a micro-batch into (good blocks, quarantine rows) and append
     * the quarantine (raw line + arrival batch) for forensics. With
@@ -126,7 +146,13 @@ object BlockStream {
       .drop("_corrupt_record")
   }
 
-  /** Dry-run seam — the reference's skip-commit debugging mode
+  /** The one table write (K1, the reference's retried insert in
+    * click.rs:50-85): `rows` appended to `outDir/table` in the table's
+    * [[ClickHouseDdl.Layout]] — height buckets of `step` blocks over its
+    * `heightCol`, files sorted by its ORDER BY key, bloom filters on its
+    * `bloom` columns — retried with backoff.
+    *
+    * `skipCommit` is the reference's skip-commit debugging mode
     * (`/root/reference/src/click.rs:63`, `README.md:105`: run the full
     * pipeline, commit nothing). The WHOLE transform still executes —
     * extract, correlate, cursor filters, state-store updates, progress
@@ -134,12 +160,18 @@ object BlockStream {
     * materialization; only the sink write is withheld. That makes it
     * the operational smoke test the reference uses it as: identical
     * work, zero mutation. */
-  private def commit[T](
-      skip: Boolean, table: String, ds: Dataset[T])(
-      write: Dataset[T] => Unit): Unit =
-    if (skip)
-      println(s"[graft] skip-commit: $table NOT written (${ds.count()} rows)")
-    else write(ds)
+  private def write(
+      table: String, rows: DataFrame, outDir: String, step: Long,
+      skipCommit: Boolean): Unit =
+    if (skipCommit)
+      println(s"[graft] skip-commit: $table NOT written (${rows.count()} rows)")
+    else {
+      val layout = ClickHouseDdl.layouts(table)
+      Replacing.retry() {
+        Replacing.appendWrite(rows, s"$outDir/$table", layout.heightCol,
+          layout.orderBy, layout.bloom, step)
+      }
+    }
 
   /** Sink-derived resume cursor (S3): max of `cursorCol` already
     * persisted, or -1 when the sink is empty/nonexistent. Each table
@@ -153,11 +185,9 @@ object BlockStream {
       if (v.isNullAt(0)) -1L else v.getLong(0)
     } catch { case _: Throwable => -1L }
 
-  val actionsOrderKey =
-    Seq("block_height", "account_id", "receipt_index", "action_index")
-  val eventsOrderKey =
-    Seq("block_height", "account_id", "receipt_index", "log_index")
-  val dataOrderKey = Seq("block_height", "account_id", "receipt_index")
+  val actionsOrderKey: Seq[String] = ClickHouseDdl.layouts("actions").orderBy
+  val eventsOrderKey: Seq[String] = ClickHouseDdl.layouts("events").orderBy
+  val dataOrderKey: Seq[String] = ClickHouseDdl.layouts("data").orderBy
 
   /** actions-mode pipeline: blocks JSON dir → 3 sorted, bloom-filtered,
     * height-bucketed parquet tables under `outDir`. */
@@ -175,62 +205,27 @@ object BlockStream {
     // native path: the sink cursor IS a height, so it seeds the source
     // offset directly — a fresh checkpoint resumes where the tables end
     // instead of re-fetching from height 0
-    val src =
-      if (nativeSource) readBlockSource(spark, inDir, startHeight = cMin + 1)
-      else readBlockStream(spark, inDir)
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // O2: quarantined, deduped, past-cursor blocks only
-        val blocks = quarantine(batch, outDir, skipCommit)
-          .where(col("block.header.height") > cMin)
-          .dropDuplicates("block")
-          .persist()
-        try {
-          if (!blocks.isEmpty) {
-            val idx = ActionsExtract.indexedReceipts(blocks).persist()
-            try {
-              commit(skipCommit, "actions",
-                ActionsExtract.actions(idx)
-                  .where(col("block_height") > cActions)) { out =>
-                Replacing.retry() {
-                  Replacing.appendWrite(
-                    out, s"$outDir/actions",
-                    "block_height", actionsOrderKey,
-                    bloomCols = Seq("account_id", "signer_id", "receipt_id",
-                      "transaction_hash", "predecessor_id"),
-                    step = bucketStep)
-                }
-              }
-              commit(skipCommit, "events",
-                ActionsExtract.events(idx)
-                  .where(col("block_height") > cEvents)) { out =>
-                Replacing.retry() {
-                  Replacing.appendWrite(
-                    out, s"$outDir/events",
-                    "block_height", eventsOrderKey,
-                    bloomCols = Seq("account_id", "data_owner_id"),
-                    step = bucketStep)
-                }
-              }
-              commit(skipCommit, "data",
-                ActionsExtract.data(idx)
-                  .where(col("block_height") > cData)) { out =>
-                Replacing.retry() {
-                  Replacing.appendWrite(
-                    out, s"$outDir/data",
-                    "block_height", dataOrderKey,
-                    bloomCols = Seq("account_id", "data_id"),
-                    step = bucketStep)
-                }
-              }
-            } finally idx.unpersist()
-          }
-        } finally blocks.unpersist()
-        ()
-      }
-      .start()
+    startStream(source(spark, inDir, nativeSource, cMin + 1),
+        checkpoint, trigger) { batch =>
+      // O2: quarantined, deduped, past-cursor blocks only
+      val blocks = quarantine(batch, outDir, skipCommit)
+        .where(col("block.header.height") > cMin)
+        .dropDuplicates("block")
+        .persist()
+      try {
+        if (!blocks.isEmpty) {
+          val idx = ActionsExtract.indexedReceipts(blocks).persist()
+          try Seq(
+            ("actions", ActionsExtract.actions(idx), cActions),
+            ("events", ActionsExtract.events(idx), cEvents),
+            ("data", ActionsExtract.data(idx), cData)).foreach {
+            case (table, rows, cursor) =>
+              write(table, rows.where(col("block_height") > cursor),
+                outDir, bucketStep, skipCommit)
+          } finally idx.unpersist()
+        }
+      } finally blocks.unpersist()
+    }
   }
 
   /** Sink writes in flight per micro-batch (click.rs
@@ -238,11 +233,9 @@ object BlockStream {
   private val MaxCommitHandlers = 3
 
   /** Fan-out writes of one completed-tx set to the 4 tx tables — shared
-    * by the streaming micro-batch sink and the batch backfill. The
-    * transactions table is written LAST so its cursor only advances once
-    * the other three hold the batch (crash between writes re-runs;
-    * duplicates collapse under dedupView). */
-  /** K3: the reference commits inserts asynchronously with ≤3 handlers
+    * by the streaming micro-batch sink and the batch backfill.
+    *
+    * K3: the reference commits inserts asynchronously with ≤3 handlers
     * in flight (click.rs MAX_COMMIT_HANDLERS = 3); the Spark analog
     * runs ONE micro-batch's per-table sink writes concurrently under a
     * bounded pool. The batch boundary still commits synchronously —
@@ -268,47 +261,13 @@ object BlockStream {
   private def writeTxTables(
       txs: Dataset[TxCorrelator.CompletedTx], outDir: String,
       bucketStep: Long, skipCommit: Boolean = false): Unit = {
-    val writes: Seq[(String, () => Unit)] = Seq(
-      ("account_txs", () =>
-        commit(skipCommit, "account_txs", TxFanout.accountTxs(txs)) { out =>
-          Replacing.retry() {
-            Replacing.appendWrite(
-              out, s"$outDir/account_txs",
-              "tx_block_height",
-              Seq("account_id", "tx_block_height", "transaction_hash"),
-              bloomCols = Seq("account_id"), step = bucketStep)
-          }
-        }),
-      ("receipt_txs", () =>
-        commit(skipCommit, "receipt_txs", TxFanout.receiptTxs(txs)) { out =>
-          Replacing.retry() {
-            Replacing.appendWrite(
-              out, s"$outDir/receipt_txs",
-              "tx_block_height", Seq("tx_block_height", "receipt_id"),
-              bloomCols = Seq("receipt_id"), step = bucketStep)
-          }
-        }),
-      ("block_txs", () =>
-        commit(skipCommit, "block_txs", TxFanout.blockTxs(txs)) { out =>
-          Replacing.retry() {
-            Replacing.appendWrite(
-              out, s"$outDir/block_txs",
-              "block_height", Seq("block_height", "transaction_hash"),
-              bloomCols = Seq("transaction_hash"), step = bucketStep)
-          }
-        }),
-      ("transactions", () =>
-        commit(skipCommit, "transactions", TxFanout.transactions(txs)) { out =>
-          Replacing.retry() {
-            Replacing.appendWrite(
-              out, s"$outDir/transactions",
-              "tx_block_height", Seq("transaction_hash"),
-              bloomCols = Seq("transaction_hash", "signer_id"),
-              step = bucketStep)
-          }
-        }))
-    val (cursorTable, siblings) = (writes.last, writes.init)
-    if (skipCommit) writes.foreach(_._2())
+    val siblings = Seq(
+      "account_txs" -> TxFanout.accountTxs(txs),
+      "receipt_txs" -> TxFanout.receiptTxs(txs),
+      "block_txs" -> TxFanout.blockTxs(txs))
+    def writeTable(table: String, rows: DataFrame): Unit =
+      write(table, rows, outDir, bucketStep, skipCommit)
+    if (skipCommit) siblings.foreach { case (t, rows) => writeTable(t, rows) }
     else {
       val pool = java.util.concurrent.Executors
         .newFixedThreadPool(MaxCommitHandlers)
@@ -319,16 +278,16 @@ object BlockStream {
         import scala.concurrent.duration.Duration
         import scala.util.{Failure, Try}
         val settled = Await.result(
-          Future.sequence(siblings.map { case (name, f) =>
-            Future(name -> Try(f()))
+          Future.sequence(siblings.map { case (table, rows) =>
+            Future(table -> Try(writeTable(table, rows)))
           }), Duration.Inf)
-        settled.collectFirst { case (name, Failure(e)) =>
-          throw new RuntimeException(s"commit of $name failed", e)
+        settled.collectFirst { case (table, Failure(e)) =>
+          throw new RuntimeException(s"commit of $table failed", e)
         }
       } finally pool.shutdown()
-      // cursor table LAST — only after every sibling holds the batch
-      cursorTable._2()
     }
+    // cursor table LAST — only after every sibling holds the batch
+    writeTable("transactions", TxFanout.transactions(txs))
   }
 
   /** transactions-mode pipeline: stateful correlation (state store
@@ -371,13 +330,8 @@ object BlockStream {
     spark.streams.listListeners.foreach(session.streams.addListener)
     TxCorrelator.ensureRocksDb(session)
     import session.implicits._
-    val src =
-      if (nativeSource)
-        readBlockSource(session, inDir,
-          startHeight = math.max(startHeight, 0L))
-      else readBlockStream(session, inDir)
     val blocks: Dataset[BlockWithTxHashes] =
-      src
+      source(session, inDir, nativeSource, math.max(startHeight, 0L))
         .where(col("_corrupt_record").isNull && col("block").isNotNull &&
           col("block.header.height") >= startHeight)
         .drop("_corrupt_record")
@@ -386,19 +340,13 @@ object BlockStream {
     // block height, transactions.rs:360)
     val cursor = sinkCursor(
       session, s"$outDir/transactions", cursorCol = "last_block_height")
-    TxCorrelator.correlateStreamTws(blocks, stateTtl = stateTtl)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch {
-        (batch: Dataset[TxCorrelator.CompletedTx], _: Long) =>
-          val txs = batch.filter(_.last_block_height > cursor).persist()
-          try {
-            if (!txs.isEmpty) writeTxTables(txs, outDir, bucketStep, skipCommit)
-          } finally txs.unpersist()
-          ()
-      }
-      .start()
+    startStream(TxCorrelator.correlateStreamTws(blocks, stateTtl = stateTtl),
+        checkpoint, trigger) { batch =>
+      val txs = batch.filter(_.last_block_height > cursor).persist()
+      try {
+        if (!txs.isEmpty) writeTxTables(txs, outDir, bucketStep, skipCommit)
+      } finally txs.unpersist()
+    }
   }
 
   /** Batch backfill — the 100 TB path (SURVEY.md §7.4-2 option (b)):
@@ -411,12 +359,7 @@ object BlockStream {
   def runBackfill(
       spark: SparkSession, inDir: String, outDir: String,
       bucketStep: Long = 1000L): Long = {
-    val raw = spark.read
-      .schema(Blocks.schema.add("_corrupt_record",
-        org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(inDir)
+    val raw = spark.read.schema(parseSchema).options(permissive).json(inDir)
     val blocks = quarantine(raw, outDir).dropDuplicates("block")
     val (correlated, cut) = graft.etl.DistributedCorrelator
       .correlateWithCut(blocks)
@@ -430,12 +373,7 @@ object BlockStream {
       // blocks table (reference transactions mode writes it too)
       val b = TxFanout.blocks(blocks)
         .where(col("block_height") > sinkCursor(spark, s"$outDir/blocks"))
-      if (!b.isEmpty) Replacing.retry() {
-        Replacing.appendWrite(
-          b, s"$outDir/blocks", "block_height", Seq("block_height"),
-          bloomCols = Seq("block_hash", "epoch_id", "author_id"),
-          step = bucketStep)
-      }
+      if (!b.isEmpty) write("blocks", b, outDir, bucketStep, skipCommit = false)
       val c = cut()
       // the cut lives next to the tables, via the SAME filesystem layer
       // the table writes use — outDir may be hdfs:// or s3a://, where
@@ -471,26 +409,12 @@ object BlockStream {
       skipCommit: Boolean = false)
       : StreamingQuery = {
     val cursor = sinkCursor(spark, s"$outDir/blocks")
-    val src =
-      if (nativeSource) readBlockSource(spark, inDir, startHeight = cursor + 1)
-      else readBlockStream(spark, inDir)
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = TxFanout
-          .blocks(quarantine(batch, outDir, skipCommit).dropDuplicates("block"))
-          .where(col("block_height") > cursor)
-        if (!b.isEmpty) commit(skipCommit, "blocks", b) { out =>
-          Replacing.retry() {
-            Replacing.appendWrite(
-              out, s"$outDir/blocks", "block_height", Seq("block_height"),
-              bloomCols = Seq("block_hash", "epoch_id", "author_id"),
-              step = bucketStep)
-          }
-        }
-        ()
-      }
-      .start()
+    startStream(source(spark, inDir, nativeSource, cursor + 1),
+        checkpoint, trigger) { batch =>
+      val b = TxFanout
+        .blocks(quarantine(batch, outDir, skipCommit).dropDuplicates("block"))
+        .where(col("block_height") > cursor)
+      if (!b.isEmpty) write("blocks", b, outDir, bucketStep, skipCommit)
+    }
   }
 }

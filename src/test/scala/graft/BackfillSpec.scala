@@ -55,6 +55,9 @@ class BackfillSpec extends SparkSpec {
         spark.read.parquet(s"$outSplit/$t").distinct().count() ===
           spark.read.parquet(s"$outStream/$t").distinct().count(), t)
     }
+    val txTables = Seq("transactions", "account_txs", "receipt_txs", "block_txs")
+    SinkLayout.assertTables(spark, outStream, txTables)
+    SinkLayout.assertTables(spark, outSplit, txTables :+ "blocks")
   }
 
   test("backfill with nothing pending records cut = maxHeight + 1") {

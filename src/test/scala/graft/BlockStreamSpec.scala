@@ -55,6 +55,7 @@ class BlockStreamSpec extends SparkSpec {
       spark, in, out, tmp(), bucketStep = 10L)
     q2.awaitTermination()
     assert(spark.read.parquet(s"$out/actions").count() === batch.count())
+    SinkLayout.assertTables(spark, out, Seq("actions", "events", "data"), 10L)
   }
 
   test("corrupt JSON lines are quarantined, not silently dropped") {
@@ -111,6 +112,8 @@ class BlockStreamSpec extends SparkSpec {
     val blocksTbl = BlockStream.runBlocksPipeline(spark, in, out, tmp())
     blocksTbl.awaitTermination()
     assert(spark.read.parquet(s"$out/blocks").count() === 8)
+    SinkLayout.assertTables(spark, out, Seq(
+      "transactions", "account_txs", "receipt_txs", "block_txs", "blocks"))
 
     // the PRODUCTION state conf actually reached the query: Spark
     // records shuffle.partitions in the checkpoint's offset metadata

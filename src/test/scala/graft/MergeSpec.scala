@@ -39,8 +39,26 @@ class MergeSpec extends SparkSpec {
       .select("block_height", "key", "payload")
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getString(2)).toMap
     assert(viewAfter === viewBefore) // reads unchanged by the merge
+    SinkLayout.assertFiles(spark, s"$out/t", "block_height", key, 10L)
     // no temp residue
     assert(!new java.io.File(s"$out/t__merge_tmp").exists())
+  }
+
+  test("merge rewrites each bucket file in ORDER BY order") {
+    // multi-partition input: with the tiny shuffle coalesced to one
+    // partition the dedup window's own sort survives and hides a
+    // rewrite that does not sort by the key
+    val out = java.nio.file.Files.createTempDirectory("graft-merge-sort").toString
+    val key = Seq("block_height", "key")
+    Replacing.appendWrite(table(400, 1).repartition(8), s"$out/t", "block_height",
+      key, step = 100L)
+    Replacing.appendWrite(table(400, 2).repartition(8), s"$out/t", "block_height",
+      key, step = 100L)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try Replacing.merge(spark, s"$out/t", key, versionCol = Some("version"))
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    assert(spark.read.parquet(s"$out/t").count() === 400)
+    SinkLayout.assertFiles(spark, s"$out/t", "block_height", key, 100L)
   }
 
   test("bucket-scoped merge touches only the requested buckets") {

@@ -181,7 +181,7 @@ class PlanSpec extends SparkSpec {
     val actions = graft.etl.ActionsExtract.actions(
       graft.etl.ActionsExtract.indexedReceipts(
         graft.fixtures.BlockFixtures.df(spark, 30)))
-    graft.sink.Replacing.idempotentWrite(
+    graft.sink.Replacing.appendWrite(
       actions, s"$out/actions", "block_height",
       graft.stream.BlockStream.actionsOrderKey, step = 10L)
     val scan = spark.read.parquet(s"$out/actions")
@@ -211,39 +211,6 @@ class PlanSpec extends SparkSpec {
     // exchange here would serialize the whole corpus through one task
     assert(plan.contains("hashpartitioning(shard"), plan.take(3000))
     assert(!plan.contains("SinglePartition"), plan.take(3000))
-  }
-
-  test("bucketed tables join with zero exchanges, prune by bucket") {
-    val out = java.nio.file.Files.createTempDirectory("graft-bucket").toString
-    val li = Tables.load(spark, dir, "lineitem")
-      .select("l_orderkey", "l_quantity")
-    val or = Tables.load(spark, dir, "orders")
-      .select("o_orderkey", "o_totalprice")
-    graft.sink.Bucketed.writeBucketed(li, "li_b", s"$out/li", "l_orderkey", 8)
-    graft.sink.Bucketed.writeBucketed(or, "or_b", s"$out/or", "o_orderkey", 8)
-    try {
-      val joined = spark.table("li_b")
-        .join(spark.table("or_b"),
-          col("l_orderkey") === col("o_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      // co-located: the join itself needs no shuffle on either side
-      assert(!plan.contains("Exchange hashpartitioning"), plan.take(3000))
-      assert(joined.count() > 0)
-      // bucket pruning: an equality predicate scans 1 of 8 buckets.
-      // autoBucketedScan turns bucketed reading off for plans with no
-      // shuffle to avoid (a filter-only scan), hiding the pruning — pin
-      // it on for this assertion.
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      try {
-        val pruned = spark.table("li_b").where(col("l_orderkey") === 1000)
-        val f = pruned.queryExecution.executedPlan.toString
-        assert(f.contains("SelectedBucketsCount: 1 out of 8"), f.take(3000))
-      } finally spark.conf
-        .set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS li_b")
-      spark.sql("DROP TABLE IF EXISTS or_b")
-    }
   }
 
   test("dim+geometry-supplied similarity calls launch no probe job") {
