@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Prints the deployment DDL for the eight engine output tables —
-  * the artifact `tools/ch_roundtrip.sh` pipes through
-  * `clickhouse client --multiquery` before inserting Native frames
-  * (a fresh server has no `graft.*` tables; the INSERTs would
-  * otherwise all fail — ADVICE round 12).
+  * pipe it through `clickhouse client --multiquery` before loading the
+  * parquet buckets (a fresh server has no `graft.*` tables; the
+  * INSERTs would otherwise all fail — ADVICE round 12).
   *
   * Statements are database-qualified and `;`-terminated so the output
   * is directly executable; the schemas come from the live projection

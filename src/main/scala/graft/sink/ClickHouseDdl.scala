@@ -6,9 +6,7 @@ import org.apache.spark.sql.types._
 import graft.schema.ActionKind
 
 /** ClickHouse CREATE TABLE emitter for the engine's eight output
-  * tables — the testable slice of the wire-deployment story
-  * (the live native-protocol insert stays environment-blocked; see
-  * README deployment notes).
+  * tables (see README "Deploying against ClickHouse").
   *
   * Column NAMES, ORDER and base types derive from the LIVE engine
   * StructTypes (the same projections the query pack certifies), so
@@ -117,7 +115,7 @@ object ClickHouseDdl {
       bloom = Seq("block_hash", "epoch_id", "author_id")))
 
   /** ClickHouse type for one engine column under a table layout. */
-  def chType(table: String, f: StructField): String = {
+  private def chType(table: String, f: StructField): String = {
     val lay = layouts(table)
     val base = f.dataType match {
       case LongType if f.name.endsWith("_timestamp") =>

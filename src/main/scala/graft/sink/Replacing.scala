@@ -49,11 +49,19 @@ object Replacing {
   def appendWrite(
       df: DataFrame, path: String, heightCol: String,
       orderKey: Seq[String], bloomCols: Seq[String] = Nil,
-      step: Long = 1000L): Unit = {
-    val writer = clustered(
-      df.withColumn("height_bucket", heightBucket(heightCol, step)), orderKey)
+      step: Long = 1000L): Unit =
+    layoutWrite(df.withColumn("height_bucket", heightBucket(heightCol, step)),
+      path, SaveMode.Append, orderKey, bloomCols)
+
+  /** The one parquet writer of the layout, shared by [[appendWrite]]
+    * and [[merge]]: `height_bucket` partition dirs, [[clustered]] rows,
+    * a bloom filter on each of `bloomCols`. */
+  private def layoutWrite(
+      bucketed: DataFrame, path: String, mode: SaveMode,
+      orderKey: Seq[String], bloomCols: Seq[String]): Unit = {
+    val writer = clustered(bucketed, orderKey)
       .write
-      .mode(SaveMode.Append)
+      .mode(mode)
       .partitionBy("height_bucket")
     bloomCols.foldLeft(writer) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
@@ -83,28 +91,29 @@ object Replacing {
     * recently-appended range — at 100 TB the nightly merge touches the
     * hot tail, never the whole table — and each bucket's rewrite is a
     * dynamic-partition overwrite (crash before commit leaves the old
-    * files in place).
+    * files in place). The rewrite goes through the same writer as
+    * [[appendWrite]], so merged buckets keep the table's sort and bloom
+    * filters from `layout`.
     *
     * Reads after a merge see exactly what [[dedupView]] showed before
     * it (MergeSpec pins this), so the view stays the read contract and
     * the merge is purely a storage optimization. */
   def merge(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      orderKey: Seq[String], versionCol: Option[String] = None,
+      layout: ClickHouseDdl.Layout, versionCol: Option[String] = None,
       buckets: Option[Seq[Long]] = None): Unit = {
     val table = spark.read.parquet(path)
     val scoped = buckets match {
       case Some(bs) => table.where(col("height_bucket").isin(bs: _*))
       case None => table
     }
-    val collapsed = clustered(dedupView(scoped, orderKey, versionCol), orderKey)
+    val collapsed = dedupView(scoped, layout.orderBy, versionCol)
     // Spark refuses to overwrite a path it is reading, so the merge
     // writes to a sibling temp dir and swaps bucket dirs by FS rename —
     // per-bucket near-atomic, and a crash mid-merge leaves every bucket
     // either fully old or fully new.
     val tmpPath = s"${path.stripSuffix("/")}__merge_tmp"
-    collapsed.write.mode(SaveMode.Overwrite)
-      .partitionBy("height_bucket").parquet(tmpPath)
+    layoutWrite(collapsed, tmpPath, SaveMode.Overwrite, layout.orderBy, layout.bloom)
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val merged = fs.listStatus(new org.apache.hadoop.fs.Path(tmpPath))

@@ -114,6 +114,10 @@ class BlockStreamSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/blocks").count() === 8)
     SinkLayout.assertTables(spark, out, Seq(
       "transactions", "account_txs", "receipt_txs", "block_txs", "blocks"))
+    // the bloom columns whose fixture values are all distinct
+    SinkLayout.assertBlooms(spark, s"$out/transactions", Seq("transaction_hash"))
+    SinkLayout.assertBlooms(spark, s"$out/receipt_txs", Seq("receipt_id"))
+    SinkLayout.assertBlooms(spark, s"$out/blocks", Seq("block_hash"))
 
     // the PRODUCTION state conf actually reached the query: Spark
     // records shuffle.partitions in the checkpoint's offset metadata

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sink.Replacing
+import graft.sink.{ClickHouseDdl, Replacing}
 
 /** The background merge (ReplacingMergeTree's physical collapse): after
   * duplicated appends, `Replacing.merge` must (1) leave reads equal to
@@ -15,12 +15,18 @@ class MergeSpec extends SparkSpec {
     (0 until n).map(i => (100L + i, s"k$i", s"val$v", v.toLong))
       .toDF("block_height", "key", "payload", "version")
 
+  private val key = Seq("block_height", "key")
+  // keys k0..k39 are all distinct, so every bucket file gets a filter
+  private val layout = ClickHouseDdl.Layout(primaryKey = key, orderBy = key,
+    nullable = Set.empty, heightCol = "block_height", bloom = Seq("key"))
+
   test("merge collapses duplicate keys, preserves the dedupView contract") {
     val out = java.nio.file.Files.createTempDirectory("graft-merge").toString
-    val key = Seq("block_height", "key")
     // two appends of the same 40 keys: version 1 then version 2
-    Replacing.appendWrite(table(40, 1), s"$out/t", "block_height", key, step = 10L)
-    Replacing.appendWrite(table(40, 2), s"$out/t", "block_height", key, step = 10L)
+    Replacing.appendWrite(table(40, 1), s"$out/t", "block_height", key,
+      layout.bloom, step = 10L)
+    Replacing.appendWrite(table(40, 2), s"$out/t", "block_height", key,
+      layout.bloom, step = 10L)
 
     val before = spark.read.parquet(s"$out/t")
     assert(before.count() === 80)
@@ -31,7 +37,7 @@ class MergeSpec extends SparkSpec {
     assert(viewBefore.size === 40)
     assert(viewBefore.values.forall(_ == "val2")) // latest version wins
 
-    Replacing.merge(spark, s"$out/t", key, versionCol = Some("version"))
+    Replacing.merge(spark, s"$out/t", layout, versionCol = Some("version"))
 
     val after = spark.read.parquet(s"$out/t")
     assert(after.count() === 40) // physically collapsed
@@ -40,6 +46,7 @@ class MergeSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getString(2)).toMap
     assert(viewAfter === viewBefore) // reads unchanged by the merge
     SinkLayout.assertFiles(spark, s"$out/t", "block_height", key, 10L)
+    SinkLayout.assertBlooms(spark, s"$out/t", layout.bloom) // merged buckets keep blooms
     // no temp residue
     assert(!new java.io.File(s"$out/t__merge_tmp").exists())
   }
@@ -49,13 +56,12 @@ class MergeSpec extends SparkSpec {
     // partition the dedup window's own sort survives and hides a
     // rewrite that does not sort by the key
     val out = java.nio.file.Files.createTempDirectory("graft-merge-sort").toString
-    val key = Seq("block_height", "key")
     Replacing.appendWrite(table(400, 1).repartition(8), s"$out/t", "block_height",
       key, step = 100L)
     Replacing.appendWrite(table(400, 2).repartition(8), s"$out/t", "block_height",
       key, step = 100L)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try Replacing.merge(spark, s"$out/t", key, versionCol = Some("version"))
+    try Replacing.merge(spark, s"$out/t", layout, versionCol = Some("version"))
     finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     assert(spark.read.parquet(s"$out/t").count() === 400)
     SinkLayout.assertFiles(spark, s"$out/t", "block_height", key, 100L)
@@ -63,11 +69,10 @@ class MergeSpec extends SparkSpec {
 
   test("bucket-scoped merge touches only the requested buckets") {
     val out = java.nio.file.Files.createTempDirectory("graft-merge2").toString
-    val key = Seq("block_height", "key")
     Replacing.appendWrite(table(40, 1), s"$out/t", "block_height", key, step = 10L)
     Replacing.appendWrite(table(40, 2), s"$out/t", "block_height", key, step = 10L)
     // heights 100..139 -> buckets 100,110,120,130; merge only the tail
-    Replacing.merge(spark, s"$out/t", key, versionCol = Some("version"),
+    Replacing.merge(spark, s"$out/t", layout, versionCol = Some("version"),
       buckets = Some(Seq(130L)))
     val t = spark.read.parquet(s"$out/t")
     assert(t.where(col("height_bucket") === 130L).count() === 10)
@@ -76,7 +81,6 @@ class MergeSpec extends SparkSpec {
 
   test("TTL drop removes expired buckets as a metadata-only operation") {
     val out = java.nio.file.Files.createTempDirectory("graft-ttl").toString
-    val key = Seq("block_height", "key")
     Replacing.appendWrite(table(40, 1), s"$out/t", "block_height", key, step = 10L)
     // record surviving-bucket file layout before the drop
     def files(b: Long) = {
