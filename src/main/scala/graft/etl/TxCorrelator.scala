@@ -391,21 +391,24 @@ object TxCorrelator {
   }
 
   /** Production state-store defaults for the correlator wire — the
-    * knob-by-knob rationale and the measured 10×/100× checkpoint and
+    * knob-by-knob rationale and the measured checkpoint, commit and
     * latency numbers live on the doc of
     * `graft.stream.BlockStream.ProductionStateConf` (which aliases
     * this map; defined here because both the streaming pipeline AND
     * the pack's bounded vehicle [[correlateBatchTws]] apply it, and
     * etl must not depend on stream). Summary: retain 2 state versions
     * instead of 100, RocksDB changelog checkpointing (per-batch deltas,
-    * not full SST snapshots), 8 state partitions instead of 32 (the
-    * correlator keys by a single constant — 31 of 32 stores were
-    * permanently empty yet paid per-batch commit fsyncs). */
+    * not full SST snapshots), and ONE state partition: the correlator
+    * keys every block by the constant 0 ([[correlateStreamTws]]), so
+    * exactly one store can ever hold a row, and every further store is
+    * an empty RocksDB instance that still loads and commits its
+    * changelog on each trigger. Checkpoints that already exist keep the
+    * partition count recorded in their offset log. */
   val ProductionStateConf: Map[String, String] = Map(
     "spark.sql.streaming.minBatchesToRetain" -> "2",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true",
-    "spark.sql.shuffle.partitions" -> "8")
+    "spark.sql.shuffle.partitions" -> "1")
 
   /** The RocksDB state store provider [[correlateStreamTws]] requires. */
   val RocksDbProvider =
@@ -447,8 +450,8 @@ object TxCorrelator {
     // (round 12: p4 1.8 s idle vs 10–22 s on a degraded-I/O host).
     // Set-and-restore is enough: StreamExecution snapshots the session
     // conf when the query STARTS (internal session clone), so restoring
-    // right after start() leaves the running stream pinned at 8 state
-    // partitions + changelog checkpointing while the caller's batch
+    // right after start() leaves the running stream pinned at 1 state
+    // partition + changelog checkpointing while the caller's batch
     // shuffle width is untouched. Results-neutral — only commit/fsync
     // count changes (TwsCorrelatorSpec pins output equivalence).
     val saved = ProductionStateConf.keys
@@ -489,7 +492,7 @@ object TxCorrelator {
         q.processAllAvailable()
         // observation hook while the query is still live (the spec
         // reads lastProgress.stateOperators to pin that the conf
-        // reached the wire — 8 state partitions, not the session's 32)
+        // reached the wire — 1 state partition, not the session's width)
         inspect(q)
       } finally q.stop()
     } finally graft.util.Fs.deleteRecursively(ckDir)

@@ -97,33 +97,58 @@ object Replacing {
     *
     * Reads after a merge see exactly what [[dedupView]] showed before
     * it (MergeSpec pins this), so the view stays the read contract and
-    * the merge is purely a storage optimization. */
+    * the merge is purely a storage optimization.
+    *
+    * Spark refuses to overwrite a path it is reading, so the merge
+    * writes to `<path>__merge_tmp` and swaps each bucket dir in three
+    * FS steps: park the old bucket in `<path>__merge_old`, rename the
+    * new one into place, delete the parked one. A crash at any point
+    * leaves each bucket's rows either in place or parked, and the next
+    * merge first puts back every parked bucket whose target is missing
+    * — so every bucket is either fully old or fully new. */
   def merge(
       spark: org.apache.spark.sql.SparkSession, path: String,
       layout: ClickHouseDdl.Layout, versionCol: Option[String] = None,
       buckets: Option[Seq[Long]] = None): Unit = {
+    import org.apache.hadoop.fs.Path
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmpPath = new Path(s"${path.stripSuffix("/")}__merge_tmp")
+    val oldPath = new Path(s"${path.stripSuffix("/")}__merge_old")
+    def move(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"merge: cannot rename $from to $to")
+    // recover a crashed swap before reading: a parked bucket whose
+    // target is gone is the only copy of its rows; one whose target
+    // exists was already replaced
+    if (fs.exists(oldPath)) {
+      fs.listStatus(oldPath).foreach { st =>
+        val target = new Path(hPath, st.getPath.getName)
+        if (fs.exists(target)) fs.delete(st.getPath, true)
+        else move(st.getPath, target)
+      }
+      fs.delete(oldPath, true)
+    }
     val table = spark.read.parquet(path)
     val scoped = buckets match {
       case Some(bs) => table.where(col("height_bucket").isin(bs: _*))
       case None => table
     }
     val collapsed = dedupView(scoped, layout.orderBy, versionCol)
-    // Spark refuses to overwrite a path it is reading, so the merge
-    // writes to a sibling temp dir and swaps bucket dirs by FS rename —
-    // per-bucket near-atomic, and a crash mid-merge leaves every bucket
-    // either fully old or fully new.
-    val tmpPath = s"${path.stripSuffix("/")}__merge_tmp"
-    layoutWrite(collapsed, tmpPath, SaveMode.Overwrite, layout.orderBy, layout.bloom)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged = fs.listStatus(new org.apache.hadoop.fs.Path(tmpPath))
+    layoutWrite(collapsed, tmpPath.toString, SaveMode.Overwrite,
+      layout.orderBy, layout.bloom)
+    val merged = fs.listStatus(tmpPath)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("height_bucket="))
+    fs.mkdirs(oldPath)
     merged.foreach { st =>
-      val target = new org.apache.hadoop.fs.Path(hPath, st.getPath.getName)
-      fs.delete(target, true)
-      fs.rename(st.getPath, target)
+      val target = new Path(hPath, st.getPath.getName)
+      val parked = new Path(oldPath, st.getPath.getName)
+      if (fs.exists(target)) move(target, parked)
+      move(st.getPath, target)
+      fs.delete(parked, true)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(tmpPath), true)
+    fs.delete(oldPath, true)
+    fs.delete(tmpPath, true)
   }
 
   /** TTL retention (ClickHouse `TTL ... DELETE` at part granularity):

@@ -48,13 +48,20 @@ object BlockStream {
     *    instead of full SST snapshots — per-batch commit cost tracks
     *    the batch's writes, not the store size (snapshots still happen,
     *    in the background at `minDeltasForSnapshot` cadence).
-    *  - `shuffle.partitions = 8` for the stream's session: the
-    *    correlator keys by a single constant (ordered processing), so
-    *    31 of 32 stores were PERMANENTLY EMPTY yet each paid per-batch
-    *    snapshot/commit overhead. 8 keeps headroom for the foreachBatch
-    *    fan-out joins without 3/4 of the stores being dead weight.
-    *    (Pinned per NEW checkpoint only — on resume Spark repins the
-    *    value recorded in the checkpoint's own offset log.)
+    *  - `shuffle.partitions = 1` for the stream's session: the
+    *    correlator keys every block by one constant (ordered
+    *    processing), so exactly one state store can hold a row. Every
+    *    further partition is an empty RocksDB store that still loads
+    *    and fsyncs its changelog on every trigger. Over a traced
+    *    perfbench daemon run (4 cores) the summed
+    *    `stateOperators.commitTimeMs` was 4.6–5.9 s at 8 partitions
+    *    and 0.4–0.9 s at 1, and Spark tasks fell from 517–611 to
+    *    165–223. The fan-out has no join, and Spark turns AQE off in a
+    *    stateful query, so the `foreachBatch` writes' shuffles also run
+    *    at this width.
+    *    Pinned per NEW checkpoint only: on resume Spark repins the
+    *    value recorded in the checkpoint's own offset log, so a
+    *    checkpoint started at 8 keeps its 8 stores (BlockStreamSpec).
     *
     * Applied by [[runTransactionsPipeline]] to a cloned session; the
     * r12 re-probe (BASELINE.md round-12 table) measured checkpoint
@@ -97,13 +104,12 @@ object BlockStream {
   def readBlockSource(
       spark: SparkSession, pathOrUrl: String,
       fetcher: String = "dir", startHeight: Long = 0L,
-      maxBlocksPerTrigger: Long = 1000L, numPartitions: Int = 8): DataFrame =
+      maxBlocksPerTrigger: Long = 1000L): DataFrame =
     spark.readStream.format("graft-blocks")
       .option(if (fetcher == "http") "url" else "path", pathOrUrl)
       .option("fetcher", fetcher)
       .option("startHeight", startHeight)
       .option("maxBlocksPerTrigger", maxBlocksPerTrigger)
-      .option("numPartitions", numPartitions)
       .load()
       .select(from_json(col("value"), parseSchema, permissive).as("b"))
       .select(col("b.*"))
@@ -306,7 +312,7 @@ object BlockStream {
     * CLONED SparkSession carrying [[ProductionStateConf]] so the
     * caller's session is untouched. Conf-vs-checkpoint safety: Spark
     * persists `shuffle.partitions` in the offset log and REPINS it on
-    * resume, so an existing 32-partition checkpoint keeps 32
+    * resume, so an existing 8-partition checkpoint keeps 8
     * regardless of the conf — the pinned value only shapes NEW
     * checkpoints. */
   def runTransactionsPipeline(

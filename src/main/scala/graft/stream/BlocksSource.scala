@@ -7,6 +7,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -22,8 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Re-expression as a DataSourceV2 `MicroBatchStream`:
   *  - the OFFSET is the block height itself — resume/checkpoint/rewind
   *    are height arithmetic, exactly the reference's cursor (S3);
-  *  - each micro-batch is a height RANGE, split into `numPartitions`
-  *    contiguous sub-ranges fetched in parallel (the N fetchers);
+  *  - each micro-batch is a height RANGE, split into
+  *    `min(MaxFetchers, defaultParallelism, blocks)` contiguous
+  *    sub-ranges fetched in parallel (the N fetchers); a range beyond
+  *    the task slots would only queue for a second task wave;
   *  - backpressure is admission control: `maxBlocksPerTrigger` caps the
   *    range per batch (the bounded channel, S1);
   *  - AvailableNow drains to the head observed at query start (K4).
@@ -44,6 +47,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object BlocksSource {
   val ShortName = "graft-blocks"
+
+  /** Most sub-ranges one batch splits into: the reference's example
+    * `NUM_FETCHING_THREADS` (SURVEY.md §6 baseline table). */
+  val MaxFetchers = 8
 
   val schema: StructType = StructType(Seq(
     StructField("block_height", LongType, nullable = false),
@@ -196,8 +203,6 @@ final class BlocksMicroBatchStream(properties: util.Map[String, String])
     .orElse(opts.get("startHeight").map(_.toLong)).getOrElse(0L)
   private val maxPerTrigger = opts.get("maxblockspertrigger")
     .orElse(opts.get("maxBlocksPerTrigger")).map(_.toLong).getOrElse(1000L)
-  private val numPartitions = opts.get("numpartitions")
-    .orElse(opts.get("numPartitions")).map(_.toInt).getOrElse(8)
 
   // AvailableNow: pin the drain target at query start
   @volatile private var availableNowTarget: Option[Long] = None
@@ -241,12 +246,13 @@ final class BlocksMicroBatchStream(properties: util.Map[String, String])
     val lo = start.asInstanceOf[HeightOffset].h + 1 // inclusive
     val hi = end.asInstanceOf[HeightOffset].h       // inclusive
     if (hi < lo) return Array.empty
-    val n = math.min(numPartitions.toLong, hi - lo + 1).toInt
-    val step = (hi - lo + 1 + n - 1) / n
-    (0 until n).map { i =>
-      val a = lo + i * step
-      val b = math.min(hi, a + step - 1)
-      HeightRangePartition(a, b): InputPartition
+    val slots = SparkSession.active.sparkContext.defaultParallelism
+    val len = hi - lo + 1
+    val n = Seq(BlocksSource.MaxFetchers.toLong, slots.toLong, len).min
+    // even split: range sizes differ by at most one, none is empty
+    (0L until n).map { i =>
+      HeightRangePartition(lo + i * len / n, lo + (i + 1) * len / n - 1)
+        : InputPartition
     }.toArray
   }
 

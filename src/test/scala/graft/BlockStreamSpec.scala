@@ -2,9 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import graft.etl.ActionsExtract
+import org.apache.spark.sql.streaming.Trigger
+import graft.etl.{ActionsExtract, TxCorrelator, TxFanout}
 import graft.fixtures.BlockFixtures
+import graft.schema.BlockWithTxHashes
+import graft.sink.{ClickHouseDdl, Replacing}
 import graft.stream.BlockStream
 
 /** M3 streaming semantics (SURVEY.md §2.9): file-stream source,
@@ -121,23 +125,73 @@ class BlockStreamSpec extends SparkSpec {
 
     // the PRODUCTION state conf actually reached the query: Spark
     // records shuffle.partitions in the checkpoint's offset metadata
-    // (the value it repins on every resume), so the pinned 8 must be
-    // what the checkpoint carries — not the session's 32. The caller's
+    // (the value it repins on every resume), so the pinned 1 must be
+    // what the checkpoint carries — not the session's 4. The caller's
     // session must be untouched (the clone's whole point).
-    val off = java.nio.file.Files.list(
-      java.nio.file.Paths.get(cp, "offsets"))
-    val firstOffset = try {
+    assert(offsetMeta(cp).head.contains(partitions("1")),
+      s"checkpoint offset metadata missing the pinned partitions: ${offsetMeta(cp).head}")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") !== "1",
+      "ProductionStateConf leaked into the caller's session")
+  }
+
+  test("a transactions checkpoint started with 8 state partitions resumes " +
+    "with its 8 and completes the chain") {
+    val in = tmp(); val out = tmp(); val cp = tmp()
+    import graft.schema.Blocks.encoder
+    val blocks = BlockFixtures.blocks(8)
+    spark.createDataset(blocks.take(4))(encoder)
+      .toDF().coalesce(1).write.mode("append").json(in)
+    // the checkpoint a release with 8 state partitions made: the
+    // pipeline's source, correlator and transactions write, on a
+    // session clone whose state conf gives 8 partitions
+    val old = spark.newSession()
+    (BlockStream.ProductionStateConf + ("spark.sql.shuffle.partitions" -> "8"))
+      .foreach { case (k, v) => old.conf.set(k, v) }
+    TxCorrelator.ensureRocksDb(old)
+    val stream = BlockStream.readBlockStream(old, in)
+      .where(col("_corrupt_record").isNull && col("block").isNotNull)
+      .drop("_corrupt_record")
+      .as[BlockWithTxHashes](encoder)
+    val layout = ClickHouseDdl.layouts("transactions")
+    val q1 = TxCorrelator.correlateStreamTws(stream).writeStream
+      .option("checkpointLocation", cp)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: Dataset[TxCorrelator.CompletedTx], _: Long) =>
+        Replacing.appendWrite(TxFanout.transactions(b), s"$out/transactions",
+          layout.heightCol, layout.orderBy, layout.bloom)
+      }
+      .start()
+    q1.awaitTermination()
+    assert(offsetMeta(cp).head.contains(partitions("8")))
+    assert(spark.read.parquet(s"$out/transactions").count() === 3 + 2)
+
+    spark.createDataset(blocks.drop(4))(encoder)
+      .toDF().coalesce(1).write.mode("append").json(in)
+    val q2 = BlockStream.runTransactionsPipeline(spark, in, out, cp)
+    q2.awaitTermination()
+    // Spark repinned the checkpoint's 8 over the conf's 1: the state
+    // lives in 8 stores, and the resumed query reads all of them
+    assert(offsetMeta(cp).last.contains(partitions("8")),
+      s"resumed batch did not keep 8 partitions: ${offsetMeta(cp).last}")
+    assert(q2.lastProgress.stateOperators.head.numShufflePartitions === 8L)
+    val txs = spark.read.parquet(s"$out/transactions")
+    assert(txs.count() === 7 + 4)
+    val t103 = txs.where(col("transaction_hash") === "tx103").head()
+    assert(t103.getAs[Long]("last_block_height") === 104L)
+  }
+
+  private def partitions(n: String) = s"\"spark.sql.shuffle.partitions\":\"$n\""
+
+  /** The offset log's entries in batch order. */
+  private def offsetMeta(cp: String): Seq[String] = {
+    val off = Files.list(java.nio.file.Paths.get(cp, "offsets"))
+    val files = try {
       import scala.jdk.CollectionConverters._
       off.iterator().asScala.toSeq
         .filter(_.getFileName.toString.forall(_.isDigit)) // skip .crc
-        .minBy(_.getFileName.toString.toLong)
+        .sortBy(_.getFileName.toString.toLong)
     } finally off.close()
-    val meta = new String(
-      java.nio.file.Files.readAllBytes(firstOffset), "UTF-8")
-    assert(meta.contains("\"spark.sql.shuffle.partitions\":\"8\""),
-      s"checkpoint offset metadata missing the pinned partitions: $meta")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") !== "8",
-      "ProductionStateConf leaked into the caller's session")
+    files.map(f => new String(Files.readAllBytes(f), "UTF-8"))
   }
 
   test("parent-session progress listener sees the cloned-session transactions query") {

@@ -6,7 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.fixtures.BlockFixtures
-import graft.stream.{BlockStream, DirBlockFetcher}
+import graft.stream.{BlockStream, BlocksMicroBatchStream, DirBlockFetcher, HeightOffset,
+  HeightRangePartition}
 
 /** Native height-offset block source (S1-native: the reference's
   * parallel fetcher + bounded channel as a DataSourceV2
@@ -114,6 +115,25 @@ class BlocksSourceSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/actions").count() === batch.count())
     val quarantined = spark.read.json(s"$out/_quarantine")
     assert(quarantined.where(col("raw").contains("not json")).count() === 1)
+  }
+
+  test("a batch splits into at most one contiguous range per task slot") {
+    val slots = spark.sparkContext.defaultParallelism
+    assert(slots === 4, "test precondition: local[4]")
+    val stream = new BlocksMicroBatchStream(java.util.Map.of("path", tmp()))
+    val lo = 100L
+    for (n <- Seq(1L, 3L, 9L, 12L, 1000L)) {
+      val hi = lo + n - 1
+      val parts = stream.planInputPartitions(HeightOffset(lo - 1), HeightOffset(hi))
+        .map(_.asInstanceOf[HeightRangePartition]).toSeq
+      assert(parts.size === Seq(8L, slots.toLong, n).min, s"n=$n: $parts")
+      assert(parts.forall(p => p.from <= p.to), s"n=$n: empty range in $parts")
+      // contiguous cover of [lo, hi]: no gap, no overlap
+      assert(parts.head.from === lo && parts.last.to === hi, s"n=$n: $parts")
+      parts.zip(parts.tail).foreach { case (a, b) =>
+        assert(b.from === a.to + 1, s"n=$n: $parts")
+      }
+    }
   }
 
   test("dir fetcher: head height and skipped fetches") {

@@ -51,6 +51,30 @@ class MergeSpec extends SparkSpec {
     assert(!new java.io.File(s"$out/t__merge_tmp").exists())
   }
 
+  test("merge after a crash mid-swap restores the parked bucket") {
+    val out = java.nio.file.Files.createTempDirectory("graft-merge-crash").toString
+    Replacing.appendWrite(table(40, 1), s"$out/t", "block_height", key, step = 10L)
+    Replacing.appendWrite(table(40, 2), s"$out/t", "block_height", key, step = 10L)
+    def view() = Replacing
+      .dedupView(spark.read.parquet(s"$out/t"), key, versionCol = Some("version"))
+      .select("block_height", "key", "payload")
+      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getString(2)).toMap
+    val viewBefore = view()
+    assert(viewBefore.size === 40)
+    // the state a crash leaves between parking bucket 110 and renaming
+    // its merged copy into place: the old rows parked, the target gone
+    val parked = java.nio.file.Paths.get(s"$out/t__merge_old")
+    java.nio.file.Files.createDirectories(parked)
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$out/t/height_bucket=110"),
+      parked.resolve("height_bucket=110"))
+
+    Replacing.merge(spark, s"$out/t", layout, versionCol = Some("version"))
+
+    assert(view() === viewBefore)
+    assert(spark.read.parquet(s"$out/t").count() === 40)
+    assert(!java.nio.file.Files.exists(parked))
+  }
+
   test("merge rewrites each bucket file in ORDER BY order") {
     // multi-partition input: with the tiny shuffle coalesced to one
     // partition the dedup window's own sort survives and hides a

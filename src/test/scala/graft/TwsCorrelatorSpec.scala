@@ -124,17 +124,17 @@ class TwsCorrelatorSpec extends SparkSpec {
   }
 
   test("pack vehicle (correlateBatchTws) runs the PRODUCTION state conf: " +
-    "8 state partitions on the wire, caller session untouched") {
+    "1 state partition on the wire, caller session untouched") {
     // Round-12 verdict: the p4–p7/p11 vehicles benched with 32 state
     // stores × full-snapshot checkpointing — ~4× the fsyncs the
     // production wire pays — so their times tracked host fsync latency
     // (p4 1.8 s idle vs 10–22 s degraded). correlateBatchTws now
     // applies TxCorrelator.ProductionStateConf around query start;
-    // pin BOTH directions: the stream saw 8 partitions (default would
+    // pin BOTH directions: the stream saw 1 partition (default would
     // be the session's shuffle width), and the caller's session conf
     // is restored (set-and-restore, not a leak).
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    assert(before !== "8", "test precondition: session must not already be at 8")
+    assert(before !== "1", "test precondition: session must not already be at 1")
     var progress: Option[org.apache.spark.sql.streaming.StreamingQueryProgress] =
       None
     val out = TxCorrelator.correlateBatchTws(
@@ -143,7 +143,7 @@ class TwsCorrelatorSpec extends SparkSpec {
     assert(out.count() > 0) // the vehicle still correlates
     val so = progress.getOrElse(fail("no progress captured")).stateOperators
     assert(so.nonEmpty, "expected a stateful operator in the progress")
-    assert(so.head.numShufflePartitions === 8L,
+    assert(so.head.numShufflePartitions === 1L,
       s"production conf did not reach the wire: ${so.head.numShufflePartitions}")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
       "ProductionStateConf leaked into the caller's session")
