@@ -18,8 +18,14 @@ import graft.ext.{Curation, Dedup}
   *   [--benchmark <parquet>]      // decontaminate against this corpus
   *   [--bench-text-col text]
   *   [--contam-max-e4 2000]       // drop docs at/above this fraction
+  *   [--budget <tokens>]          // keep the best-quality prefix that fits
   *   [--shards 16]
+  *   [--report-source <col>]      // per-source diversity + PSI drift report
+  *   [--index-health fam=dir,...] // tombstone-debt report per index
   * }}}
+  *
+  * Any other argument, or a value flag without its value, is a usage
+  * error (exit 2).
   *
   * Stage order is the published one (Gopher → exact dedup → near-dup →
   * decontamination → shard): quality first so the expensive set math
@@ -35,8 +41,7 @@ import graft.ext.{Curation, Dedup}
   * corpus, and the output write partitions by shard — at 100 TB each
   * stage is the same bounded-shuffle plan its pack query runs, and
   * nothing beyond the funnel counters (one row per stage) ever reaches
-  * the driver. The streaming twin of stages 1–5 is
-  * [[graft.ext.Curation.curationStream]]; this is the backfill path.
+  * the driver.
   */
 object CurateMain {
 
@@ -46,7 +51,6 @@ object CurateMain {
       |  [--benchmark <parquet>] [--bench-text-col text]
       |  [--contam-max-e4 2000] [--budget <tokens>] [--shards 16]
       |  [--report-source <col>]      // per-source diversity + PSI drift report
-      |  [--drift-baseline <dir>]     // freeze the online-monitor baseline artifact
       |  [--index-health fam=dir,...] // tombstone-debt report per persisted index
       |                               //   (fam: minhash|ivf|ivfpq|band)""".stripMargin
 
@@ -62,25 +66,47 @@ object CurateMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args)
-    finally spark.stop()
+    catch {
+      case e: IllegalArgumentException =>
+        System.err.println(s"${e.getMessage}\n$usage"); sys.exit(2)
+    } finally spark.stop()
   }
 
-  private def opt(args: Array[String], name: String): Option[String] = {
-    val i = args.indexOf(name)
-    if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-  }
+  private val valueFlags = Set("--id-col", "--text-col", "--benchmark",
+    "--bench-text-col", "--contam-max-e4", "--budget", "--shards",
+    "--report-source", "--index-health")
+
+  /** The flags after `<in> <out>`, flag -> value (`--near-dup` maps to
+    * ""). Any other argument, or a value flag without its value, is a
+    * usage error: a typo'd flag must not silently run a different
+    * curation (`--shard 4` would write 16 shards). */
+  private[graft] def parseFlags(
+      rest: List[String], seen: Map[String, String] = Map.empty)
+      : Map[String, String] =
+    rest match {
+      case Nil => seen
+      case "--near-dup" :: tail => parseFlags(tail, seen + ("--near-dup" -> ""))
+      case f :: v :: tail if valueFlags(f) && !v.startsWith("--") =>
+        parseFlags(tail, seen + (f -> v))
+      case f :: _ if valueFlags(f) =>
+        throw new IllegalArgumentException(s"$f needs a value")
+      case other :: _ =>
+        throw new IllegalArgumentException(s"unknown argument: $other")
+    }
 
   private[graft] def run(spark: SparkSession, args: Array[String]): Unit = {
     val in = args(0)
     val outDir = args(1)
-    val idCol = opt(args, "--id-col").getOrElse("doc_id")
-    val textCol = opt(args, "--text-col").getOrElse("text")
-    val nearDup = args.contains("--near-dup")
-    val benchmark = opt(args, "--benchmark")
-    val benchTextCol = opt(args, "--bench-text-col").getOrElse("text")
-    val contamMaxE4 = opt(args, "--contam-max-e4").map(_.toLong).getOrElse(2000L)
-    val budget = opt(args, "--budget").map(_.toLong)
-    val nShards = opt(args, "--shards").map(_.toInt).getOrElse(16)
+    val flags = parseFlags(args.drop(2).toList)
+    def opt(name: String): Option[String] = flags.get(name)
+    val idCol = opt("--id-col").getOrElse("doc_id")
+    val textCol = opt("--text-col").getOrElse("text")
+    val nearDup = flags.contains("--near-dup")
+    val benchmark = opt("--benchmark")
+    val benchTextCol = opt("--bench-text-col").getOrElse("text")
+    val contamMaxE4 = opt("--contam-max-e4").map(_.toLong).getOrElse(2000L)
+    val budget = opt("--budget").map(_.toLong)
+    val nShards = opt("--shards").map(_.toInt).getOrElse(16)
 
     val funnel = collection.mutable.LinkedHashMap[String, (Long, Long)]()
     def stage(name: String, df: DataFrame): DataFrame = {
@@ -99,7 +125,7 @@ object CurateMain {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     stage("input", flagged)
 
-    // 1. Gopher gates (stateless; shared verbatim with the stream twin)
+    // 1. Gopher gates (stateless column expressions)
     val quality = stage("quality",
       flagged.where(Curation.qualityPass)
         .select("doc_id", "text", "toks", "ntok")
@@ -201,7 +227,7 @@ object CurateMain {
     //    collapse its diversity" audit a production pipeline publishes
     //    next to the funnel. Both are reduced-frame math after one
     //    shingle pass / one bucket-count shuffle.
-    opt(args, "--report-source").foreach { srcCol =>
+    opt("--report-source").foreach { srcCol =>
       // survivors come back from the JUST-WRITTEN corpus parquet — the
       // dedup-join + per-shard window lineage above is unpersisted
       // after the write, so deriving them from `sharded` would re-run
@@ -229,11 +255,10 @@ object CurateMain {
     // 7b. optional tombstone-debt report over persisted index
     //     artifacts ([[graft.ext.IndexHealth.tombstoneReport]]): one
     //     row per index with the logical-delete fraction and the
-    //     compaction-policy verdict — the batch-side twin of the
-    //     online monitor's index_health rows, published beside the
-    //     funnel so a release pipeline sees "compact before shipping"
-    //     in the same place it reads the curation stats.
-    opt(args, "--index-health").foreach { spec =>
+    //     compaction-policy verdict, published beside the funnel so a
+    //     release pipeline sees "compact before shipping" in the same
+    //     place it reads the curation stats.
+    opt("--index-health").foreach { spec =>
       val reports = spec.split(',').toSeq.map { entry =>
         entry.split("=", 2) match {
           case Array(fam, d) =>
@@ -248,41 +273,6 @@ object CurateMain {
         .write.mode("overwrite").parquet(s"$outDir/_report/index_health")
       println(s"[curate] wrote $outDir/_report/index_health " +
         s"(${reports.size} indexes)")
-    }
-
-    // 8. optional DRIFT BASELINE artifact for the ONLINE monitor
-    //    ([[graft.ext.Curation.driftMonitorStream]]): the survivors'
-    //    quality-score bucket distribution frozen as the reference
-    //    every streaming micro-batch PSIs against, plus the curated
-    //    corpus's KMV sketch as the novelty seed — so the live crawl
-    //    measures both score drift AND new-content rate against the
-    //    CERTIFIED corpus this run just wrote, not against whatever
-    //    the stream saw first.
-    opt(args, "--drift-baseline").foreach { bDir =>
-      val survivors = spark.read.parquet(s"$outDir/corpus")
-        .select(col("text"))
-        .withColumn("quality_e4",
-          floor(graft.ext.TextAnalysis.qualityScore(col("text")) * 10000)
-            .cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val base = graft.ext.Splits
-        .driftBaselineBuild(survivors, "quality_e4")
-      graft.ext.Splits.driftBaselineWrite(spark, base, bDir)
-      val skRow = survivors
-        .select(explode(Dedup.shingleHashArray(
-          Dedup.tokenHashes(col("text")), 3)).as("h"))
-        .agg(graft.ext.Kmv.sketch(col("h")).as("sk")).head()
-      val seed: Seq[Long] =
-        if (skRow.isNullAt(0)) Seq.empty else skRow.getSeq[Long](0)
-      import spark.implicits._
-      // the k stamp rides with the kept set: driftMonitorStream REJECTS
-      // a monitor whose k differs from the seed's (merging across k
-      // silently skews est_before/novel_est)
-      Seq((seed, graft.ext.Kmv.DefaultK)).toDF("sk", "k").coalesce(1)
-        .write.mode("overwrite").parquet(s"$bDir/sketch")
-      survivors.unpersist()
-      println(s"[curate] wrote drift baseline $bDir " +
-        s"(buckets=${base.nb.size}, n=${base.n}, sketch=${seed.size})")
     }
   }
 }

@@ -216,10 +216,4 @@ object ActionsExtract {
         col("receipt.receiver_id").as("account_id"),
         col("receipt.data.data_id").as("data_id"),
         textOrBase64(col("receipt.data.data")).as("data"))
-
-  /** All three tables off one shared indexed frame. */
-  def extractAll(blocks: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val idx = indexedReceipts(blocks)
-    (actions(idx), events(idx), data(idx))
-  }
 }

@@ -250,22 +250,10 @@ object TxCorrelator {
     *    100 000-entry pending cache writes ~10 RocksDB keys where a
     *    single serialized CacheState blob would be rewritten whole
     *    every trigger.
-    *  - TTL (`stateTtl`) expires INDIVIDUAL stuck entries — a receipt
-    *    whose transaction never resolves ages out of `receipt_to_tx`
-    *    alone — instead of wiping the cache. The reference's TxCache
-    *    never expires (grows unboundedly on stuck txs, SURVEY §2.4
-    *    divergence note); with a TTL the correlator behaves like its
-    *    lenient catch-up mode (J8) for expired entries: the late
-    *    outcome is skipped, the tx never completes. Expiry is
-    *    IMPLEMENTED IN THE PROCESSOR (per-entry last-write stamps in
-    *    the value blobs, filtered at read) rather than via the
-    *    built-in `TTLConfig`: TTL forces `TimeMode.ProcessingTime`,
-    *    whose timer-enabled operator variant sends plan codegen into a
-    *    pathological code-string blowup on this output schema in
-    *    4.1.2 (minutes of CPU before first batch) — and the manual
-    *    form also lets the chain cursor correctly SURVIVE idle gaps,
-    *    where a blanket TTLConfig would expire the J9 prev-hash check
-    *    along with the stuck entries.
+    *  - The values stay java-serialized blobs rather than struct
+    *    state schemas: the deeply nested ReceiptView/PendingTx
+    *    schemas make the operator's schema handling stringify them
+    *    pathologically in 4.1.2 (minutes of CPU before first batch).
     *
     * The correlation LOGIC is unchanged — the same pure
     * `processBlock` fold; state variables are materialized into a
@@ -274,16 +262,13 @@ object TxCorrelator {
     * fully incremental reads would mean rewriting processBlock against
     * point lookups, which profiling hasn't demanded.
     */
-  final class CorrelatorProcessor(
-      strict: Boolean, stateTtl: Option[java.time.Duration])
+  final class CorrelatorProcessor(strict: Boolean)
       extends StatefulProcessor[Int, BlockWithTxHashes, CompletedTx] {
     import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimeMode, TimerValues, ValueState}
 
-    // values are (lastWriteMs, V) java-serialized blobs: the state
-    // store treats values as bytes either way, the stamp carries the
-    // per-entry TTL clock, and the deeply nested ReceiptView/PendingTx
-    // struct schemas never reach the operator's schema handling (which
-    // stringifies them pathologically in 4.1.2 — see class scaladoc).
+    // values are (0L, V) java-serialized blobs: the Long is an unused
+    // slot, kept because checkpoints written by earlier revisions
+    // (which stamped a per-entry expiry clock there) must still resume
     @transient private var receiptToTx: MapState[String, (Long, String)] = _
     @transient private var dataReceipts: MapState[String, (Long, ReceiptView)] = _
     @transient private var transactions: MapState[String, (Long, PendingTx)] = _
@@ -303,54 +288,33 @@ object TxCorrelator {
         "cursor", Encoders.javaSerialization[CorrelatorCursor], TTLConfig.NONE)
     }
 
-    /** Load surviving entries (stamp within TTL); expired ones are
-      * removed from the store here — expiry happens at read time, like
-      * the built-in TTL, but per entry and without the timer-enabled
-      * operator variant. */
-    private def loadAlive[V](
-        ms: MapState[String, (Long, V)], cutoff: Long): Map[String, V] = {
-      val alive = Map.newBuilder[String, V]
-      val dead = List.newBuilder[String]
-      ms.iterator().foreach { case (k, (touched, v)) =>
-        if (touched >= cutoff) alive += k -> v else dead += k
-      }
-      dead.result().foreach(ms.removeKey)
-      alive.result()
-    }
+    private def load[V](ms: MapState[String, (Long, V)]): Map[String, V] =
+      ms.iterator().map { case (k, (_, v)) => k -> v }.toMap
 
-    /** Write only the delta: removed keys, and added/changed values
-      * (stamped `now`). An entry whose value is unchanged keeps its
-      * old stamp — write-once entries age out after `stateTtl`, which
-      * is exactly the stuck-receipt leak the TTL exists to bound. */
+    /** Write only the delta: removed keys, and added/changed values. */
     private def diffApply[V](
         ms: MapState[String, (Long, V)],
-        before: Map[String, V], after: Map[String, V], now: Long): Unit = {
+        before: Map[String, V], after: Map[String, V]): Unit = {
       before.keysIterator
         .foreach(k => if (!after.contains(k)) ms.removeKey(k))
       after.foreach { case (k, v) =>
-        if (!before.get(k).contains(v)) ms.updateValue(k, (now, v))
+        if (!before.get(k).contains(v)) ms.updateValue(k, (0L, v))
       }
     }
 
     override def handleInputRows(
         key: Int, rows: Iterator[BlockWithTxHashes],
         timerValues: TimerValues): Iterator[CompletedTx] = {
-      val now = System.currentTimeMillis()
-      val cutoff = stateTtl.map(now - _.toMillis).getOrElse(Long.MinValue)
       val cur =
         if (cursor.exists()) Option(cursor.get()) else None
-      // the chain cursor deliberately does NOT expire: a long-idle
-      // stream must still enforce the J9 prev-hash check on resume
       val st0 = CacheState(
-        loadAlive(receiptToTx, cutoff),
-        loadAlive(dataReceipts, cutoff),
-        loadAlive(transactions, cutoff),
+        load(receiptToTx), load(dataReceipts), load(transactions),
         cur.map(_.lastBlockHeight).getOrElse(0L),
         cur.flatMap(_.prevBlockHash))
       val (st2, out) = runOrdered(st0, rows, strict)
-      diffApply(receiptToTx, st0.receiptToTx, st2.receiptToTx, now)
-      diffApply(dataReceipts, st0.dataReceipts, st2.dataReceipts, now)
-      diffApply(transactions, st0.transactions, st2.transactions, now)
+      diffApply(receiptToTx, st0.receiptToTx, st2.receiptToTx)
+      diffApply(dataReceipts, st0.dataReceipts, st2.dataReceipts)
+      diffApply(transactions, st0.transactions, st2.transactions)
       cursor.update(CorrelatorCursor(st2.lastBlockHeight, st2.prevBlockHash))
       out.iterator
     }
@@ -361,9 +325,7 @@ object TxCorrelator {
     * (checkpoint-recovered — replaces the reference's 1000-block
     * rewind S4). Append output; micro-batches are sorted by height
     * inside the group; cross-batch order is the source's contract
-    * (S1). Optional per-entry state TTL is processor-implemented — see
-    * [[CorrelatorProcessor]] for why not `TTLConfig`; the operator
-    * stays in `TimeMode.None` either way.
+    * (S1). Like the reference's TxCache, state never expires.
     *
     * MEMORY CONTRACT: the single stateful task materializes each
     * micro-batch once to sort it (streaming forbids a plan-level sort
@@ -379,14 +341,14 @@ object TxCorrelator {
     * Requires the RocksDB state store provider
     * (`spark.sql.streaming.stateStore.providerClass`). */
   def correlateStreamTws(
-      blocks: Dataset[BlockWithTxHashes], strict: Boolean = false,
-      stateTtl: Option[java.time.Duration] = None): Dataset[CompletedTx] = {
+      blocks: Dataset[BlockWithTxHashes], strict: Boolean = false)
+      : Dataset[CompletedTx] = {
     import org.apache.spark.sql.streaming.TimeMode
     import blocks.sparkSession.implicits._
     blocks
       .groupByKey(_ => 0)
       .transformWithState(
-        new CorrelatorProcessor(strict, stateTtl),
+        new CorrelatorProcessor(strict),
         TimeMode.None(), OutputMode.Append())
   }
 

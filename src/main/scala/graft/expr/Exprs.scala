@@ -14,8 +14,6 @@ object Exprs {
     * losslessly). */
   val U128: DecimalType = DecimalType(38, 0)
 
-  def u128(c: Column): Column = c.cast(U128)
-
   /** F1 `string_from_vec_u8` (/root/reference/src/actions.rs:286-289):
     * input is base64 wire text; emit the decoded bytes as UTF-8 when
     * valid, else `"base64:" + <original base64>`. Validity via Spark

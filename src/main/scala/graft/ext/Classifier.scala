@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * [[Graph]] / [[KmeansOracle]]).
   *
   * Model: hashed bag-of-unigrams — token → [[Dedup.pmd5]] mod
-  * `buckets` (the [[TextAnalysis.dsirModel]] feature space; hashing
+  * `buckets` (the [[TextAnalysis.dsirWeights]] feature space; hashing
   * caps model size regardless of vocabulary). Training is the batch
   * perceptron: start at w=0; each round scores every document with the
   * CURRENT weights (margin = Σ_b w_b·count_b, a BIGINT dot product),
@@ -174,9 +174,8 @@ object Classifier {
   }
 
   /** Score any document frame under a trained model (train-once /
-    * score-anywhere: the model broadcasts, so a streaming micro-batch
-    * scores as cheaply as a corpus — the [[TextAnalysis.dsirScore]]
-    * deployment shape). Returns (doc_id, margin, pred) zero-filled
+    * score-anywhere: the model broadcasts, so a small frame scores as
+    * cheaply as a corpus). Returns (doc_id, margin, pred) zero-filled
     * over all input ids; pred = 1 iff margin > 0 (the keep gate). */
   def scoreDocs(
       docs: DataFrame, idCol: String, textCol: String, model: DataFrame,

@@ -424,21 +424,6 @@ object Dedup {
       .select("keep_id", "content_hash", "n_batch_dups")
   }
 
-  /** Streaming exact dedup — the streaming half of d1 for a live crawl
-    * feed: drop rows whose content digest was already seen within the
-    * watermark horizon. `dropDuplicatesWithinWatermark` keys the state
-    * store on the digest and EVICTS keys older than the delay, so state
-    * is bounded by (arrival rate × horizon), not by stream history — the
-    * only sound contract for an unbounded stream. Dedup across horizons
-    * is the batch pass's job ([[dedupKeepBest]] / d1 over the sink). */
-  def streamingExactDedup(
-      docs: DataFrame, textCol: String, tsCol: String,
-      delay: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("content_hash", md5(col(textCol).cast("binary")))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("content_hash")
-
   /** Duplicated-span profile — the n-gram approximation of exact
     * substring deduplication (Lee et al. 2022 dedupe spans, not docs):
     * for every document, how many of its token n-gram positions are
@@ -1463,15 +1448,6 @@ object Dedup {
     } finally sigB.unpersist()
   }
 
-  /** Streaming minhash-index ingestion: each arriving micro-batch of
-    * docs appends through the idempotent [[minhashIndexAppend]]. */
-  def minhashIndexIngestStream(
-      docs: DataFrame, idCol: String, textCol: String, dir: String,
-      k: Int = 64, bands: Int = 16, w: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    MinhashFamily.ingestStream(docs, dir)(b =>
-      minhashIndexAppend(b, idCol, textCol, dir, k, bands, w))
-
   // ---- SimHash ----------------------------------------------------------
 
   /** Signature width = the informative width of [[pmd5]] (60 bits, 15
@@ -1808,83 +1784,6 @@ object Dedup {
       // zero exact pairs (a clean corpus, or an unlucky sample) is a
       // VACUOUS audit, not a broken one: recall over an empty truth set
       // is 10000, never a NULL from the integer div-by-zero
-      .select(col("n_queries"), col("n_exact"), col("n_lsh"), col("n_hits"),
-        expr("case when n_exact = 0 then 10000 " +
-          "else n_hits * 10000 div n_exact end").as("recall_e4"))
-  }
-
-  /** SAMPLED recall audit of a PERSISTED minhash index
-    * ([[minhashIndexWrite]]) probed by an arriving batch — d38's
-    * methodology pointed at the production artifact instead of an
-    * inline rebuild, so INDEX HEALTH (stale postings, skew-capped
-    * buckets, band-count drift) is what's measured, continuously:
-    *  - exact ground truth: the pmd5-sampled batch docs' postings
-    *    against ONE scan of the index's postings table —
-    *    O(sample · index), the published audit price, batch side
-    *    broadcast so the index never shuffles;
-    *  - production side: [[minhashProbeIndex]] on the same sampled
-    *    docs (bit-identical to [[minhashPairsAgainstCorpus]],
-    *    spec-pinned), restricted to the identical subset by
-    *    construction;
-    *  - recall in basis points over the sampled cross pairs, with
-    *    d38's vacuous-recall guard (zero exact pairs ⇒ 10000, never a
-    *    NULL).
-    * Ids must be globally distinct across batch and index (the
-    * [[minhashPairsAgainstCorpus]] contract). This is the per-batch
-    * stage [[Curation.driftMonitorApply]] mounts when given an index
-    * dir, so the d38 number a release audit reports is also watched
-    * online between releases.
-    * Output: one row (n_queries, n_exact, n_lsh, n_hits, recall_e4). */
-  def indexRecallSampled(
-      batch: DataFrame, idCol: String, textCol: String, dir: String,
-      threshold: Double = 0.5, sampleMod: Long = 8, k: Int = 64,
-      bands: Int = 16, maxBucket: Int = 1000, w: Int = 3): DataFrame = {
-    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    val spark = batch.sparkSession
-    val sampled = batch.where(pmd5(col(idCol)) % sampleMod === 0)
-    val nQ = sampled.agg(count(lit(1)).as("n_queries"))
-    val invB = invertedIndex(sampled, idCol, textCol, w)
-    val sizesB = invB.groupBy("id").agg(count(lit(1)).as("n"))
-    // sidecar-aware like the LSH side (minhashProbeIndex): the audit
-    // must measure the SERVING index — with a live tombstone sidecar,
-    // a raw postings read would count deleted docs as exact pairs the
-    // probe correctly excludes, under-reporting recall and false-
-    // alarming the health monitor. One anti-join on the postings scan
-    // suffices: the sizes lookup only ever sees id_b values that
-    // produced a shared-postings row.
-    val snap = graft.util.Manifest.snapshot(dir)
-    val invC = PersistedIndex.applyTombstones(spark, snap,
-      spark.read.parquet(snap.path("postings")))
-    val sizesC = spark.read.parquet(snap.path("sizes"))
-    // exact cross-side pairs: shared-posting counts per (batch doc,
-    // index doc), then the jaccardFromShared arithmetic verbatim with
-    // per-side size frames — the batch-scale frames broadcast onto
-    // single scans of the index's postings and sizes tables
-    val shared = invC.select(col("id").as("id_b"), col("g"))
-      .join(broadcast(invB.select(col("id").as("id_a"), col("g"))),
-        Seq("g"))
-      .where(col("id_a") =!= col("id_b")) // defense if ids ever collide
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("shared"))
-    val withA = shared.join(
-      broadcast(sizesB.select(col("id").as("id_a"), col("n").as("n_a"))),
-      "id_a")
-    val ex = sizesC.select(col("id").as("id_b"), col("n").as("n_b"))
-      .join(broadcast(withA), "id_b")
-      .withColumn("jaccard",
-        col("shared").cast("double") /
-          (col("n_a") + col("n_b") - col("shared")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), lit(1L).as("in_ex"))
-    val lsh = minhashProbeIndex(sampled, idCol, textCol, dir,
-      threshold, k, bands, maxBucket, w)
-      .select(col("id_a"), col("id_b"), lit(1L).as("in_lsh"))
-    ex.join(lsh, Seq("id_a", "id_b"), "full_outer")
-      .agg(
-        coalesce(sum(col("in_ex")), lit(0L)).as("n_exact"),
-        coalesce(sum(col("in_lsh")), lit(0L)).as("n_lsh"),
-        coalesce(sum(col("in_ex") * col("in_lsh")), lit(0L)).as("n_hits"))
-      .crossJoin(broadcast(nQ))
       .select(col("n_queries"), col("n_exact"), col("n_lsh"), col("n_hits"),
         expr("case when n_exact = 0 then 10000 " +
           "else n_hits * 10000 div n_exact end").as("recall_e4"))

@@ -163,89 +163,4 @@ object Frequent {
       .agg(sum(col(weightCol).cast("long")).as("w"))
       .where(col("w") >= threshold)
   }
-
-  /** Keyed Misra–Gries state for [[heavyHittersStream]]. */
-  private[graft] final case class MgWindowState(
-      counts: Map[String, Long], n: Long)
-
-  /** Streaming windowed φ-heavy hitters: a Misra–Gries sketch per
-    * (tumbling window, shard) held in keyed state, emitted when the
-    * WATERMARK closes the window — the streaming half of the batch
-    * operator's pass 1. Single-pass streaming cannot re-scan for the
-    * exact verify, so the contract is the sketch's own guarantee, made
-    * explicit in the output: `count_lb ≤ true ≤ count_lb + n/(cap+1)`
-    * and every TRUE φ-hitter of the (window, shard) stream is emitted
-    * (the emission test `count_lb + n/(cap+1) ≥ φ·n` is the pigeonhole
-    * superset bound; cap = max(8, ⌈2/φ⌉) keeps the slack ≤ φn/2).
-    * Downstream exact-ification, when wanted, is a per-closed-window
-    * batch verify over cheap candidate keys — exactly pass 2.
-    *
-    * Scale shape: `shards` spreads one window's state over
-    * `hash(item) % shards` keys — an item's full count still lands in
-    * ONE shard (hash partitioning), so per-shard thresholds only widen
-    * the superset (n_shard ≤ n_window), never miss a hitter. State per
-    * key is ≤ cap entries + a long, bounded by construction; windows
-    * close at `window end` under the watermark `delay`, so state
-    * lifetime is horizon-bounded like the other streaming ops.
-    * `tsCol` must be TimestampType. Output (append, one batch row set
-    * per closed window×shard): (window_start_us, shard, item,
-    * count_lb, shard_n). */
-  def heavyHittersStream(
-      events: DataFrame, itemCol: String, tsCol: String,
-      windowUs: Long, phi: Double, delay: String,
-      shards: Int = 1): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    require(phi > 0 && phi < 1, s"phi must be in (0,1), got $phi")
-    require(windowUs > 0 && shards > 0, "heavyHittersStream: bad params")
-    val cap = math.max(8, math.ceil(2.0 / phi).toInt)
-    val spark = events.sparkSession
-    import spark.implicits._
-    val us = unix_micros(col(tsCol))
-    events
-      .withWatermark(tsCol, delay)
-      .where(col(itemCol).isNotNull)
-      .select(
-        (us - pmod(us, lit(windowUs))).as("_win"),
-        pmod(xxhash64(col(itemCol)), lit(shards.toLong)).cast("int")
-          .as("_shard"),
-        col(itemCol).cast("string").as("_item"),
-        col(tsCol)) // watermarked column carried for EventTimeTimeout
-      .as[(Long, Int, String, java.sql.Timestamp)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState[MgWindowState, (Long, Int, String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state) =>
-          if (state.hasTimedOut) {
-            val s = state.getOption.getOrElse(MgWindowState(Map.empty, 0L))
-            state.remove()
-            val slack = s.n / (cap + 1)
-            s.counts.iterator
-              .filter { case (_, c) => c + slack >= phi * s.n }
-              .map { case (item, c) => (key._1, key._2, item, c, s.n) }
-          } else {
-            val prev = state.getOption.getOrElse(MgWindowState(Map.empty, 0L))
-            val m = collection.mutable.HashMap.empty[String, Long]
-            m ++= prev.counts
-            var n = prev.n
-            it.foreach { t =>
-              n += 1
-              m.get(t._3) match {
-                case Some(c) => m.update(t._3, c + 1)
-                case None if m.size < cap => m.update(t._3, 1L)
-                case None => // decrement-all MG step
-                  m.mapValuesInPlace((_, c) => c - 1)
-                  m.filterInPlace((_, c) => c > 0)
-              }
-            }
-            state.update(MgWindowState(m.toMap, n))
-            // window closes when the watermark (already lagged by
-            // `delay`) passes its end
-            state.setTimeoutTimestamp(math.max(
-              (key._1 + windowUs) / 1000L + 1L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
-      .toDF("window_start_us", "shard", "item", "count_lb", "shard_n")
-  }
 }

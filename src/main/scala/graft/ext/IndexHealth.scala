@@ -18,9 +18,8 @@ import graft.util.Manifest
   * rows are ~10% dead weight scanned-then-dropped,
   * and the sidecar broadcast has grown 10% of membership; the
   * tradeoff is priced empirically at 0/10/50% dead fractions in
-  * BASELINE.md ("Tombstone-debt pricing", round 14). Emitted per
-  * micro-batch by [[Curation.driftMonitorStream]]'s `index_health`
-  * report and by `graft.CurateMain --index-health`. */
+  * BASELINE.md ("Tombstone-debt pricing", round 14). Emitted by
+  * `graft.CurateMain --index-health`. */
 object IndexHealth {
 
   /** Recommend compaction at ≥10% tombstoned (e6 fraction). */

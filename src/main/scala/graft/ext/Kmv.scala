@@ -79,75 +79,6 @@ object Kmv {
         expr("abs(est_distinct - exact_distinct) * 10000 div exact_distinct"))
   }
 
-  /** Persisted per-source sketch ARTIFACT — the minhash/sign-band/
-    * edge-index pattern applied to corpus monitoring: build the
-    * per-source KMV sketches once, write them (k longs per source plus
-    * the k parameter), and from then on every audit — distinct
-    * estimates, pairwise overlap, "how much NEW content did this
-    * week's crawl add" — is array math over the artifact. Because KMV
-    * merge is a trimmed set union ([[mergeSketch]]), the artifact
-    * updates INCREMENTALLY: sketch the new batch alone, merge with the
-    * stored sketches, write back — the historical corpus is never
-    * re-read, which is the whole point at 100 TB. */
-  def sketchWrite(sketches: DataFrame, dir: String, k: Int): Unit = {
-    sketches.write.mode("overwrite").parquet(s"$dir/sketches")
-    val spark = sketches.sparkSession
-    import spark.implicits._
-    Seq(k).toDF("k").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/params")
-  }
-
-  def sketchRead(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, Int) =
-    (spark.read.parquet(s"$dir/sketches"),
-      spark.read.parquet(s"$dir/params").head().getInt(0))
-
-  /** Per-source sketches of a corpus — the frame [[sketchWrite]]
-    * persists: (source, sk array<long> ascending). */
-  def sourceSketches(docs: DataFrame, k: Int = DefaultK): DataFrame =
-    sourceShingles(docs)
-      .groupBy(col("source"))
-      .agg(sketch(col("h"), k).as("sk"))
-
-  /** Trimmed set-union merge of two sketch COLUMNS (the d36 array
-    * path): the k smallest of the union of kept sets — exactly the
-    * sketch a single pass over both inputs would build (KmvSketchSpec
-    * pins the law). NULL-tolerant so a full-outer join of old and new
-    * source sets merges cleanly. */
-  def mergeSketch(a: Column, b: Column, k: Int = DefaultK): Column =
-    slice(
-      array_sort(array_union(
-        coalesce(a, array().cast("array<long>")),
-        coalesce(b, array().cast("array<long>")))),
-      1, k)
-
-  /** Driver-side twin of [[mergeSketch]] for O(k) artifact updates
-    * between streaming micro-batches (a foreachBatch monitor holds the
-    * ≤k-long stored sketch on the driver): distinct-union, ascending,
-    * trimmed to k — the same law KmvSketchSpec pins for the column
-    * form. */
-  def mergeLocal(a: Seq[Long], b: Seq[Long], k: Int = DefaultK): Seq[Long] =
-    (a ++ b).distinct.sorted.take(k)
-
-  /** Driver-side twin of [[estimate]] — identical IEEE-754 arithmetic
-    * (exact (k−1)·2^60 product, one double division, floor). */
-  def estimateLocal(sk: Seq[Long], k: Int = DefaultK): Long =
-    if (sk.size < k) sk.size.toLong
-    else math.floor((k - 1).toDouble * DomainD / sk(k - 1).toDouble).toLong
-
-  /** Incremental update: merge a NEW batch's per-source sketches into
-    * stored ones (full outer on source — new sources appear, untouched
-    * sources pass through). The historical corpus is never re-read. */
-  def mergeSourceSketches(
-      stored: DataFrame, fresh: DataFrame, k: Int = DefaultK): DataFrame = {
-    val a = stored.select(col("source"), col("sk").as("_sk_a"))
-    val b = fresh.select(col("source"), col("sk").as("_sk_b"))
-    a.join(b, Seq("source"), "full_outer")
-      .select(col("source"),
-        mergeSketch(col("_sk_a"), col("_sk_b"), k).as("sk"))
-  }
-
   /** d37 — ONE-PASS table profile (the ANALYZE-style ops tool a 100 TB
     * table is sized by): per column, row count, null count, exact
     * distinct count and the KMV estimate with its error in basis

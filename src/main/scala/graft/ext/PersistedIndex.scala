@@ -2,9 +2,8 @@ package graft.ext
 
 import java.nio.file.{Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.util.Manifest
 
@@ -13,8 +12,8 @@ import graft.util.Manifest
   * up to date incrementally, the model of REPOSE (ICDE 2021) and
   * Incremental Top-K (EDBT 2020). A family is a plain [[Family]] value
   * naming its tables and the partition columns of each; delete,
-  * partition-scoped compaction, the resurrection scrub, the idempotent
-  * append step and streaming ingestion are written ONCE against it, so
+  * partition-scoped compaction, the resurrection scrub and the
+  * idempotent append step are written ONCE against it, so
   * a fix lands in every family at once. What really differs stays
   * with the family: its encode, its read into its case class,
   * and minhash's `bucket_n` recount ([[Table.onCompact]]).
@@ -51,16 +50,6 @@ object PersistedIndex {
   final case class Family(
       name: String, tables: Seq[Table], model: Seq[String],
       member: String, memberRows: Column = lit(true)) {
-
-    /** Fail (naming `caller`) unless `dir` holds every table of this
-      * family — for entry points that must reject a missing index at
-      * construction rather than per batch. */
-    def requireAt(dir: String, caller: String): Unit = {
-      val snap = Manifest.snapshot(dir)
-      val all = model ++ tables.map(_.name)
-      require(all.forall(snap.exists),
-        s"$caller: no $name index at $dir (expected ${all.mkString("/")})")
-    }
 
     /** Writers for a full build: each member table in its declared
       * partition layout, each model table as one file. */
@@ -215,18 +204,6 @@ object PersistedIndex {
             .write.mode("append").partitionBy(t.partitionCols: _*)
             .parquet(snap.path(t.name))
         }
-      }
-    }
-
-    /** Streaming ingestion: a dir without this family's index fails at
-      * stream CONSTRUCTION, not per batch; each micro-batch then runs
-      * `appendBatch` — the family's idempotent append, so sink retries
-      * are safe. */
-    private[ext] def ingestStream(source: DataFrame, dir: String)(
-        appendBatch: DataFrame => Unit): DataStreamWriter[Row] = {
-      requireAt(dir, s"$name ingestStream")
-      source.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-        appendBatch(b)
       }
     }
   }

@@ -617,16 +617,6 @@ object Similarity {
     finally rows.unpersist()
   }
 
-  /** Streaming band-index ingestion through the idempotent
-    * [[signBandIndexAppend]]; because the signature is a pure
-    * projection, streamed ingestion ≡ one-shot append ≡ fresh build
-    * exactly. */
-  def signBandIndexIngestStream(
-      vectors: DataFrame, idCol: String, vecCol: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    SignBandFamily.ingestStream(vectors, dir)(b =>
-      signBandIndexAppend(b.sparkSession, dir, b, idCol, vecCol))
-
   /** [[annTopK]] through a [[SignBandIndex]]: chunk-equality bucket
     * probe → exact Hamming gate → exact cosine rank. IDENTICAL results
     * to the flat scan at the index's nPlanes (pigeonhole — see
@@ -1173,22 +1163,10 @@ object Similarity {
     finally assigned.unpersist()
   }
 
-  /** Streaming index ingestion: every arriving micro-batch of vectors
-    * is appended under the FROZEN on-disk centroids
-    * ([[ivfIndexAppendIdempotent]] per batch, so sink retries are
-    * safe). Recall drift from the frozen codebook is watched by the
-    * s26/s31 audits (and online by the d38-style monitors); retrain at
-    * release cadence replaces the index artifact wholesale. */
-  def ivfIndexIngestStream(
-      vectors: DataFrame, idCol: String, vecCol: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    IvfFamily.ingestStream(vectors, dir)(b =>
-      ivfIndexAppendIdempotent(b.sparkSession, dir, b, idCol, vecCol))
-
   /** Sampled SELF-recall of an IVF index — the s31 release-audit
     * discipline mounted on the index artifact itself (no external
-    * query stream needed, so the online monitors can run it per
-    * micro-batch): queries are the pmd5 `sampleMod`-sampled members,
+    * query stream needed; [[ivfIndexRetrain]] runs it on both sides of
+    * a cutover): queries are the pmd5 `sampleMod`-sampled members,
     * truth is the exact top-k within the `corpusMod`-sampled member
     * universe, and the served side is the IVF probe restricted to the
     * SAME universe (a sampled member's cell routing is unchanged — a
@@ -1197,7 +1175,7 @@ object Similarity {
     * exact side is (|members|/sampleMod)·(|members|/corpusMod) dots —
     * both knobs price the audit. One row:
     * (n_queries, n_exact, n_approx, n_hits, recall_e4). */
-  private[ext] def ivfRecallSampledRow(
+  private[graft] def ivfRecallSampledRow(
       idx: IvfIndex, sampleMod: Long, corpusMod: Long,
       k: Int, nProbe: Int, maxQueries: Int = 2000): DataFrame = {
     require(sampleMod % corpusMod == 0,
@@ -1208,10 +1186,9 @@ object Similarity {
       members.where(Dedup.pmd5(col("id")) % corpusMod === 0)
     // maxQueries bounds the query side ABSOLUTELY (deterministic
     // pmd5-ordered limit): without it the exact side is
-    // |members|²/(sampleMod·corpusMod) — QUADRATIC in index size, so
-    // a per-micro-batch monitor mounted on a growing index would
-    // eventually outgrow any trigger interval; capped, the audit is
-    // ≤ maxQueries·|members|/corpusMod dots — linear
+    // |members|²/(sampleMod·corpusMod) — QUADRATIC in index size;
+    // capped, the audit is ≤ maxQueries·|members|/corpusMod dots —
+    // linear
     val qs = members
       .where(Dedup.pmd5(col("id")) % sampleMod === 0 &&
         norm(col("v")) > 0)
@@ -1235,47 +1212,6 @@ object Similarity {
         col("n_hits"),
         expr("case when n_exact = 0 then 10000 " +
           "else n_hits * 10000 div n_exact end").as("recall_e4"))
-  }
-
-  /** [[ivfRecallSampledRow]] against a persisted index dir — the
-    * online health form the drift monitor mounts per micro-batch. */
-  def ivfIndexRecallSampled(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      sampleMod: Long = 8, corpusMod: Long = 2,
-      k: Int = 10, nProbe: Int = 4, maxQueries: Int = 2000): DataFrame =
-    ivfRecallSampledRow(ivfIndexRead(spark, dir),
-      sampleMod, corpusMod, k, nProbe, maxQueries)
-
-  /** Sampled ARTIFACT-integrity probe for a persisted band index —
-    * the online health form for the one family whose serving is
-    * provably lossless (nothing to "recall"): what can rot is the
-    * persisted artifact itself (a maintenance bug dropping rows,
-    * mixing signatures, or splitting an id across states). Per
-    * sampled member: exactly `chunks` rows, one distinct signature,
-    * and the stored signature equals a RECOMPUTE from the stored
-    * vector (the signature is a pure projection of the persisted
-    * hyperplane params — the strongest cheap self-check). One row:
-    * (n_queries, n_hits, integrity_e4). */
-  def signBandIndexIntegritySampled(
-      spark: SparkSession, dir: String, sampleMod: Long = 8)
-      : DataFrame = {
-    val idx = signBandIndexRead(spark, dir)
-    val planes = hyperplanes(idx.nPlanes, idx.dim)
-    val perId = idx.buckets
-      .where(Dedup.pmd5(col("id")) % sampleMod === 0)
-      .groupBy("id").agg(
-        count(lit(1)).as("_n"),
-        countDistinct(col("sig")).as("_nsig"),
-        first(col("sig")).as("_sig"), first(col("v")).as("_v"))
-    perId
-      .select((col("_n") === idx.chunks && col("_nsig") === 1 &&
-        col("_sig") === lshSignature(col("_v"), planes)).as("_ok"))
-      .agg(count(lit(1)).as("n_queries"),
-        coalesce(sum(when(col("_ok"), 1L).otherwise(0L)), lit(0L))
-          .as("n_hits"))
-      .select(col("n_queries"), col("n_hits"),
-        expr("case when n_queries = 0 then 10000 " +
-          "else n_hits * 10000 div n_queries end").as("integrity_e4"))
   }
 
   /** RETRAIN-AND-CUTOVER — the release-cadence lifecycle the append
@@ -1929,14 +1865,6 @@ object Similarity {
       "base" -> (_ => assigned.select(col("id"), col("v"), col("c")))))
     finally { withR.unpersist(); assigned.unpersist() }
   }
-
-  /** Streaming IVF-PQ index ingestion through the idempotent
-    * [[ivfPqIndexAppendIdempotent]] (retry-safe per micro-batch). */
-  def ivfPqIndexIngestStream(
-      vectors: DataFrame, idCol: String, vecCol: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    IvfPqFamily.ingestStream(vectors, dir)(b =>
-      ivfPqIndexAppendIdempotent(b.sparkSession, dir, b, idCol, vecCol))
 
   /** ANN top-k through an IVF-PQ index: probe the `nProbe` cells
     * nearest the query; approximate

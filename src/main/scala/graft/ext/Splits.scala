@@ -198,8 +198,8 @@ object Splits {
 
   /** The shard expression itself — ONE definition of the contract
     * (first 4 hex chars of an md5 digest, mod nShards) shared by
-    * [[shardByHash]] and the streaming composition's content-keyed
-    * variant ([[graft.ext.Curation.shardOfContent]]), so the two
+    * [[shardByHash]] and curation's content-keyed variant
+    * ([[graft.ext.Curation.shardOfContent]]), so the two
     * cannot drift. */
   def shardOfDigest(
       digestHex: org.apache.spark.sql.Column,
@@ -360,96 +360,6 @@ object Splits {
       .select(col("src"), col("ns"),
         floor(lit(1e6) * (p - q) * log(p / q)).cast("long").as("term"))
       .groupBy(col("src").as("source"))
-      .agg(max(col("ns")).as("n_docs"), sum(col("term")).as("psi_e6"))
-      .withColumn("flagged", (col("psi_e6") >= 100000L).cast("long"))
-  }
-
-  /** Frozen reference distribution for ONLINE drift monitoring — the
-    * persistable form of the frame [[psiDrift]] derives on the fly:
-    * the equal-count bucket thresholds plus the baseline bucket
-    * counts/marginals. Built ONCE from the certified corpus (the batch
-    * job), then every streaming micro-batch compares against it with
-    * [[psiAgainstBaseline]] — bucket rules frozen at baseline time, so
-    * a drifting stream cannot silently re-bucket itself back to
-    * "stable". Driver-scale by construction (≤ `buckets` rows). */
-  final case class DriftBaseline(
-      thresholds: Seq[Long], nb: Seq[(Long, Long)], n: Long, nbk: Long)
-
-  /** Derive a [[DriftBaseline]] from a scored corpus frame: the
-    * [[scoreBucketThresholds]] equal-count buckets and one corpus
-    * shuffle to bucket counts. */
-  def driftBaselineBuild(
-      scored: org.apache.spark.sql.DataFrame, scoreCol: String,
-      buckets: Int = 10): DriftBaseline = {
-    val thresholds = scoreBucketThresholds(scored, scoreCol, buckets)
-    val rows = scored
-      .select(bucketOf(scoreCol, thresholds).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("nb"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    DriftBaseline(thresholds, rows, rows.map(_._2).sum, rows.size.toLong)
-  }
-
-  /** Persist / load the baseline artifact (the bloom-screen artifact
-    * discipline: tiny parquet tables, exact round-trip). */
-  def driftBaselineWrite(
-      spark: org.apache.spark.sql.SparkSession, base: DriftBaseline,
-      dir: String): Unit = {
-    import spark.implicits._
-    base.thresholds.zipWithIndex.map { case (t, i) => (i, t) }
-      .toDF("i", "t").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/thresholds")
-    base.nb.toDF("bucket", "nb").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/buckets")
-    Seq((base.n, base.nbk)).toDF("n", "nbk").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/params")
-  }
-
-  def driftBaselineRead(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
-      : DriftBaseline = {
-    val thresholds = spark.read.parquet(s"$dir/thresholds")
-      .orderBy("i").collect().map(_.getLong(1)).toSeq
-    val nb = spark.read.parquet(s"$dir/buckets")
-      .orderBy("bucket").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val p = spark.read.parquet(s"$dir/params").head()
-    DriftBaseline(thresholds, nb, p.getLong(0), p.getLong(1))
-  }
-
-  /** PSI of ONE frame (a streaming micro-batch, a new crawl slice)
-    * against a frozen [[DriftBaseline]] — [[psiDrift]]'s arithmetic
-    * verbatim (Laplace +1 smoothing, e6-floored per-bin terms, the
-    * identical Column expression tree so the engine's ln is the same
-    * function in both paths), with the batch playing the "source" role
-    * and the baseline the "global" role. When the baseline is built
-    * over a corpus and the batch IS one source's rows, the result
-    * equals that source's [[psiDrift]] row EXACTLY — the
-    * StreamingWindowSpec stream≡batch pin. Output: one row
-    * (n_docs, psi_e6, flagged). */
-  def psiAgainstBaseline(
-      batch: org.apache.spark.sql.DataFrame, scoreCol: String,
-      base: DriftBaseline): org.apache.spark.sql.DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val nsb = batch
-      .select(bucketOf(scoreCol, base.thresholds).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("nsb"))
-    val nbDf = base.nb.toDF("bucket", "nb")
-    val ns = nsb.agg(coalesce(sum(col("nsb")), lit(0L)).as("ns"))
-    // full outer: every baseline bucket scores (absent → nsb = 0, the
-    // psiDrift grid), and a batch bucket the baseline never saw still
-    // contributes (nb = 0 — maximal-shift evidence, not a drop)
-    val grid = nbDf.join(nsb, Seq("bucket"), "full_outer")
-      .select(
-        coalesce(col("nb"), lit(0L)).as("nb"),
-        coalesce(col("nsb"), lit(0L)).as("nsb"))
-    val p = (col("nsb") + 1).cast("double") /
-      (col("ns") + lit(base.nbk)).cast("double")
-    val q = (col("nb") + 1).cast("double") /
-      (lit(base.n) + lit(base.nbk)).cast("double")
-    grid.crossJoin(broadcast(ns))
-      .select(col("ns"),
-        floor(lit(1e6) * (p - q) * log(p / q)).cast("long").as("term"))
       .agg(max(col("ns")).as("n_docs"), sum(col("term")).as("psi_e6"))
       .withColumn("flagged", (col("psi_e6") >= 100000L).cast("long"))
   }

@@ -677,41 +677,6 @@ object TextAnalysis {
         coalesce(col("logweight_e6"), lit(0L)).as("logweight_e6"))
   }
 
-  /** The standalone DSIR model — [[dsirWeights]]'s training half, for
-    * the train-once / score-anywhere deployment shape: compute it on
-    * the reference corpus, persist or broadcast it, then [[dsirScore]]
-    * any frame (batch or per-micro-batch) against it. DENSE: exactly
-    * `buckets` rows, including the smoothing ratio for buckets unseen
-    * in training. Returns (b, lr_e6). */
-  def dsirModel(
-      docs: org.apache.spark.sql.DataFrame, textCol: String,
-      targetPred: Column, buckets: Int = 4096)
-      : org.apache.spark.sql.DataFrame =
-    dsirModelFromToks(
-      docs
-        .select(targetPred.as("is_target"),
-          explode(tokens(col(textCol))).as("tok"))
-        .select(col("is_target"), (Dedup.pmd5(col("tok")) % buckets).as("b")),
-      buckets)
-
-  /** Score any document frame under a trained [[dsirModel]]: tokens
-    * hash into the model's `buckets` space (must match training), the
-    * model broadcasts, and the only shuffle is the per-doc sum — the
-    * shape that scores an arriving micro-batch as cheaply as a corpus.
-    * The dense model guarantees every token finds its bucket (unseen
-    * vocabulary gets the smoothing ratio); empty docs score (0, 0).
-    * Returns (doc_id, n_tokens, logweight_e6). */
-  def dsirScore(
-      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-      model: org.apache.spark.sql.DataFrame, buckets: Int = 4096)
-      : org.apache.spark.sql.DataFrame =
-    dsirScoreFromToks(
-      docs
-        .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
-        .select(col("doc_id"), (Dedup.pmd5(col("tok")) % buckets).as("b")),
-      model,
-      docs.select(col(idCol).as("doc_id")))
-
   def dsirWeights(
       docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       targetPred: Column, buckets: Int = 4096)
@@ -979,21 +944,6 @@ object TextAnalysis {
         count(lit(1)).as("n_hits"),
         countDistinct(col("doc_id")).as("n_docs"))
 
-  /** Per-document blocklist predicate in its INLINE-LITERAL form over
-    * a MATERIALIZED token-array column: true iff any gram appears in
-    * `phrases`. A single codegen'd `arrays_overlap` against the
-    * literal phrase array — no explode, no join, no state — so it
-    * composes onto a readStream unchanged (the stream analog of
-    * [[blocklistFilter]], whose anti-join form references the stream
-    * twice). Right for phrase lists up to a few thousand entries;
-    * beyond that the broadcast-join form wins. */
-  def blocklistPredFromToks(toks: Column, phrases: Seq[String]): Column = {
-    val norm = normPhrases(phrases)
-    val maxLen = norm.map(_.split(" ").length).max
-    arrays_overlap(
-      phraseGramsFromToks(toks, maxLen), array(norm.map(lit): _*))
-  }
-
   /** Phrase-list normalization shared by every blocklist entry point:
     * trim + collapse internal whitespace (grams from [[tokens]] are
     * single-space-joined, so a doubled/leading/trailing space both
@@ -1006,21 +956,6 @@ object TextAnalysis {
     require(norm.nonEmpty, "blocklist phrases must be non-empty")
     norm
   }
-
-  /** Stateless filter via [[blocklistPredFromToks]] — identical
-    * survivors to [[blocklistFilter]] (spec-pinned),
-    * streaming-composable. The token array materializes in an inner
-    * projection so the gram tree never re-runs the split. NULL text
-    * (null grams → null overlap) is kept, matching the anti-join
-    * form, where a null doc emits no gram rows and is never flagged. */
-  def blocklistFilterInline(
-      docs: org.apache.spark.sql.DataFrame, textCol: String,
-      phrases: Seq[String]): org.apache.spark.sql.DataFrame =
-    docs
-      .withColumn("_toks", tokens(col(textCol)))
-      .where(
-        !coalesce(blocklistPredFromToks(col("_toks"), phrases), lit(false)))
-      .drop("_toks")
 
   /** The filter itself: documents containing NO blocklisted phrase —
     * broadcast left-anti join on the shared hit stream (each doc's

@@ -8,7 +8,7 @@ import org.apache.spark.sql.Column
   * consumes any function library. Everything here is a pure Catalyst
   * expression (codegen-resident); DataFrame-level operators live on
   * their objects (ActionsExtract, TxCorrelator, Dedup.minhashPairs,
-  * Similarity, AsOfJoin, RangeJoin, Skew, Replacing).
+  * Similarity, AsOfJoin, RangeJoin, Replacing).
   */
 object functions {
 

@@ -105,173 +105,6 @@ object EventOps {
     withAll.select(col(userCol), highest.as("steps"))
   }
 
-  /** One buffered step-relevant event: µs time + index into the
-    * DISTINCT step-type list (a repeated step type — legal, as in
-    * ClickHouse windowFunnel — maps every matching event to one type
-    * index that several funnel positions may consume). */
-  final case class FunnelEvent(us: Long, ty: Int)
-
-  /** Keyed funnel state: buffered step events + the latest event time
-    * seen (step-relevant or not — non-step events are NOT buffered,
-    * they only advance the horizon and mark user presence). */
-  final case class FunnelBuffer(events: Seq[FunnelEvent], maxUs: Long)
-
-  /** The funnel recurrence on a buffered event set (same definition the
-    * batch operator evaluates with aggregations): t₀ = earliest time of
-    * the step-0 TYPE; tᵢ = earliest step-i-type time strictly after
-    * tᵢ₋₁ and within `windowUs` of t₀. Returns the highest completed
-    * step. `stepTypes(i)` is step i's index into the distinct-type
-    * list. */
-  private def foldFunnel(
-      events: Seq[FunnelEvent], stepTypes: Seq[Int], windowUs: Long): Long = {
-    val byType = events.groupBy(_.ty)
-    byType.get(stepTypes.head).map(_.map(_.us).min) match {
-      case None => 0L
-      case Some(t0) =>
-        var reached = 1L
-        var prev = t0
-        var i = 1
-        while (i < stepTypes.length) {
-          byType.getOrElse(stepTypes(i), Seq.empty)
-            .collect { case e if e.us > prev && e.us <= t0 + windowUs => e.us }
-            .minOption match {
-            case Some(t) => reached = i + 1L; prev = t; i += 1
-            case None => i = stepTypes.length
-          }
-        }
-        reached
-    }
-  }
-
-  /** Streaming windowFunnel: per-user funnel evaluated with
-    * `flatMapGroupsWithState` + event-time timeout. Events buffer in
-    * keyed state until the watermark passes the funnel horizon (first
-    * anchor + window), then the batch recurrence folds the buffer and
-    * emits one `(user, steps)` row — so out-of-order arrival within the
-    * watermark `delay` cannot change the answer, and state per user is
-    * bounded by the events inside one funnel window + delay, not stream
-    * history. After an emission the same user's later events open a new
-    * funnel episode (append mode cannot retract) — set `delay` to cover
-    * the expected disorder.
-    *
-    * `tsCol` must be a TimestampType column; `userCol` a long key.
-    * Output: streaming Dataset of (userCol, steps).
-    */
-  def funnelStream(
-      events: DataFrame, userCol: String, tsCol: String, typeCol: String,
-      steps: Seq[String], windowUs: Long, delay: String): DataFrame = {
-    // distinct-type indices so a repeated step type (steps = A,B,A)
-    // matches the batch operator, which re-matches the type per pass
-    val distinctTypes = steps.distinct
-    val stepTypes = steps.map(distinctTypes.indexOf)
-    bufferedFold(
-      events, userCol, tsCol, typeCol, distinctTypes, delay,
-      outCol = "steps",
-      // a user with only non-step events still emits a 0-step row (the
-      // batch funnel frame includes every user)
-      holdEmptyState = true,
-      // close when the watermark passes the funnel horizon: the first
-      // anchor + window when an anchor exists, else the latest event +
-      // window (an anchor may still arrive out of order in the delay)
-      horizonOf = (merged, maxUs) =>
-        merged.filter(_.ty == stepTypes.head)
-          .map(_.us).minOption.getOrElse(maxUs) + windowUs,
-      fold = evs => foldFunnel(evs, stepTypes, windowUs))
-  }
-
-  /** The buffer-until-quiet machinery shared by [[funnelStream]] and
-    * [[sequenceCountStream]]: watermark, map event types to indices
-    * (non-listed types → -1, buffered only as horizon presence when
-    * `holdEmptyState`), accumulate `FunnelEvent`s in keyed state, and
-    * when the event-time timeout passes `horizonOf`, emit
-    * `(user, fold(events))` and clear. The WATERMARKED timestamp column
-    * is carried untransformed — an object-level .map would re-serialize
-    * the attributes and strip the event-time tag EventTimeTimeout
-    * needs. */
-  private def bufferedFold(
-      events: DataFrame, userCol: String, tsCol: String, typeCol: String,
-      types: Seq[String], delay: String, outCol: String,
-      holdEmptyState: Boolean,
-      horizonOf: (Seq[FunnelEvent], Long) => Long,
-      fold: Seq[FunnelEvent] => Long): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typeIdx = types.zipWithIndex
-      .foldRight(lit(-1): Column) { case ((ty, i), acc) =>
-        when(col(typeCol) === ty, lit(i)).otherwise(acc)
-      }
-    events
-      .withWatermark(tsCol, delay)
-      .select(col(userCol).cast("long"), col(tsCol), typeIdx.cast("int"))
-      .as[(Long, java.sql.Timestamp, Int)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelBuffer, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          if (state.hasTimedOut) {
-            val evs = state.getOption.map(_.events).getOrElse(Seq.empty)
-            state.remove()
-            Iterator.single((user, fold(evs)))
-          } else {
-            val prev = state.getOption.getOrElse(FunnelBuffer(Seq.empty, 0L))
-            var maxUs = prev.maxUs
-            val fresh = it.flatMap { t =>
-              val inst = t._2.toInstant
-              val us = inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-              if (us > maxUs) maxUs = us
-              // only pattern-relevant events buffer — other traffic
-              // contributes presence + horizon via maxUs alone, so
-              // state scales with pattern traffic, not total traffic
-              if (t._3 >= 0) Some(FunnelEvent(us, t._3)) else None
-            }.toSeq
-            val merged = prev.events ++ fresh
-            if (holdEmptyState || merged.nonEmpty) {
-              state.update(FunnelBuffer(merged, maxUs))
-              state.setTimeoutTimestamp(
-                math.max(horizonOf(merged, maxUs) / 1000L + 1L,
-                  state.getCurrentWatermarkMs() + 1L))
-            }
-            Iterator.empty
-          }
-      }
-      .toDF(userCol, outCol)
-  }
-
-  /** Streaming [[sequenceCount]]: per-user scan-greedy A-then-B count
-    * via `flatMapGroupsWithState` + event-time timeout — the same
-    * buffer-until-quiet machinery as [[funnelStream]]. Because the
-    * batch operator's count is unbounded over history, the streaming
-    * contract is SESSION-scoped: a user's buffered events fold and emit
-    * once the watermark passes their last activity + `gapUs` (a quiet
-    * period), and a later reappearance opens a new episode. Within one
-    * episode the result equals [[sequenceCount]] over the same events
-    * regardless of arrival order inside the watermark `delay`. Ties at
-    * the same timestamp fold in (us, type) order — pre-dedup per
-    * (user, us) for fully specified semantics.
-    * `tsCol` must be TimestampType; `userCol` a long key.
-    * Output: streaming Dataset of (userCol, n_sequences). */
-  def sequenceCountStream(
-      events: DataFrame, userCol: String, tsCol: String, typeCol: String,
-      first: String, second: String, gapUs: Long, delay: String): DataFrame =
-    bufferedFold(
-      events, userCol, tsCol, typeCol, Seq(first, second), delay,
-      outCol = "n_sequences",
-      // a user with no A/B events holds no state and never emits (the
-      // batch operator's filtered frame omits them too)
-      holdEmptyState = false,
-      // close when the user has been quiet for gapUs
-      horizonOf = (_, maxUs) => maxUs + gapUs,
-      fold = evs => {
-        var pending = false
-        var n = 0L
-        evs.sortBy(e => (e.us, e.ty)).foreach { e =>
-          if (e.ty == 0) pending = true
-          else if (pending) { n += 1; pending = false }
-        }
-        n
-      })
-
   /** Non-overlapping A-then-B occurrence count per key (ClickHouse
     * `sequenceCount('(?1)(?2)')` semantics: scan in time order, a match
     * consumes both events, search resumes after it). For a two-step
@@ -515,49 +348,6 @@ object EventOps {
         HistBucketCents + (HistBucketCents - 1))
         .cast("long").as("p95_upper_c"))
   }
-
-  /** The q86 sketch as a STREAMING aggregation: per (1-day event-time
-    * window, event_type) bucket counts under a watermark — the
-    * pre-aggregation a 100 TB dashboard pipeline maintains
-    * continuously; [[histogramQuantiles]] reads quantiles off the
-    * emitted sketch table at query time (any subset of windows —
-    * merging is just the bucket re-sum). State is bounded by
-    * types × buckets per open window, independent of event volume.
-    * `tsCol` must be a native timestamp column. */
-  def histogramSketchStream(
-      events: DataFrame, tsCol: String, delay: String): DataFrame =
-    events
-      .withWatermark(tsCol, delay)
-      .groupBy(
-        window(col(tsCol), "1 day"), col("event_type"),
-        expr(s"CAST(round(value*100) AS BIGINT) div $HistBucketCents")
-          .as("bucket"))
-      .agg(count(lit(1)).as("c"))
-
-  /** Streaming Count-Min cells: the q88 sketch as a watermarked
-    * windowed aggregation. Emits one (window, j, b, c) counter row per
-    * day and occupied cell when the watermark closes the window —
-    * state ≤ depth·width per open window, independent of event volume
-    * (the CMS compression is exactly what makes unbounded-key
-    * streaming frequency tracking feasible: the q43 heavy-hitter
-    * stream keeps per-KEY state, this keeps per-CELL state). Any
-    * subset of emitted windows merges by addition in
-    * [[Stats.cmsEstimatesFromCells]]. `keyExpr` is the SQL text of the
-    * key column (e.g. "user_id"); `tsCol` must be a native timestamp.
-    */
-  def cmsCellStream(
-      events: DataFrame, tsCol: String, keyExpr: String, delay: String,
-      depth: Int = 4, width: Int = 256): DataFrame =
-    events
-      .withWatermark(tsCol, delay)
-      .withColumn("j", explode(Stats.cmsRows(depth)))
-      .withColumn("b", expr(Stats.cmsBucket(keyExpr, width)))
-      .groupBy(window(col(tsCol), "1 day"), col("j"), col("b"))
-      .agg(count(lit(1)).as("c"))
-      // geometry columns: the batch finalizer refuses mod-mismatched
-      // probes (Stats.cmsEstimatesFromCells's guard)
-      .withColumn("_depth", lit(depth))
-      .withColumn("_width", lit(width))
 
   /** Pairwise co-occurrence PMI over per-entity type sets — the
     * classic association-mining primitive (phrase mining, behavioral

@@ -16,8 +16,4 @@ object Q {
   def apply(name: String, sql: String)(
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(sql))
-
-  /** Non-SQL-expressible operator → driver records a rows-only check. */
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

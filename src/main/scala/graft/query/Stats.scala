@@ -365,9 +365,8 @@ object Stats {
       .withColumn("_width", lit(width))
 
   /** CMS row-hash bucket of `key` for the depth index in column `j`:
-    * pmd5 of `key || '#' || j`, mod width. Shared by the batch build,
-    * the probe side, and the streaming cell aggregation
-    * ([[EventOps.cmsCellStream]]). */
+    * pmd5 of `key || '#' || j`, mod width. Shared by the batch build
+    * and the probe side. */
   def cmsBucket(key: String, width: Int): String =
     s"CAST(conv(substr(md5(concat(CAST($key AS STRING), '#', " +
       s"CAST(j AS STRING))),1,15),16,10) AS BIGINT) % $width"
@@ -377,10 +376,8 @@ object Stats {
 
   /** Finalize CMS cells — any frame of (j, b, c, _depth, _width) rows,
     * possibly pre-aggregated per slice/window (extra columns ignored):
-    * merge by addition, probe every key in `keys`. This is the
-    * re-aggregation half a streaming sketch table feeds
-    * ([[EventOps.cmsCellStream]] emits the cells; ANY subset of its
-    * windows merges here). The sketch contract is guarded IN-PLAN:
+    * merge by addition, probe every key in `keys`, so ANY subset of
+    * slices merges here. The sketch contract is guarded IN-PLAN:
     * the merge aggregation also folds min/max of the cells' recorded
     * geometry, and an `assert_true` on the merged rows throws at
     * execution if any cell disagrees with THIS call's depth/width — a

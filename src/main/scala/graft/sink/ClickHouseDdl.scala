@@ -112,7 +112,10 @@ object ClickHouseDdl {
       orderBy = Seq("block_height"),
       nullable = Set("prev_block_height"),
       heightCol = "block_height",
-      bloom = Seq("block_hash", "epoch_id", "author_id")))
+      // not epoch_id/author_id: their values repeat within a bucket, so
+      // their chunks stay dictionary-encoded, parquet writes no bloom
+      // for them, and the dictionary already prunes row groups
+      bloom = Seq("block_hash")))
 
   /** ClickHouse type for one engine column under a table layout. */
   private def chType(table: String, f: StructField): String = {

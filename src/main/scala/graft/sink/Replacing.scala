@@ -151,34 +151,6 @@ object Replacing {
     fs.delete(tmpPath, true)
   }
 
-  /** TTL retention (ClickHouse `TTL ... DELETE` at part granularity):
-    * drop every height bucket strictly below `keepFromBucket`. Because
-    * the layout partitions by `height_bucket=` directories, expiry is a
-    * METADATA operation — directory deletes, never a rewrite of
-    * surviving data — which is the only retention mechanism that holds
-    * at 100 TB (a `DELETE WHERE` rewrite of a petabyte table does not).
-    * Buckets are independent file sets, so a crash mid-drop leaves each
-    * bucket either fully present or fully gone; re-running converges.
-    * Returns the bucket values dropped. */
-  def dropBucketsBelow(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      keepFromBucket: Long): Seq[Long] = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return Nil
-    val expired = fs.listStatus(hPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("height_bucket="))
-      .flatMap { s =>
-        val v = s.getPath.getName.stripPrefix("height_bucket=")
-        scala.util.Try(v.toLong).toOption.filter(_ < keepFromBucket)
-          .map(b => (b, s.getPath))
-      }
-      .sortBy(_._1)
-    // report only buckets the filesystem actually deleted — a false
-    // return (permission/lock) must not be recorded as expired
-    expired.filter { case (_, p) => fs.delete(p, true) }.map(_._1)
-  }
-
   /** K1: sink-side retry with exponential backoff
     * (/root/reference/src/click.rs:50-85: 10 tries, 100 ms ×2). */
   def retry[T](

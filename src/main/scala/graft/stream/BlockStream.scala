@@ -307,8 +307,8 @@ object BlockStream {
     * sink cursor).
     *
     * The correlator runs on `transformWithState` (SURVEY §2.4 first
-    * choice — per-entry state writes, optional per-entry TTL), which
-    * requires the RocksDB state store provider; the stream runs on a
+    * choice — per-entry state writes), which requires the RocksDB
+    * state store provider; the stream runs on a
     * CLONED SparkSession carrying [[ProductionStateConf]] so the
     * caller's session is untouched. Conf-vs-checkpoint safety: Spark
     * persists `shuffle.partitions` in the offset log and REPINS it on
@@ -320,8 +320,7 @@ object BlockStream {
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
       bucketStep: Long = 1000L, startHeight: Long = Long.MinValue,
       nativeSource: Boolean = false,
-      skipCommit: Boolean = false,
-      stateTtl: Option[java.time.Duration] = None): StreamingQuery = {
+      skipCommit: Boolean = false): StreamingQuery = {
     // newSession: shared SparkContext + catalog cache, OWN SQLConf —
     // the stream's state knobs must not leak into the caller's batch
     // queries (shuffle.partitions above all)
@@ -346,7 +345,7 @@ object BlockStream {
     // block height, transactions.rs:360)
     val cursor = sinkCursor(
       session, s"$outDir/transactions", cursorCol = "last_block_height")
-    startStream(TxCorrelator.correlateStreamTws(blocks, stateTtl = stateTtl),
+    startStream(TxCorrelator.correlateStreamTws(blocks),
         checkpoint, trigger) { batch =>
       val txs = batch.filter(_.last_block_height > cursor).persist()
       try {

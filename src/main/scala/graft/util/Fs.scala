@@ -6,19 +6,6 @@ import java.util.Comparator
 /** Tiny filesystem helpers shared by the operational mains. */
 object Fs {
 
-  /** Rewrite a parquet table directory in place, crash-tolerantly:
-    * write `f(read(src))` to `_swap.<name>`, retire `src` to
-    * `_old.<name>` (one directory rename), promote the swap to `src`
-    * (one rename), delete the old. Single writer assumed. This is NOT
-    * an atomic swap — a reader racing the two renames can observe a
-    * missing `src` for that instant — but every crash point leaves a
-    * COMPLETABLE state that [[recoverSwap]] (run at the head of every
-    * rewrite) finishes: a partial swap with `src` intact is
-    * discarded; `src` missing with a complete swap (the retire
-    * happened, so the swap write had finished) is promoted; a stale
-    * old after promotion is deleted. Callers sequencing multiple
-    * tables (compaction) must clear their own done-marker (e.g. the
-    * tombstone sidecar) LAST, so an interrupted run re-executes. */
   /** Temp siblings are UNDERSCORE-prefixed: Spark's partition
     * discovery ignores `_`/`.`-prefixed directories, so a swap of a
     * partition directory (`c=5`, `bucket=9`) can never leak a bogus
@@ -29,27 +16,19 @@ object Fs {
   private def oldOf(src: Path): Path =
     src.resolveSibling("_old." + src.getFileName.toString)
 
-  def rewriteSwap(
-      spark: org.apache.spark.sql.SparkSession, src: Path)(
-      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : Unit = {
-    recoverSwap(src)
-    val swap = swapOf(src)
-    val old = oldOf(src)
-    f(spark.read.parquet(src.toString))
-      .write.mode("overwrite").parquet(swap.toString)
-    Files.move(src, old)
-    Files.move(swap, src)
-    deleteRecursively(old)
-  }
-
-  /** Complete or discard an interrupted [[rewriteSwap]] — see its doc
-    * for the crash matrix. Safe to call any time for `src`. Also
-    * recovers residue under the LEGACY suffix naming
-    * (`<name>._swap`/`<name>._old`, one shipped revision) — without
-    * this shim a pre-rename crash would strand its table forever (and
-    * a legacy `bucket=9._swap` would keep poisoning the parent's
-    * partition schema with nothing ever cleaning it). */
+  /** Complete or discard an interrupted rename-in-place rewrite, the
+    * index compaction of earlier revisions: it wrote `f(read(src))` to
+    * `_swap.<name>`, retired `src` to `_old.<name>`, promoted the swap
+    * to `src` and deleted the old. Every crash point left a completable
+    * state: a partial swap with `src` intact is discarded; `src`
+    * missing with a complete swap (the retire happened, so the swap
+    * write had finished) is promoted; a stale old after promotion is
+    * deleted. Safe to call any time for `src`. Also recovers residue
+    * under the LEGACY suffix naming (`<name>._swap`/`<name>._old`, one
+    * shipped revision) — without this shim a pre-rename crash would
+    * strand its table forever (and a legacy `bucket=9._swap` would keep
+    * poisoning the parent's partition schema with nothing ever cleaning
+    * it). */
   def recoverSwap(src: Path): Unit = {
     for ((swap, old) <- Seq(
         (swapOf(src), oldOf(src)),
@@ -68,7 +47,7 @@ object Fs {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** One-shot (per JVM per root) recursive sweep completing ANY
-    * interrupted [[rewriteSwap]] residue under an index dir — the
+    * interrupted rewrite's residue under an index dir — the
     * read-side recovery the per-path lazy [[recoverSwap]] misses: a
     * stranded `bucket=9._swap` (legacy suffix naming) under an index
     * that is read but never compacted again would otherwise poison the
@@ -79,9 +58,8 @@ object Fs {
     * Cost is one directory walk, memoized per root — callers mount it
     * at index OPEN (the shared tombstone read of
     * [[graft.ext.PersistedIndex]]), not per probe. Single-writer
-    * assumed, like every rewrite here: sweeping while another
-    * process's rewrite is mid-flight would discard its in-progress
-    * swap. */
+    * assumed: sweeping while another process's rewrite is mid-flight
+    * would discard its in-progress swap. */
   def sweepSwapResidue(root: Path): Unit = {
     val key = root.toAbsolutePath.normalize.toString
     if (!Files.isDirectory(root) || !sweptRoots.add(key)) return

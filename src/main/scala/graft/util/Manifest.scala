@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned-manifest publication for persisted index directories —
-  * the reader-ATOMIC upgrade over [[Fs.rewriteSwap]]'s rename-in-place
+  * the reader-ATOMIC upgrade over the rename-in-place rewrite of
+  * earlier revisions ([[Fs.recoverSwap]])
   * (whose two renames leave an instant where the table is missing, and
   * whose multi-table sequences are crash-completable but not
   * transactional: a concurrent reader could see `postings` from the

@@ -17,7 +17,8 @@ class CurateMainSpec extends SparkSpec {
       .select("doc_id", "text")
     // pick plant subjects from the quality-PASSING set so the later
     // stages (not the gopher gate) are what decides their fate
-    val passingAll = graft.ext.Curation.qualityGate(docs, "doc_id", "text")
+    val passingAll = graft.ext.Curation.qualityFlags(docs, "doc_id", "text")
+      .where(graft.ext.Curation.qualityPass)
       .select("doc_id", "text").orderBy("doc_id").collect()
     // exclude docs in an organic near-dup pair — the plants' fate must
     // be decided by the stage we aim them at, not cluster survivorship
@@ -110,7 +111,9 @@ class CurateMainSpec extends SparkSpec {
     // the kept set is the exact t22 prefix: replay on the exact_dedup
     // survivors (no benchmark -> budget input is the dedup output)
     import graft.ext.{Packing, TextAnalysis}
-    val quality = graft.ext.Curation.qualityGate(docs, "doc_id", "text")
+    val quality = graft.ext.Curation.qualityFlags(docs, "doc_id", "text")
+      .where(graft.ext.Curation.qualityPass)
+      .select("doc_id", "text", "toks", "ntok")
     val exact = quality.join(
       graft.ext.Dedup.dedupKeepBest(
         quality, "doc_id", "text", col("ntok").cast("double"))
@@ -205,72 +208,24 @@ class CurateMainSpec extends SparkSpec {
       graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(d)))
   }
 
-  test("CurateMain --drift-baseline freezes the online-monitor artifact; " +
-    "re-feeding the curated corpus itself is zero-drift, zero-novelty") {
-    import graft.ext.{Curation, Kmv, Splits}
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val in = java.nio.file.Files.createTempDirectory("curate-din").toString
-    docs.write.mode("overwrite").parquet(in)
-    val out = java.nio.file.Files.createTempDirectory("curate-dout").toString
-    val baseDir = java.nio.file.Files.createTempDirectory("curate-dbase").toString
-    val repDir = java.nio.file.Files.createTempDirectory("curate-drep").toString
-
-    CurateMain.run(spark, Array(
-      in, out, "--shards", "2", "--drift-baseline", baseDir))
-
-    // the artifact is complete and round-trips
-    val base = Splits.driftBaselineRead(spark, baseDir)
-    assert(base.thresholds.size === 9 && base.nb.nonEmpty)
-    assert(base.n === spark.read.parquet(s"$out/corpus").count())
-    val seed = spark.read.parquet(s"$baseDir/sketch")
-      .head().getSeq[Long](0)
-    assert(seed.nonEmpty)
-
-    // drive ONE monitor micro-batch with the curated corpus itself:
-    // identical distribution ⇒ every PSI term is exactly 0 (p == q as
-    // doubles), and the sketch seed already holds every shingle ⇒ the
-    // merge is a no-op and novelty books 0
-    Curation.driftMonitorApply(
-      spark.read.parquet(s"$out/corpus").select("text"),
-      batchId = 0L, textCol = "text", base = base,
-      baselineDir = baseDir, reportDir = repDir,
-      labelCol = None, k = Kmv.DefaultK)
-    val row = spark.read.parquet(s"$repDir/drift").head()
-    assert(row.getAs[Long]("n_docs") === base.n)
-    assert(row.getAs[Long]("psi_e6") === 0L)
-    assert(row.getAs[Long]("flagged") === 0L)
-    assert(row.getAs[Long]("novel_est") === 0L)
-    assert(row.getAs[Long]("est_after") === row.getAs[Long]("est_before"))
-    assert(Curation.driftSketchLatest(spark, repDir).get === seed)
-
-    // foreachBatch RETRY idempotence: replaying a batch re-reads the
-    // PRE-batch sketch version and overwrites its own report
-    // partition — one row per batch, identical novelty, no
-    // double-merge (the failure mode: a crash between the state write
-    // and the sink commit re-runs the batch against its own output)
-    def driftRows() = spark.read.parquet(s"$repDir/drift")
-      .select("batch_id", "n_docs", "psi_e6", "est_before", "est_after",
-        "novel_est")
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-    val freshDocs = spark.read.parquet(in)
-      .select(concat(lit("NOVEL xyz"), col("text")).as("text"))
-    Curation.driftMonitorApply(
-      freshDocs, batchId = 1L, textCol = "text", base = base,
-      baselineDir = baseDir, reportDir = repDir, labelCol = None,
-      k = Kmv.DefaultK)
-    val afterFirst = driftRows()
-    val sketchFirst = Curation.driftSketchLatest(spark, repDir).get
-    assert(afterFirst.length === 2)
-    // the replay
-    Curation.driftMonitorApply(
-      freshDocs, batchId = 1L, textCol = "text", base = base,
-      baselineDir = baseDir, reportDir = repDir, labelCol = None,
-      k = Kmv.DefaultK)
-    assert(driftRows() === afterFirst) // same rows, same novelty, no dup
-    assert(Curation.driftSketchLatest(spark, repDir).get === sketchFirst)
-    Seq(in, out, baseDir, repDir).foreach(d =>
-      graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(d)))
+  test("CurateMain rejects an unknown flag and a value flag without " +
+    "its value; the flag sets above still parse") {
+    // parsing precedes every read, so the paths need not exist
+    for (bad <- Seq(Seq("--drift-baseline", "x"), Seq("--shard", "4"),
+        Seq("--budget"), Seq("--budget", "--shards", "2"))) {
+      val e = intercept[IllegalArgumentException] {
+        CurateMain.run(spark, (Seq("in", "out") ++ bad).toArray)
+      }
+      assert(e.getMessage.contains(bad.head), e.getMessage)
+    }
+    assert(CurateMain.parseFlags(List("--near-dup", "--benchmark", "b",
+      "--shards", "4")) ===
+      Map("--near-dup" -> "", "--benchmark" -> "b", "--shards" -> "4"))
+    assert(CurateMain.parseFlags(List("--budget", "5000", "--shards", "2")) ===
+      Map("--budget" -> "5000", "--shards" -> "2"))
+    assert(CurateMain.parseFlags(List("--shards", "2", "--report-source",
+      "origin", "--index-health", "minhash=a,ivf=b")) ===
+      Map("--shards" -> "2", "--report-source" -> "origin",
+        "--index-health" -> "minhash=a,ivf=b"))
   }
 }

@@ -111,97 +111,6 @@ class EventOpsSpec extends SparkSpec {
     assert(out === Map(1L -> 1L, 2L -> 0L))
   }
 
-  test("funnelStream equals the batch funnel on out-of-order input") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
-    // pseudo-random corpus: 20 users × ~12 events over types A/B/C/X
-    val rnd = new scala.util.Random(11)
-    val all = for {
-      u <- 0 until 20
-      i <- 0 until (6 + rnd.nextInt(7))
-    } yield (u.toLong,
-      1704067200000000L + rnd.nextInt(500) * 1000000L, // µs, 0–500 s
-      Seq("A", "B", "C", "X")(rnd.nextInt(4)))
-    val windowUs = 120L * 1000000L
-    // repeated step type on purpose: the stream's distinct-type mapping
-    // must re-match A for both funnel positions, like the batch passes
-    val funnelSteps = Seq("A", "B", "A")
-
-    val batch = EventOps.funnel(
-      all.toDF("user_id", "us", "ty"), "user_id", "us", "ty",
-      funnelSteps, windowUs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)](
-        implicitly[org.apache.spark.sql.Encoder[(Long, Long, String)]],
-        spark)
-    val out = EventOps.funnelStream(
-      stream.toDS().toDF("user_id", "ts_us", "ty")
-        .withColumn("ts", timestamp_micros(col("ts_us"))),
-      "user_id", "ts", "ty", funnelSteps, windowUs,
-      delay = "600 seconds")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("funnel_out").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // shuffled halves: heavy cross-batch disorder, all inside the delay
-      val shuffled = rnd.shuffle(all)
-      val (h1, h2) = shuffled.splitAt(shuffled.size / 2)
-      stream.addData(h1); q.processAllAvailable()
-      stream.addData(h2); q.processAllAvailable()
-      // advance the watermark far past every horizon, then one more
-      // batch so the timeouts fire
-      stream.addData(Seq((999L, 1704067200000000L + 100000L * 1000000L, "X")))
-      q.processAllAvailable()
-      stream.addData(Seq((999L, 1704067200000000L + 100001L * 1000000L, "X")))
-      q.processAllAvailable()
-      val streamed = spark.table("funnel_out")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val users = all.map(_._1).toSet
-      assert(users.forall(u => streamed.get(u) == batch.get(u)),
-        s"stream=$streamed\nbatch=$batch")
-    } finally q.stop()
-  }
-
-  test("funnelStream: a user re-appearing after emission opens a new episode") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
-    val base = 1704067200000000L
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)](
-        implicitly[org.apache.spark.sql.Encoder[(Long, Long, String)]],
-        spark)
-    val out = EventOps.funnelStream(
-      stream.toDS().toDF("user_id", "ts_us", "ty")
-        .withColumn("ts", timestamp_micros(col("ts_us"))),
-      "user_id", "ts", "ty", Seq("A", "B"), windowUs = 60L * 1000000L,
-      delay = "30 seconds")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("episode_out").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // episode 1: A then B inside the window
-      stream.addData(Seq((1L, base, "A"), (1L, base + 10000000L, "B")))
-      q.processAllAvailable()
-      // advance watermark far past episode 1's horizon → emit (1, 2)
-      stream.addData(Seq((9L, base + 500L * 1000000L, "X")))
-      q.processAllAvailable()
-      stream.addData(Seq((9L, base + 501L * 1000000L, "X")))
-      q.processAllAvailable()
-      // episode 2: the same user returns with only an A
-      stream.addData(Seq((1L, base + 600L * 1000000L, "A")))
-      q.processAllAvailable()
-      stream.addData(Seq((9L, base + 1200L * 1000000L, "X")))
-      q.processAllAvailable()
-      stream.addData(Seq((9L, base + 1201L * 1000000L, "X")))
-      q.processAllAvailable()
-      val rows = spark.table("episode_out")
-        .where(col("user_id") === 1L)
-        .select("steps").collect().map(_.getLong(0)).sorted.toSeq
-      // one row per episode, each folded over its own events only
-      assert(rows == Seq(1L, 2L), rows.toString)
-    } finally q.stop()
-  }
-
   test("sequenceCount: scan-greedy non-overlapping A-then-B per key") {
     // one user per canonical sequence; expected = hand-run scan greedy
     val seqs = Map(
@@ -220,62 +129,6 @@ class EventOpsSpec extends SparkSpec {
       .sequenceCount(df, "user_id", "us", "event_id", "ty", "A", "B")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === seqs.map { case (u, (_, n)) => u -> n })
-  }
-
-  test("sequenceCountStream equals batch sequenceCount on out-of-order input") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
-    val rnd = new scala.util.Random(17)
-    val base = 1704067200000000L
-    // unique (user, us) per event so tie semantics don't differ
-    // whole spread (~500 s) stays inside the watermark delay (600 s) so
-    // the shuffled second half is disorder, not late data
-    val all = for {
-      u <- 0 until 15
-      i <- 0 until (8 + rnd.nextInt(5))
-    } yield (u.toLong, base + (i * 37 + rnd.nextInt(40)) * 1000000L,
-      Seq("A", "B", "X")(rnd.nextInt(3)))
-    val dedup = all.groupBy(e => (e._1, e._2)).map(_._2.head).toSeq
-
-    val batch = EventOps.sequenceCount(
-      dedup.toDF("user_id", "us", "ty"),
-      "user_id", "us", "us", "ty", "A", "B")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)](
-        implicitly[org.apache.spark.sql.Encoder[(Long, Long, String)]],
-        spark)
-    val out = EventOps.sequenceCountStream(
-      stream.toDS().toDF("user_id", "ts_us", "ty")
-        .withColumn("ts", timestamp_micros(col("ts_us"))),
-      "user_id", "ts", "ty", "A", "B",
-      // the quiet gap must also exceed the fixture's spread, or an
-      // early horizon splits a user's events into multiple episodes
-      gapUs = 3600L * 1000000L, delay = "600 seconds")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("seqcount_out").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      val shuffled = rnd.shuffle(dedup)
-      val (h1, h2) = shuffled.splitAt(shuffled.size / 2)
-      stream.addData(h1); q.processAllAvailable()
-      stream.addData(h2); q.processAllAvailable()
-      // advance the watermark far past every quiet-gap horizon
-      stream.addData(Seq((999L, base + 100000L * 1000000L, "X")))
-      q.processAllAvailable()
-      stream.addData(Seq((999L, base + 100001L * 1000000L, "X")))
-      q.processAllAvailable()
-      val streamed = spark.table("seqcount_out")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val users = dedup.map(_._1).toSet
-      // batch emits a row per user seen among A/B events; stream emits
-      // per episode — on a drained fixture both are one row per user,
-      // and users with zero A/B events appear in neither (None == None)
-      users.foreach { u =>
-        assert(streamed.get(u) === batch.get(u),
-          s"user $u\nstream=$streamed\nbatch=$batch")
-      }
-    } finally q.stop()
   }
 
   test("maxConcurrent: boundary sweep, half-open intervals") {

@@ -124,81 +124,4 @@ class FrequentSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq === Seq((7L, 51L)))
   }
-
-  test("heavyHittersStream: every per-window batch hitter emitted " +
-    "under out-of-order arrival, MG bounds hold, shards stay a superset") {
-    import org.apache.spark.sql.functions.timestamp_micros
-    import org.apache.spark.sql.streaming.Trigger
-    val windowUs = 60000000L // 1-minute tumbling windows
-    val phi = 0.1
-    val cap = math.max(8, math.ceil(2.0 / phi).toInt)
-    val rnd = new scala.util.Random(13)
-    val base = 1704067200000000L // window-aligned epoch µs
-    // two windows of skewed traffic: 'hot' ~30%, 'warm' ~15%, long tail
-    def mkWindow(w: Int): Seq[(Long, String)] = {
-      val t0 = base + w * windowUs
-      (0 until 200).map { i =>
-        val item =
-          if (i < 60) s"hot$w"
-          else if (i < 90) s"warm$w"
-          else s"tail${rnd.nextInt(50)}"
-        (t0 + rnd.nextInt(59) * 1000000L, item)
-      }
-    }
-    val all = mkWindow(0) ++ mkWindow(1)
-    def truth(w: Int): Map[String, Long] = {
-      val evs = all.filter(e =>
-        e._1 >= base + w * windowUs && e._1 < base + (w + 1) * windowUs)
-      val n = evs.size
-      evs.groupBy(_._2).view.mapValues(_.size.toLong)
-        .filter(_._2 >= phi * n).toMap
-    }
-    for (shards <- Seq(1, 4)) {
-      val stream = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](
-          implicitly[org.apache.spark.sql.Encoder[(Long, String)]], spark)
-      val out = Frequent.heavyHittersStream(
-        stream.toDS().toDF("ts_us", "item")
-          .withColumn("ts", timestamp_micros(col("ts_us"))),
-        "item", "ts", windowUs, phi,
-        // delay must cover the full-shuffle disorder span (2 windows =
-        // 120 s of event time) or late rows drop at the watermark
-        delay = "180 seconds", shards = shards)
-      val name = s"hh_out_$shards"
-      val q = out.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        val shuffled = rnd.shuffle(all)
-        val (h1, h2) = shuffled.splitAt(shuffled.size / 2)
-        stream.addData(h1); q.processAllAvailable()
-        stream.addData(h2); q.processAllAvailable()
-        // push the watermark far past both windows, twice (timeout fires
-        // on the batch AFTER the watermark advances)
-        stream.addData(Seq((base + 10 * windowUs, "x")))
-        q.processAllAvailable()
-        stream.addData(Seq((base + 11 * windowUs, "x")))
-        q.processAllAvailable()
-        val rows = spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getString(2), r.getLong(3), r.getLong(4)))
-        for (w <- 0 to 1) {
-          val winStart = base + w * windowUs
-          val emitted = rows.filter(_._1 == winStart)
-            .map(t => t._2 -> (t._3, t._4)).toMap
-          val want = truth(w)
-          // superset guarantee: every true phi-hitter emitted
-          assert(want.keySet.subsetOf(emitted.keySet),
-            s"shards=$shards w=$w missing ${want.keySet -- emitted.keySet}")
-          // MG bounds: count_lb <= true <= count_lb + shard_n/(cap+1)
-          val exact = all.filter(e =>
-            e._1 >= winStart && e._1 < winStart + windowUs)
-            .groupBy(_._2).view.mapValues(_.size.toLong).toMap
-          emitted.foreach { case (item, (lb, shardN)) =>
-            val t = exact.getOrElse(item, 0L)
-            assert(lb <= t && t <= lb + shardN / (cap + 1),
-              s"shards=$shards w=$w item=$item lb=$lb true=$t n=$shardN")
-          }
-        }
-      } finally q.stop()
-    }
-  }
 }

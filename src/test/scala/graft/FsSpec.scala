@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.util.Fs
 
-/** The [[Fs.rewriteSwap]] crash matrix, simulated state by state —
-  * the compactors' (minhash + IVF) durability rests on every
-  * interrupted rewrite being COMPLETABLE by [[Fs.recoverSwap]]. */
+/** The crash matrix of the rename-in-place rewrite, simulated state by
+  * state: residue left by an interrupted rewrite of an earlier revision
+  * must be COMPLETABLE by [[Fs.recoverSwap]]. */
 class FsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,37 +15,6 @@ class FsSpec extends SparkSpec {
   private def readIds(p: java.nio.file.Path): Set[Long] =
     spark.read.parquet(p.toString).select(col("id"))
       .collect().map(_.getLong(0)).toSet
-
-  test("rewriteSwap: happy path rewrites in place and leaves no residue") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fsspec")
-    val src = root.resolve("t")
-    writeTable(src, Seq(1L, 2L, 3L))
-    Fs.rewriteSwap(spark, src)(_.where(col("id") =!= 2L))
-    assert(readIds(src) === Set(1L, 3L))
-    assert(!java.nio.file.Files.exists(root.resolve("_swap.t")))
-    assert(!java.nio.file.Files.exists(root.resolve("_old.t")))
-    Fs.deleteRecursively(root)
-  }
-
-  test("rewriteSwap of a PARTITION dir: temp siblings are _-prefixed, " +
-    "so a parent partition-discovery read never sees a bogus value") {
-    // the hazard: a sibling named `c=5._swap` would parse as c =
-    // "5._swap" and flip the parent's partition schema to string
-    val root = java.nio.file.Files.createTempDirectory("graft-fsspec3")
-    Seq((1L, 5), (2L, 6)).toDF("id", "c").write
-      .partitionBy("c").parquet(root.resolve("t").toString)
-    val part = root.resolve("t").resolve("c=5")
-    // simulate a crash mid-write: partial swap dir left behind
-    java.nio.file.Files.createDirectories(
-      root.resolve("t").resolve("_swap.c=5"))
-    val schema = spark.read.parquet(root.resolve("t").toString).schema
-    assert(schema("c").dataType ===
-      org.apache.spark.sql.types.IntegerType,
-      "crash residue must not change the partition column's type")
-    Fs.rewriteSwap(spark, part)(df => df) // also clears the residue
-    assert(spark.read.parquet(root.resolve("t").toString).count() === 2)
-    Fs.deleteRecursively(root)
-  }
 
   test("recoverSwap completes every crash state") {
     val root = java.nio.file.Files.createTempDirectory("graft-fsspec2")
@@ -73,9 +42,6 @@ class FsSpec extends SparkSpec {
     Fs.recoverSwap(src)
     assert(readIds(src) === Set(9L))
     assert(!java.nio.file.Files.exists(root.resolve("_old.t")))
-    // and a subsequent rewriteSwap runs clean from any recovered state
-    Fs.rewriteSwap(spark, src)(_.withColumn("id", col("id") + 1L))
-    assert(readIds(src) === Set(10L))
     Fs.deleteRecursively(root)
   }
 

@@ -117,35 +117,4 @@ class KmvSketchSpec extends AnyFunSuite with SparkSpec {
     val merged = (skA ++ skB).distinct.sorted.take(k)
     assert(merged == run(vals, k))
   }
-
-  test("persisted sketch artifact: round-trips, and incremental merge " +
-    "of a new batch equals a full rebuild over both corpora") {
-    import spark.implicits._
-    def corpus(ids: Range, src: String, tag: String) =
-      ids.map(i => (i.toLong, s"alpha$i beta$i gamma$i delta$i " +
-        s"epsilon$i zeta$i $tag", src))
-        .toDF("doc_id", "text", "source")
-    val old = corpus(1 to 120, "web", "v1")
-      .unionByName(corpus(1 to 80, "books", "v1"))
-    val fresh = corpus(200 to 260, "web", "v2")
-      .unionByName(corpus(200 to 230, "wiki", "v2"))
-    val k = 64
-    val dir = java.nio.file.Files.createTempDirectory("graft-kmv").toString
-    try {
-      Kmv.sketchWrite(Kmv.sourceSketches(old, k), dir, k)
-      val (stored, kk) = Kmv.sketchRead(spark, dir)
-      assert(kk == k)
-      // round-trip: stored == rebuilt
-      def asMap(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r =>
-          r.getAs[String]("source") -> r.getSeq[Long](1)).toMap
-      assert(asMap(stored) == asMap(Kmv.sourceSketches(old, k)))
-      // incremental: merge(stored, sketch(fresh)) == rebuild(old ∪ fresh)
-      val merged = Kmv.mergeSourceSketches(
-        stored, Kmv.sourceSketches(fresh, k), k)
-      val rebuilt = Kmv.sourceSketches(old.unionByName(fresh), k)
-      assert(asMap(merged) == asMap(rebuilt)) // incl. the NEW wiki source
-      assert(asMap(merged).contains("wiki") && asMap(merged).contains("books"))
-    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
-  }
 }

@@ -252,10 +252,11 @@ class ManifestSpec extends SparkSpec {
     assert(java.nio.file.Files.isDirectory(root.resolve(prevAssigned)),
       "rollback window: the pre-cutover assigned version survives")
     // the audit's absolute query cap: deterministic pmd5-ordered
-    // subset, so a monitor's per-batch cost stays linear in index
-    // size whatever the sampling mods say
-    val capped = graft.ext.Similarity.ivfIndexRecallSampled(
-      spark, dir, sampleMod = 1, corpusMod = 1, maxQueries = 5).head()
+    // subset, so its cost stays linear in index size whatever the
+    // sampling mods say
+    val capped = graft.ext.Similarity.ivfRecallSampledRow(
+      after, sampleMod = 1, corpusMod = 1, k = 10, nProbe = 4,
+      maxQueries = 5).head()
     assert(capped.getLong(0) === 5L)
     Fs.deleteRecursively(root)
     graft.ext.Caches.release()

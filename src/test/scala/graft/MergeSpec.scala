@@ -102,32 +102,4 @@ class MergeSpec extends SparkSpec {
     assert(t.where(col("height_bucket") === 130L).count() === 10)
     assert(t.where(col("height_bucket") =!= 130L).count() === 60) // untouched
   }
-
-  test("TTL drop removes expired buckets as a metadata-only operation") {
-    val out = java.nio.file.Files.createTempDirectory("graft-ttl").toString
-    Replacing.appendWrite(table(40, 1), s"$out/t", "block_height", key, step = 10L)
-    // record surviving-bucket file layout before the drop
-    def files(b: Long) = {
-      val d = new java.io.File(s"$out/t/height_bucket=$b")
-      if (d.exists) d.listFiles().map(f => f.getName -> f.length()).toSet
-      else Set.empty[(String, Long)]
-    }
-    val keep120 = files(120L)
-    val keep130 = files(130L)
-    assert(keep120.nonEmpty && keep130.nonEmpty)
-
-    // heights 100..139 -> buckets 100,110,120,130; expire below 120
-    val dropped = Replacing.dropBucketsBelow(spark, s"$out/t", 120L)
-    assert(dropped === Seq(100L, 110L))
-
-    val t = spark.read.parquet(s"$out/t")
-    // partition-dir columns infer as int on read; normalize for compare
-    assert(t.select(col("height_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq === Seq(120L, 130L))
-    assert(t.count() === 20)
-    // surviving buckets untouched byte-for-byte (no rewrite happened)
-    assert(files(120L) === keep120 && files(130L) === keep130)
-    // idempotent re-run drops nothing further
-    assert(Replacing.dropBucketsBelow(spark, s"$out/t", 120L) === Nil)
-  }
 }

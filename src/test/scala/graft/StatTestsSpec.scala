@@ -345,6 +345,16 @@ class StatTestsSpec extends SparkSpec {
       width = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fromDisk === est8)
+    // geometry guard: finalizing with a different width must refuse at
+    // execution (the in-plan assert_true), not silently under-count
+    val ex = intercept[Throwable] {
+      Stats.cmsEstimatesFromCells(
+        spark.read.parquet(dir), df.select(col("k")).distinct(), "k",
+        width = 512).collect()
+    }
+    val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(msgs.contains("geometry mismatch"), msgs)
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 }

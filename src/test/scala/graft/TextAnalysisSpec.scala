@@ -424,21 +424,6 @@ class TextAnalysisSpec extends SparkSpec {
       s"target-dialect probe $aProbe should be positive, raw-dialect $bProbe negative")
     // weight is a pure function of the token multiset
     assert(w(100L)._2 === w(0L)._2 && w(101L)._2 === w(10L)._2)
-    // decomposed train/score path equals the fused operator
-    val model = TextAnalysis.dsirModel(docs, "text", col("is_t"))
-    val viaModel = TextAnalysis.dsirScore(docs, "doc_id", "text", model)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(viaModel === w)
-    // the model is DENSE: unseen vocabulary still counts and scores
-    // the pure smoothing ratio, never silently dropped
-    assert(model.count() === 4096L)
-    val unseen = TextAnalysis.dsirScore(
-      Seq((500L, "xyzzy plugh unheld wordz never seenbefore"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", model)
-      .collect().head
-    assert(unseen.getLong(1) === 6L, "unseen tokens must still count")
-    assert(unseen.getLong(2) !== 0L, "unseen buckets carry the smoothing ratio")
   }
 
   test("unigramKl: single slice is exactly zero, vocab-shifted slice " +
@@ -492,21 +477,6 @@ class TextAnalysisSpec extends SparkSpec {
       docs, "doc_id", "text", Seq("bad word", "clean"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept2 === Set(4L))
-    // the inline-literal (stateless/streaming) form keeps the same set
-    val inline2 = TextAnalysis.blocklistFilterInline(
-      docs, "text", Seq("bad word", "clean"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(inline2 === kept2)
-    // and on the real fixture the two forms agree doc-for-doc
-    val fix = graft.query.Tables.load(
-      spark, "/root/testdata/sf0.001", "documents")
-    val phrases = Seq("spark", "table table", "fast sort")
-    val viaJoin = TextAnalysis.blocklistFilter(
-      fix, "doc_id", "text", phrases)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val viaInline = TextAnalysis.blocklistFilterInline(fix, "text", phrases)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(viaInline === viaJoin && viaInline.nonEmpty)
   }
 
   test("blocklist phrase lists normalize: messy whitespace matches, " +
@@ -526,10 +496,6 @@ class TextAnalysisSpec extends SparkSpec {
       docs, "doc_id", "text", Seq(" bad   word ".replace(' ', ' ')))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(2L))
-    val keptInline = TextAnalysis.blocklistFilterInline(
-      docs, "text", Seq("  bad   word "))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(keptInline === Set(2L))
     intercept[IllegalArgumentException] {
       TextAnalysis.blocklistHits(docs, "doc_id", "text", Seq("  ", ""))
     }

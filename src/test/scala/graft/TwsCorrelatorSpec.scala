@@ -9,8 +9,8 @@ import graft.schema._
 
 /** `transformWithState` correlator (SURVEY §2.4/§7.4 first choice):
   * equivalence with the pure fold on the fixture chain and on random
-  * receipt DAGs, cross-batch state persistence, lenient restart
-  * replay, and per-entry state TTL.
+  * receipt DAGs, cross-batch state persistence, and lenient restart
+  * replay.
   * transformWithState requires the RocksDB state store provider —
   * scoped to each query here, reset after. */
 class TwsCorrelatorSpec extends SparkSpec {
@@ -25,20 +25,17 @@ class TwsCorrelatorSpec extends SparkSpec {
     * groups; returns completed tx hashes in emission order. */
   private def runTws(
       batches: Seq[Seq[BlockWithTxHashes]], name: String,
-      strict: Boolean = false,
-      ttl: Option[java.time.Duration] = None,
-      sleepBetweenMs: Long = 0L): Seq[String] = {
+      strict: Boolean = false): Seq[String] = {
     val prev = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey, rocksdb)
     try {
       val stream = MemoryStream[BlockWithTxHashes](Blocks.encoder, spark)
       val q = TxCorrelator
-        .correlateStreamTws(stream.toDS(), strict = strict, stateTtl = ttl)
+        .correlateStreamTws(stream.toDS(), strict = strict)
         .writeStream.outputMode("append").format("memory")
         .queryName(name).start()
       try {
-        batches.zipWithIndex.foreach { case (b, i) =>
-          if (i > 0 && sleepBetweenMs > 0) Thread.sleep(sleepBetweenMs)
+        batches.foreach { b =>
           stream.addData(b)
           q.processAllAvailable()
         }
@@ -99,28 +96,6 @@ class TwsCorrelatorSpec extends SparkSpec {
         Seq(blocks, Seq.empty), "tws_replay", strict = false)
       assert(replayed.sorted === pureFold(blocks).sorted)
     }
-  }
-
-  test("state TTL expires individual stuck entries: a receipt resolving " +
-    "after the TTL is skipped (lenient), the tx never completes") {
-    // block 100 registers tx100 with rB100 pending until block 101.
-    // With a 600 ms TTL and ~2 s between the two micro-batches, the
-    // receipt_to_tx/transactions entries age out before block 101
-    // arrives: its outcomes are skipped (J8 shape) and tx100 must NOT
-    // complete. Same-block-completing txs in 101 are unaffected.
-    //
-    val b100 = BlockFixtures.block(100, 2)
-    val b101 = BlockFixtures.block(101, 2)
-
-    val withTtl = runTws(
-      Seq(Seq(b100), Seq(b101)), "tws_ttl",
-      ttl = Some(java.time.Duration.ofMillis(600)), sleepBetweenMs = 2000)
-    assert(!withTtl.contains("tx100"),
-      s"tx100 should have expired, got $withTtl")
-
-    // control: same split, no TTL — tx100 completes at 101
-    val noTtl = runTws(Seq(Seq(b100), Seq(b101)), "tws_nottl")
-    assert(noTtl.contains("tx100"))
   }
 
   test("pack vehicle (correlateBatchTws) runs the PRODUCTION state conf: " +
